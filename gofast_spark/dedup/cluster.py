@@ -24,14 +24,13 @@ Scale notes (the reason this shape was chosen):
   Components in MapReduce and Beyond", SoCC 2014) converges in
   O(log² n) rounds and would be the upgrade path; it is not needed for
   dedup workloads.
-- Lineage is truncated every iteration via ``localCheckpoint`` —
+- The label frame is pinned every iteration (``session.pin``) —
   without it the plan doubles per round and Catalyst analysis time
   explodes by iteration ~10 (same driver-loop discipline as
   ``gofast_spark.ml.optim.gradient_descent``).
-- Convergence is detected by summing per-vertex change flags as an
-  OBSERVED metric of the per-round checkpoint materialization — zero
-  extra actions, zero extra shuffles (r16; min-propagation is
-  monotone, so "changed" == "strictly decreased").
+- Convergence is detected by summing per-vertex change flags as a
+  metric observed by that pin — zero extra actions, zero extra
+  shuffles.
 
 Reference analog: none — the reference (earthai-tech/gofast) has only
 exact ``handle_duplicates`` (gofast/dataops/quality.py:4677); clustered
@@ -42,6 +41,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from gofast_spark.session import pin
 
 
 def connected_components(
@@ -74,20 +75,18 @@ def connected_components(
     a = F.col(id_a).alias("src")
     b = F.col(id_b).alias("dst")
     # symmetric edge list; distinct keeps Σ degree² honest on multi-edges
-    edges = (
+    edges, _ = pin(
         pairs.select(a, b)
         .union(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        "cc:edges",
     )
-    labels = (
+    labels, _ = pin(
         edges.select(F.col("src").alias("id"))
         .distinct()
-        .withColumn("lab", F.col("id"))
-        .localCheckpoint(eager=True)
+        .withColumn("lab", F.col("id")),
+        "cc:labels",
     )
-    from pyspark.sql import Observation
-
     lab_type = labels.schema["lab"].dataType
     converged = False
     for _ in range(max_iter):
@@ -99,10 +98,9 @@ def connected_components(
         # {neighbour labels}) is the identical update; the own-label
         # leg carries the previous label through max(__old) (exactly
         # one leg-1 row per vertex, leg-2 rows carry NULL), so the
-        # change flag needs no join either.  The convergence sum rides
-        # the checkpoint materialization as an observed metric — zero
-        # extra jobs per round (min-propagation is monotone, so
-        # "changed" == "strictly decreased").
+        # change flag needs no join either.  The pin observes the
+        # convergence sum (min-propagation is monotone, so "changed" ==
+        # "strictly decreased").
         own = labels.select(
             "id", F.col("lab"), F.col("lab").alias("__old")
         )
@@ -116,8 +114,7 @@ def connected_components(
             F.col("nlab").alias("lab"),
             F.lit(None).cast(lab_type).alias("__old"),
         )
-        obs = Observation()
-        new_labels = (
+        new_labels, m = pin(
             own.unionByName(nbr)
             .groupBy("id")
             .agg(F.min("lab").alias("lab"), F.max("__old").alias("__old"))
@@ -125,11 +122,11 @@ def connected_components(
                 "id",
                 "lab",
                 (F.col("lab") < F.col("__old")).cast("long").alias("__chg"),
-            )
-            .observe(obs, F.coalesce(F.sum("__chg"), F.lit(0)).alias("chg"))
-            .localCheckpoint(eager=True)
+            ),
+            "cc:round",
+            chg=F.coalesce(F.sum("__chg"), F.lit(0)),
         )
-        changed = obs.get["chg"]
+        changed = m["chg"]
         labels = new_labels.drop("__chg")
         if changed == 0:
             converged = True
@@ -214,44 +211,35 @@ def connected_components_two_phase(
     checkpointed frames)."""
     # vertex universe from the RAW pairs (a vertex with only a self-loop
     # must still surface as a singleton, matching connected_components)
-    verts = (
+    verts, _ = pin(
         pairs.select(F.col(id_a).alias("id"))
         .union(pairs.select(F.col(id_b).alias("id")))
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        "cc2:verts",
     )
     # initial edges ORIENTED u > v and distinct — half the rows of the
     # old symmetric start, and the round functions' input contract:
     # _large_star reconstructs the symmetric view with a dupe-free
     # union, so the old per-round symmetrize-distinct exchange is gone
-    from pyspark.sql import Observation
-
-    obs0 = Observation()
-    e = (
+    e, m = pin(
         pairs.select(
             F.greatest(F.col(id_a), F.col(id_b)).alias("u"),
             F.least(F.col(id_a), F.col(id_b)).alias("v"),
         )
         .where(F.col("u") != F.col("v"))
-        .distinct()
-        .observe(obs0, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
+        .distinct(),
+        "cc2:edges",
+        n=F.count(F.lit(1)),
     )
-    # carry the edge count across rounds as an OBSERVED metric of the
-    # checkpoint materialization itself (r16): the count used to be a
-    # separate 2-job action per round on the just-materialized frame;
-    # the subtract only runs once counts stabilize (Python `and`
-    # short-circuits)
-    n_e = obs0.get["n"]
+    # each pin observes the edge count; the subtract only runs once
+    # counts stabilize (Python `and` short-circuits)
+    n_e = m["n"]
     converged = False
     for _ in range(max_iter):
-        obs = Observation()
-        e2 = (
-            _small_star(_large_star(e))
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
+        e2, m = pin(
+            _small_star(_large_star(e)), "cc2:round", n=F.count(F.lit(1))
         )
-        n_e2 = obs.get["n"]
+        n_e2 = m["n"]
         same = n_e2 == n_e and e2.subtract(e).count() == 0
         e = e2
         n_e = n_e2

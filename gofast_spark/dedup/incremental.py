@@ -34,6 +34,7 @@ from gofast_spark.dedup.minhash import (
     lsh_band_keys,
     minhash_signatures_from_sets,
 )
+from gofast_spark.session import pin
 
 
 def near_dup_pairs_between(
@@ -47,7 +48,6 @@ def near_dup_pairs_between(
     num_hashes: int = 16,
     rows_per_band: int = 2,
     merge_fragments: bool = False,
-    eager: bool = True,
 ) -> DataFrame:
     """(new_id, ref_id, jaccard) for every new doc whose exact shingle
     Jaccard against some reference doc reaches ``threshold``, candidates
@@ -59,11 +59,11 @@ def near_dup_pairs_between(
     a new doc and a ref doc may share an id value.
 
     Each side's shingle-set frame feeds BOTH the signature projection
-    and the verify legs; with ``eager`` (default, mirroring
-    :func:`gofast_spark.dedup.minhash.near_dup_pairs`) the set frames
-    are persisted for the call and the result is checkpoint-
-    materialized before they unpersist, so the compute-heavy shingle
-    projection runs once per corpus instead of twice."""
+    and the verify legs; as in
+    :func:`gofast_spark.dedup.minhash.near_dup_pairs` the set frames
+    are persisted for the call and the result is pinned before they
+    unpersist, so the compute-heavy shingle projection runs once per
+    corpus instead of twice."""
 
     def _sets(src: DataFrame) -> DataFrame:
         sd = doc_shingle_sets(
@@ -71,11 +71,8 @@ def near_dup_pairs_between(
         )
         return sd
 
-    sets_new = _sets(new_df)
-    sets_ref = _sets(ref_df)
-    if eager:
-        sets_new = sets_new.persist()
-        sets_ref = sets_ref.persist()
+    sets_new = _sets(new_df).persist()
+    sets_ref = _sets(ref_df).persist()
     try:
         return _pairs_between_plan(
             sets_new,
@@ -84,12 +81,10 @@ def near_dup_pairs_between(
             threshold=threshold,
             num_hashes=num_hashes,
             rows_per_band=rows_per_band,
-            eager=eager,
         )
     finally:
-        if eager:
-            sets_new.unpersist()
-            sets_ref.unpersist()
+        sets_new.unpersist()
+        sets_ref.unpersist()
 
 
 def _pairs_between_plan(
@@ -100,7 +95,6 @@ def _pairs_between_plan(
     threshold: float,
     num_hashes: int,
     rows_per_band: int,
-    eager: bool,
 ) -> DataFrame:
     sig_new = minhash_signatures_from_sets(
         sets_new, id_col, num_hashes=num_hashes
@@ -118,16 +112,15 @@ def _pairs_between_plan(
     ).select(
         F.col(id_col).alias("ref_id"), "band_idx", "band_key"
     )
-    cand = (
+    # candidates are bounded by Σ |new bucket| x |ref bucket| — pinning
+    # them materializes the persisted set frames in the same job, so the
+    # verify stage below re-reads cached sets
+    cand, _ = pin(
         bands_new.join(bands_ref, ["band_idx", "band_key"])
         .select("new_id", "ref_id")
-        .dropDuplicates()
+        .dropDuplicates(),
+        "pairs_between:candidates",
     )
-    if eager:
-        # candidates are bounded by Σ |new bucket| x |ref bucket| —
-        # checkpointing them materializes the persisted set frames in
-        # the same job, so the verify stage below re-reads cached sets
-        cand = cand.localCheckpoint(eager=True)
     # verify: semi-filter each set frame to its candidate ids, then
     # exact Jaccard row-locally per pair
     xa = sets_new.join(
@@ -142,18 +135,15 @@ def _pairs_between_plan(
     ).select(F.col(id_col).alias("__b_id"), F.col("sh_set").alias("__b_set"))
     inter = F.size(F.array_intersect(F.col("__a_set"), F.col("__b_set")))
     union = F.size(F.col("__a_set")) + F.size(F.col("__b_set")) - inter
-    out = (
+    # pin while the set frames are still persisted (the caller
+    # unpersists on return)
+    return pin(
         cand.join(xa, F.col("new_id") == F.col("__a_id"))
         .join(xb, F.col("ref_id") == F.col("__b_id"))
         .select("new_id", "ref_id", (inter / union).alias("jaccard"))
-        .where(F.col("jaccard") >= threshold)
-    )
-    if eager:
-        # materialize while the set frames are still persisted (the
-        # caller unpersists on return); a checkpoint holds no
-        # CacheManager entry, so no caller-side unpersist obligation
-        out = out.localCheckpoint(eager=True)
-    return out
+        .where(F.col("jaccard") >= threshold),
+        "pairs_between:pairs",
+    )[0]
 
 
 def dedup_against(

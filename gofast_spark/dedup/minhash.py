@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gofast_spark.session import pin
 from gofast_spark.text.analysis import normalize_text
 from gofast_spark.text.hashing import md5_hash64
 
@@ -428,7 +429,6 @@ def near_dup_pairs(
     k: int = 3,
     num_hashes: int = 16,
     rows_per_band: int = 2,
-    eager: bool = True,
     merge_fragments: bool = False,
     broadcast_candidate_limit: int = 50_000,
 ) -> DataFrame:
@@ -453,25 +453,21 @@ def near_dup_pairs(
     broadcast, the set frame is broadcast-semi-filtered to candidate
     docs, and Jaccard is ``array_intersect`` per pair row — no groupBy.
 
-    With ``eager`` (default) the tiny signature and candidate frames are
-    materialized via ``localCheckpoint`` while the set frame is cached,
-    and the set frame is **unpersisted before returning**, so repeated
-    calls in a long session cannot accumulate executor storage (ADVICE
-    r2): a checkpoint holds no CacheManager entry, and its blocks are
+    The tiny candidate and result frames are pinned while the set frame
+    is cached, and the set frame is **unpersisted before returning**, so
+    repeated calls in a long session cannot accumulate executor storage
+    (ADVICE r2): a pin holds no CacheManager entry, and its blocks are
     freed by the ContextCleaner once the returned frame is
     garbage-collected — no caller-side ``unpersist`` obligation.
-    ``eager=False`` keeps the whole pipeline lazy and skips persist /
-    checkpoint entirely (the set projection then recomputes once per
-    downstream leg).
 
     Broadcasting the candidate-doc SET frames (full shingle arrays) into
     the verify joins is only safe while the candidate population is
     genuinely small: on a duplicate-heavy corpus candidates approach the
     corpus and the build side would blow past executor memory (ADVICE
-    r5).  The eager path therefore counts the checkpointed pair frame
-    (a metadata-cheap action) and only broadcasts the set legs when
-    pairs <= ``broadcast_candidate_limit``; above it the set joins
-    shuffle while the tiny id/pair frames stay broadcast."""
+    r5).  The candidate pin therefore observes the pair count and only
+    broadcasts the set legs when pairs <= ``broadcast_candidate_limit``;
+    above it the set joins shuffle while the tiny id/pair frames stay
+    broadcast."""
 
     def _verify(
         sets_df: DataFrame,
@@ -520,45 +516,33 @@ def near_dup_pairs(
             )
         return sd
 
-    if not eager:
-        sets_df = _sets(df)
-        sig = minhash_signatures_from_sets(
-            sets_df, id_col, num_hashes=num_hashes
-        )
-        cand = lsh_candidate_pairs(
-            sig, id_col, num_hashes=num_hashes, rows_per_band=rows_per_band
-        )
-        return _verify(sets_df, cand, bcast_ids=False, bcast_sets=False)
     sets_df = _sets(df).persist()
     try:
-        # candidates are bounded by Σ bucket² — checkpoint them eagerly
-        # (materializing the persisted set frame in the same job) so the
-        # verify stage can broadcast a computed frame
+        # candidates are bounded by Σ bucket² — pin them (materializing
+        # the persisted set frame in the same job) so the verify stage
+        # can broadcast a computed frame
         sig = minhash_signatures_from_sets(
             sets_df, id_col, num_hashes=num_hashes
         )
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        cand = (
+        cand, m = pin(
             lsh_candidate_pairs(
                 sig, id_col,
                 num_hashes=num_hashes, rows_per_band=rows_per_band,
-            )
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
+            ),
+            "near_dup:candidates",
+            n=F.count(F.lit(1)),
         )
-        # the pair count rides the checkpoint materialization as an
-        # observed metric (r16: was a separate count job); it gates
-        # whether the full set arrays may ride the broadcast build side
-        # — and the candidate-ID frame too: its rows are bounded by 2x
-        # pairs, so on a duplicate-heavy corpus it approaches corpus
-        # cardinality and must not be broadcast unconditionally either
-        # (ADVICE r5, same failure mode as the set frames)
-        small = obs.get["n"] <= broadcast_candidate_limit
-        return _verify(
-            sets_df, cand, bcast_ids=small, bcast_sets=small
-        ).localCheckpoint(eager=True)
+        # the pair count gates whether the full set arrays may ride the
+        # broadcast build side — and the candidate-ID frame too: its
+        # rows are bounded by 2x pairs, so on a duplicate-heavy corpus
+        # it approaches corpus cardinality and must not be broadcast
+        # unconditionally either (ADVICE r5, same failure mode as the
+        # set frames)
+        small = m["n"] <= broadcast_candidate_limit
+        return pin(
+            _verify(sets_df, cand, bcast_ids=small, bcast_sets=small),
+            "near_dup:pairs",
+        )[0]
     finally:
         sets_df.unpersist()
 

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gofast_spark.dedup.minhash import doc_shingles
+from gofast_spark.session import pin
 
 
 def ngram_jaccard_pairs(
@@ -39,7 +40,6 @@ def ngram_jaccard_pairs(
     k: int = 3,
     threshold: float = 0.8,
     max_df: int | None = None,
-    eager: bool = True,
 ) -> DataFrame:
     """All document pairs with exact token-``k``-gram Jaccard >= threshold.
 
@@ -51,22 +51,18 @@ def ngram_jaccard_pairs(
     module docstring for the (weak) completeness caveat it introduces.
 
     The shingle frame feeds the frequency filter, both block-join legs,
-    both verify legs, and the size aggregate; ``eager`` (default)
-    persists it for the run, materializes the small pair list as a
-    ``localCheckpoint`` and unpersists before returning (same storage
-    contract as ``near_dup_pairs``).
+    both verify legs, and the size aggregate; it is persisted for the
+    run, the small pair list is pinned, and the shingles are unpersisted
+    before returning (same storage contract as ``near_dup_pairs``).
     """
-    sh = doc_shingles(df, id_col, text_col, k=k)
-    if eager:
-        sh = sh.persist()
+    sh = doc_shingles(df, id_col, text_col, k=k).persist()
     try:
-        out = _pairs_from_shingles(sh, id_col, threshold, max_df, eager=eager)
-        if eager:
-            return out.localCheckpoint(eager=True)
-        return out
+        return pin(
+            _pairs_from_shingles(sh, id_col, threshold, max_df),
+            "jaccard_pairs:pairs",
+        )[0]
     finally:
-        if eager:
-            sh.unpersist()
+        sh.unpersist()
 
 
 
@@ -89,7 +85,7 @@ def count_distinct_with_null_group(id_col: str):
 
 
 def _measured_candidates(
-    sh: DataFrame, id_col: str, max_df: int | None, *, eager: bool = True
+    sh: DataFrame, id_col: str, max_df: int | None
 ) -> DataFrame:
     """Blocked candidate pairs with the exact intersection verify and
     both set sizes — (id_a, id_b, n_inter, n_a, n_b) — the shared core
@@ -115,8 +111,8 @@ def _measured_candidates(
     BOTH the frequent-leg expansion and the final assembly, and the
     static plan duplicated its whole upstream (shingle scan + block
     join + pair aggregate ran twice per materialization; cold first
-    pass 13.5 s vs 4.5 s at sf0.1).  Under ``eager`` it is now pinned
-    with ONE ``localCheckpoint`` — a narrow candidate-pairs-sized frame
+    pass 13.5 s vs 4.5 s at sf0.1).  It is now pinned once — a narrow
+    candidate-pairs-sized frame
     (bounded by ``max_df * |shingles|``), the same storage contract the
     callers already apply to the final pair list.  Negative result,
     recorded so it is not re-tried: generating pairs via per-shingle
@@ -142,10 +138,9 @@ def _measured_candidates(
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("n_inter"))
     )
-    if eager and max_df is not None:
-        # referenced by the freq leg AND the final assembly — pin once
-        inter = inter.localCheckpoint(eager=True)
     if max_df is not None:
+        # referenced by the freq leg AND the final assembly — pin once
+        inter, _ = pin(inter, "ngram_candidates:rare_inter")
         fsh = sh.join(
             dfc.where(F.col("__df") > max_df).select("sh_hash"),
             on="sh_hash",
@@ -182,13 +177,11 @@ def _pairs_from_shingles(
     id_col: str,
     threshold: float,
     max_df: int | None,
-    *,
-    eager: bool = True,
 ) -> DataFrame:
     # jaccard from the same (n_inter, n_a, n_b) triple the containment
     # path reads — bigint/bigint division, identical values to the old
     # shingle_jaccard verify at a fraction of its join volume
-    m = _measured_candidates(sh, id_col, max_df, eager=eager)
+    m = _measured_candidates(sh, id_col, max_df)
     return m.select(
         "id_a",
         "id_b",
@@ -207,7 +200,6 @@ def ngram_containment_pairs(
     k: int = 3,
     threshold: float = 0.9,
     max_df: int | None = None,
-    eager: bool = True,
 ) -> DataFrame:
     """All document pairs with n-gram CONTAINMENT >= threshold, where
     containment is ``|A ∩ B| / min(|A|, |B|)`` — Broder's containment
@@ -222,19 +214,16 @@ def ngram_containment_pairs(
     (rare-shingle block join under ``max_df``), one intersection
     verify, sizes from the same shingle frame.  Output columns:
     ``(id_a, id_b, n_a, n_b, containment)`` with ``id_a < id_b``."""
-    sh = doc_shingles(df, id_col, text_col, k=k)
-    if eager:
-        sh = sh.persist()
+    sh = doc_shingles(df, id_col, text_col, k=k).persist()
     try:
-        out = ngram_containment_pairs_from_shingles(
-            sh, id_col, threshold=threshold, max_df=max_df, eager=eager
-        )
-        if eager:
-            return out.localCheckpoint(eager=True)
-        return out
+        return pin(
+            ngram_containment_pairs_from_shingles(
+                sh, id_col, threshold=threshold, max_df=max_df
+            ),
+            "containment_pairs:pairs",
+        )[0]
     finally:
-        if eager:
-            sh.unpersist()
+        sh.unpersist()
 
 
 def ngram_containment_pairs_from_shingles(
@@ -243,7 +232,6 @@ def ngram_containment_pairs_from_shingles(
     *,
     threshold: float = 0.9,
     max_df: int | None = None,
-    eager: bool = True,
 ) -> DataFrame:
     """:func:`ngram_containment_pairs` over a PRECOMPUTED distinct
     (id, sh_hash) frame — the entry point for callers maintaining the
@@ -252,7 +240,7 @@ def ngram_containment_pairs_from_shingles(
     :func:`ngram_dedup_report_from_shingles`.  Caller owns persistence
     of ``sh`` (it is scanned three times: blocking, sizes, verify)."""
     return (
-        _measured_candidates(sh, id_col, max_df, eager=eager)
+        _measured_candidates(sh, id_col, max_df)
         .select(
             "id_a",
             "id_b",
@@ -276,7 +264,6 @@ def ngram_dedup_report(
     jaccard_threshold: float = 0.8,
     containment_threshold: float = 0.8,
     max_df: int | None = 64,
-    eager: bool = True,
 ) -> DataFrame:
     """One-row near-duplication health card: how duplicated IS this
     corpus, by both resemblance measures at once — the go/no-go
@@ -301,7 +288,6 @@ def ngram_dedup_report(
         jaccard_threshold=jaccard_threshold,
         containment_threshold=containment_threshold,
         max_df=max_df,
-        eager=eager,
     )
 
 
@@ -313,7 +299,6 @@ def ngram_dedup_report_from_shingles(
     jaccard_threshold: float = 0.8,
     containment_threshold: float = 0.8,
     max_df: int | None = 64,
-    eager: bool = True,
 ) -> DataFrame:
     """The health-card core over a PRECOMPUTED distinct (id, sh_hash)
     frame — the entry point for callers that maintain the shingle index
@@ -321,10 +306,9 @@ def ngram_dedup_report_from_shingles(
     (doc, shingle) state grid here, so batch and stream fold through
     ONE code path).  ``n_docs`` is a one-row bigint frame (the doc
     count can't be derived from ``sh``: shingle-less docs vanish)."""
-    if eager:
-        sh = sh.persist()
+    sh = sh.persist()
     try:
-        meas = _measured_candidates(sh, id_col, max_df, eager=eager).select(
+        meas = _measured_candidates(sh, id_col, max_df).select(
             "id_a",
             "id_b",
             (
@@ -339,12 +323,11 @@ def ngram_dedup_report_from_shingles(
                 >= F.lit(containment_threshold)
             ).alias("__c"),
         )
-        if eager:
-            # the pair-measure frame feeds BOTH the count aggregate and
-            # the flagged-doc distinct — pin the tiny pair list so the
-            # candidate joins replay at most once (same storage contract
-            # as the pair functions)
-            meas = meas.localCheckpoint(eager=True)
+        # the pair-measure frame feeds BOTH the count aggregate and the
+        # flagged-doc distinct — pin the tiny pair list so the candidate
+        # joins replay at most once (same storage contract as the pair
+        # functions)
+        meas, _ = pin(meas, "dedup_report:measures")
         counts = meas.agg(
             F.count(F.lit(1)).cast("bigint").alias("n_candidate_pairs"),
             F.coalesce(F.sum(F.col("__j").cast("int")), F.lit(0))
@@ -371,5 +354,4 @@ def ngram_dedup_report_from_shingles(
             )
         )
     finally:
-        if eager:
-            sh.unpersist()
+        sh.unpersist()

@@ -45,6 +45,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from gofast_spark.session import pin
 from gofast_spark.sim.cosine import cosine_sim, l2_norm
 
 
@@ -128,7 +129,6 @@ def semantic_dedup(
     nlist: int = 8,
     centroids=None,
     keep: str = "farthest",
-    eager: bool = True,
 ) -> DataFrame:
     """SemDeDup labels: input rows + (cell, cent_sim, is_dup).
 
@@ -169,12 +169,11 @@ def semantic_dedup(
         "__nv",
         F.transform(F.col(vec_col), lambda x: x.cast("double") / F.col("__l2")),
     )
-    if eager:
-        # the assigned+normalized frame feeds THREE consumers (both pair
-        # legs and the final label join-back); without truncation each
-        # re-runs the landmark sort, the broadcast assignment window,
-        # and the normalization — 3x the pipeline's per-row cost
-        cells = cells.localCheckpoint(eager=True)
+    # the assigned+normalized frame feeds THREE consumers (both pair
+    # legs and the final label join-back); unpinned each re-runs the
+    # landmark sort, the broadcast assignment window, and the
+    # normalization — 3x the pipeline's per-row cost
+    cells, _ = pin(cells, "semdedup:cells")
     a = cells.select(
         F.col(id_col).alias("__a_id"),
         F.col("__nv").alias("__a_v"),

@@ -76,7 +76,6 @@ def duplicated_spans(
     text_col: str = "text",
     k: int = 8,
     min_docs: int = 2,
-    eager: bool = False,
 ) -> DataFrame:
     """Maximal duplicated passages per document.
 
@@ -90,31 +89,11 @@ def duplicated_spans(
     The gram-position frame feeds BOTH the cross-doc frequency
     aggregate and the hit semi-join, but both consumers exchange on the
     same key ``h``, so Catalyst's ReuseExchange runs the explode ONCE
-    already — measured: ``eager=True`` (persist + checkpoint, the
+    already — measured: persisting it and pinning the spans (the
     discipline that wins when consumers need *different* partitionings,
-    e.g. semantic.py) is ~15% SLOWER here.  The flag exists for plans
-    where a caller breaks the shared-exchange shape.
+    e.g. semantic.py) is ~15% SLOWER here, so the plan stays lazy.
     """
     pos = gram_positions(df, id_col=id_col, text_col=text_col, k=k)
-    if eager:
-        pos = pos.persist()
-    try:
-        return _spans_from_positions(
-            pos, id_col, k=k, min_docs=min_docs, eager=eager
-        )
-    finally:
-        if eager:
-            pos.unpersist()
-
-
-def _spans_from_positions(
-    pos: DataFrame,
-    id_col: str,
-    *,
-    k: int,
-    min_docs: int,
-    eager: bool,
-) -> DataFrame:
     dup = (
         pos.groupBy("h")
         .agg(F.countDistinct(id_col).alias("nd"))
@@ -140,7 +119,7 @@ def _spans_from_positions(
             w.rowsBetween(Window.unboundedPreceding, 0)
         ),
     )
-    out = (
+    return (
         flagged.groupBy(id_col, "span_id")
         .agg(
             F.min("pos").alias("span_start"),
@@ -151,11 +130,6 @@ def _spans_from_positions(
         )
         .select(id_col, "span_start", "span_end_excl", "n_tokens")
     )
-    if eager:
-        # materialize while `pos` is still persisted (caller unpersists
-        # on return); spans are bounded by n_tok / k — small
-        out = out.localCheckpoint(eager=True)
-    return out
 
 
 def strip_duplicated_spans(

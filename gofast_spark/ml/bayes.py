@@ -27,6 +27,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from gofast_spark.session import pin
+
 
 def fit_gaussian_nb(
     df: DataFrame,
@@ -155,18 +157,18 @@ def multinomial_nb_predictions(
     # scoring join all consume it, and each broadcast materialization
     # otherwise replays the train tokenize+explode chain (guide §1.2 —
     # the count tables are vocabulary-sized, the lineage is corpus-sized)
-    tcc = (
+    tcc, _ = pin(
         tr.select("cls", F.explode("tk").alias("token"))
-        .groupBy("cls", "token").agg(F.count(F.lit(1)).alias("n_ct"))
-        .localCheckpoint(eager=True)
+        .groupBy("cls", "token").agg(F.count(F.lit(1)).alias("n_ct")),
+        "nb:token_counts",
     )
     ct = tcc.groupBy("cls").agg(F.sum("n_ct").alias("n_c"))
     vocab = tcc.agg(F.countDistinct("token").alias("v"))
     # one normalize pass for the class-sized doc counts; n_train derives
     # from the materialized table instead of a second corpus scan
-    cls_docs = (
-        tr.groupBy("cls").agg(F.count(F.lit(1)).alias("n_docs"))
-        .localCheckpoint(eager=True)
+    cls_docs, _ = pin(
+        tr.groupBy("cls").agg(F.count(F.lit(1)).alias("n_docs")),
+        "nb:class_docs",
     )
     pri = (
         cls_docs

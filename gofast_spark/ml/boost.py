@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from gofast_spark.session import pin
+
 _U = 1_000  # milli-unit quantization of the target
 
 
@@ -75,10 +77,11 @@ def fit_boosted_stumps(
     # materialization (each round's two broadcast jobs replayed the
     # whole lineage); now rounds are 64-row algebra (guide §1.2: the
     # distributed algorithm first — one pass is the floor here).
-    hist0 = (
-        base_rows.groupBy("bin")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("y").alias("sy"))
-        .localCheckpoint(eager=True)
+    hist0, _ = pin(
+        base_rows.groupBy("bin").agg(
+            F.count(F.lit(1)).alias("n"), F.sum("y").alias("sy")
+        ),
+        "stumps:hist",
     )
     base = hist0.agg(
         (F.sum("sy").cast("double") / F.sum("n").cast("double"))
@@ -195,10 +198,11 @@ def fit_boosted_stumps_multi(
     # this API takes — so rounds become cell-level algebra instead of
     # per-round corpus scans.
     joint_cols = [f"b{j}" for j in range(len(specs))]
-    hist0 = (
-        base_rows.groupBy(*joint_cols)
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("y").alias("sy"))
-        .localCheckpoint(eager=True)
+    hist0, _ = pin(
+        base_rows.groupBy(*joint_cols).agg(
+            F.count(F.lit(1)).alias("n"), F.sum("y").alias("sy")
+        ),
+        "stumps:joint_hist",
     )
     base = hist0.agg(
         (F.sum("sy").cast("double") / F.sum("n").cast("double"))

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gofast_spark.ml.selection import kfold_assign
+from gofast_spark.session import pin
 
 _U = 1_000_000
 
@@ -88,8 +89,8 @@ def split_conformal_group_mean(
             )
         )
 
-    cal = residuals(3).localCheckpoint(eager=True)
-    n_cal = cal.count()
+    cal, m = pin(residuals(3), "conformal:calibration", n=F.count(F.lit(1)))
+    n_cal = m["n"]
     if n_cal == 0:
         raise ValueError("empty calibration split")
     k = min(n_cal, math.ceil((n_cal + 1) * (1.0 - alpha)))

@@ -34,6 +34,8 @@ from itertools import product
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from gofast_spark.session import pin
+
 _U = 1_000_000
 
 
@@ -68,7 +70,7 @@ def dbscan(
         pts = pts.withColumn(
             f"g{i}", F.floor(F.col(f"x{i}") / F.lit(eps_u)).cast("bigint")
         )
-    pts = pts.localCheckpoint(eager=True)
+    pts, _ = pin(pts, "dbscan:points")
 
     # ONE equi-join, not 3^d: the left side explodes each point to its
     # 3^d neighbor-cell keys, the right side keeps its home cell — the
@@ -96,12 +98,12 @@ def dbscan(
     cond = F.col("a.id") < F.col("b.id")
     for i in range(d):
         cond = cond & (F.col(f"a.nc.h{i}") == F.col(f"b.g{i}"))
-    pairs = (
+    pairs, _ = pin(
         probes.alias("a")
         .join(pts.alias("b"), cond)
         .where(dist <= F.lit(eps_u * eps_u))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .localCheckpoint(eager=True)
+        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b")),
+        "dbscan:pairs",
     )
 
     sym = pairs.select(
@@ -110,13 +112,12 @@ def dbscan(
         pairs.select(F.col("id_b").alias("id"), F.col("id_a").alias("nb"))
     )
     degree = sym.groupBy("id").agg(F.count(F.lit(1)).alias("n_nb"))
-    # r16: `core` feeds three legs (both core_edges prune joins and the
+    # `core` feeds three legs (both core_edges prune joins and the
     # core_lab assembly) — pin the node-sized frame so the degree
     # aggregate over the symmetric pair view runs once, not per leg
-    core = (
-        degree.where(F.col("n_nb") + 1 >= min_pts)
-        .select("id")
-        .localCheckpoint(eager=True)
+    core, _ = pin(
+        degree.where(F.col("n_nb") + 1 >= min_pts).select("id"),
+        "dbscan:core",
     )
 
     from gofast_spark.dedup.cluster import connected_components_two_phase
@@ -133,14 +134,17 @@ def dbscan(
     # job overhead); the star rounds converge in O(log^2 n) regardless
     # of chain length — the asymptotic win at 100 TB, not a local tweak
     comp = connected_components_two_phase(core_edges)  # (id, cluster_id)
-    # r16: `core_lab` feeds three legs (border min-join, the border
+    # `core_lab` feeds three legs (border min-join, the border
     # anti-join, the assigned union) — left lazy, each leg replayed the
     # CC label/root assembly and the core join; pin the node-sized frame
-    core_lab = core.join(comp, "id", "left").select(
-        "id",
-        # a core point with no core neighbor is its own cluster
-        F.coalesce(F.col("cluster_id"), F.col("id")).alias("cluster"),
-    ).localCheckpoint(eager=True)
+    core_lab, _ = pin(
+        core.join(comp, "id", "left").select(
+            "id",
+            # a core point with no core neighbor is its own cluster
+            F.coalesce(F.col("cluster_id"), F.col("id")).alias("cluster"),
+        ),
+        "dbscan:core_labels",
+    )
 
     border_lab = (
         sym.join(core_lab.withColumnRenamed("id", "nb"), "nb")

@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from gofast_spark.session import pin
+
 
 def target_encode(
     df: DataFrame,
@@ -57,11 +59,10 @@ def target_encode(
         ).alias(out),
     )
     if broadcast_limit is not None:
-        # materialize the category-sized table before counting it — the
-        # bare count() re-executed the whole corpus aggregate, and the
-        # apply join would then run it a third time (guide §1.2)
-        enc = enc.localCheckpoint(eager=True)
-        if enc.count() <= broadcast_limit:
+        # pin the category-sized table: the gate count and the apply
+        # join would each re-execute the corpus aggregate (guide §1.2)
+        enc, m = pin(enc, "target_encode:table", n=F.count(F.lit(1)))
+        if m["n"] <= broadcast_limit:
             enc = F.broadcast(enc)
     return (
         df.join(enc, df[cat_col].eqNullSafe(enc["__cat"]), "left")
@@ -107,9 +108,9 @@ def woe_encode(
         ).alias(out),
     )
     if broadcast_limit is not None:
-        # same materialize-before-count as target_encode (guide §1.2)
-        enc = enc.localCheckpoint(eager=True)
-        if enc.count() <= broadcast_limit:
+        # same pinned gate as target_encode
+        enc, m = pin(enc, "woe_encode:table", n=F.count(F.lit(1)))
+        if m["n"] <= broadcast_limit:
             enc = F.broadcast(enc)
     return (
         df.join(enc, df[cat_col].eqNullSafe(enc["__cat"]), "left")

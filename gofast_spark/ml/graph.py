@@ -28,6 +28,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from gofast_spark.session import pin
+
+# sort-merge pagerank cuts the rank lineage every this many rounds
+_RANK_PIN_EVERY = 8
+
 
 def edges_from_pairs(
     df: DataFrame, src: str, dst: str, *, undirected: bool = True
@@ -61,7 +66,6 @@ def pagerank(
     *,
     iterations: int = 5,
     damping: float = 0.85,
-    checkpoint_every: int = 8,
     broadcast_ranks: bool = False,
 ) -> DataFrame:
     """(node, rank) after ``iterations`` synchronous updates from the
@@ -77,7 +81,7 @@ def pagerank(
     # re-reads it, and without this the upstream plan (scans, joins, the
     # distinct) re-executes per iteration — on the sf0.1 graph that made
     # 5 iterations cost 5 edge builds instead of 1
-    edges = edges.localCheckpoint(eager=True)
+    edges, _ = pin(edges, "pagerank:edges")
     nodes = (
         edges.select(F.col("src").alias("node"))
         .unionByName(edges.select(F.col("dst").alias("node")))
@@ -138,8 +142,8 @@ def pagerank(
         # either way, so the extra job is pure overhead).  Sort-merge
         # mode has one job total; there the periodic cadence is enough.
         last = it + 1 == iterations
-        if (broadcast_ranks and not last) or (it + 1) % checkpoint_every == 0:
-            ranks = ranks.localCheckpoint(eager=True)
+        if (broadcast_ranks and not last) or (it + 1) % _RANK_PIN_EVERY == 0:
+            ranks, _ = pin(ranks, "pagerank:ranks")
     return ranks.select("node", "rank")
 
 
@@ -185,12 +189,12 @@ def label_propagation(
         edges = edges.select("src", "dst").union(
             edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         ).where(F.col("src") != F.col("dst")).distinct()
-    edges = edges.localCheckpoint(eager=True)
-    labels = (
+    edges, _ = pin(edges, "lpa:edges")
+    labels, _ = pin(
         edges.select(F.col("src").alias("node"))
         .distinct()
-        .withColumn("lab", F.col("node"))
-        .localCheckpoint(eager=True)
+        .withColumn("lab", F.col("node")),
+        "lpa:labels",
     )
     for it in range(iterations):
         nbr = edges.join(
@@ -208,10 +212,7 @@ def label_propagation(
             ).alias("lab")
         )
         last = it + 1 == iterations
-        labels = (
-            new_labels if last
-            else new_labels.localCheckpoint(eager=True)
-        )
+        labels = new_labels if last else pin(new_labels, "lpa:round")[0]
     return labels.select("node", F.col("lab").alias("label"))
 
 
@@ -227,14 +228,14 @@ def triangle_count(edges: DataFrame) -> DataFrame:
     ``(node, triangles)`` for every vertex of the (symmetrized) input —
     zero for triangle-free nodes; ``agg(sum/3)`` of the column is 3x
     the global triangle count (each triangle credits its 3 corners)."""
-    canon = (
+    canon, _ = pin(
         edges.select(
             F.least("src", "dst").alias("u"),
             F.greatest("src", "dst").alias("v"),
         )
         .where(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        "triangles:canon",
     )
     # wedges u < v < w centered at v, closed by the (u, w) edge
     tri = (
@@ -341,15 +342,15 @@ def link_prediction(
         ).distinct()
     else:
         e = e.distinct()
-    # r16: `e` feeds FOUR legs (degrees, both wedge legs, the adjacency
+    # `e` feeds FOUR legs (degrees, both wedge legs, the adjacency
     # anti-join) and `deg` three (AA weights, deg_u, deg_v) — left lazy,
     # the static plan replayed the symmetrize-distinct subtree per leg
-    # (54 Exchanges on the modgraph entry).  Pin both once: edge-sized
-    # and node-sized frames, the triangle_count/checkpoint discipline.
-    e = e.localCheckpoint(eager=True)
-    deg = e.groupBy("src").agg(
-        F.count(F.lit(1)).alias("deg")
-    ).localCheckpoint(eager=True)
+    # (54 Exchanges on the modgraph entry).  Pin both once.
+    e, _ = pin(e, "link_prediction:edges")
+    deg, _ = pin(
+        e.groupBy("src").agg(F.count(F.lit(1)).alias("deg")),
+        "link_prediction:deg",
+    )
     # wedges u - w - v with u < v through middle w
     a = e.select(F.col("src").alias("w"), F.col("dst").alias("u"))
     b = e.select(F.col("src").alias("w"), F.col("dst").alias("v"))
@@ -430,14 +431,18 @@ def hits_scores(
     half-step)."""
     # edge and node frames feed every half-step: truncate their lineage
     # ONCE so the 2*iterations jobs don't each re-derive them
-    e = edges.select("src", "dst").where(
-        F.col("src") != F.col("dst")
-    ).distinct().localCheckpoint(eager=True)
-    nodes = (
+    e, _ = pin(
+        edges.select("src", "dst")
+        .where(F.col("src") != F.col("dst"))
+        .distinct(),
+        "hits:edges",
+    )
+    nodes, _ = pin(
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-    ).localCheckpoint(eager=True)
+        .distinct(),
+        "hits:nodes",
+    )
 
     def rescaled(raw: DataFrame) -> DataFrame:
         # (node, score) view of a checkpointed raw-sum frame: 1-row
@@ -454,12 +459,12 @@ def hits_scores(
         )
 
     def half_raw(score: DataFrame, join_key: str, group_key: str) -> DataFrame:
-        return (
+        return pin(
             e.join(score, e[join_key] == score["node"])
             .groupBy(F.col(group_key).alias("__n"))
-            .agg(F.sum(F.col("score").cast("decimal(38,0)")).alias("__raw"))
-            .localCheckpoint(eager=True)
-        )
+            .agg(F.sum(F.col("score").cast("decimal(38,0)")).alias("__raw")),
+            "hits:half_step",
+        )[0]
 
     score = nodes.select(
         "node", F.lit(scale).cast("bigint").alias("score")
@@ -503,40 +508,28 @@ def kcore_members(
 
     Each round is ONE degree aggregate + two semi-joins on the
     surviving edge set (node-sized keep list, broadcast by AQE when
-    small); the edge frame is ``localCheckpoint``'d per round and the
-    loop stops when the edge count stops changing (the
-    connected-components discipline — a bounded 1-row driver action
-    per round).  Raises after ``max_rounds`` without convergence.
-    Returns ``(node, degree)`` within the k-core."""
+    small); the edge frame is pinned per round, the pin observes its
+    edge count, and the loop stops when that count stops changing (the
+    connected-components discipline).  Raises after ``max_rounds``
+    without convergence.  Returns ``(node, degree)`` within the k-core."""
     if k < 1:
         raise ValueError("k must be >= 1")
-    from pyspark.sql import Observation
-
     e = edges.select("src", "dst").where(F.col("src") != F.col("dst"))
     if symmetrize:
         e = e.union(e.select(F.col("dst").alias("src"),
                              F.col("src").alias("dst")))
-    # r16: the per-round edge count rides the checkpoint materialization
-    # as an observed metric instead of a separate 2-job action on the
-    # just-materialized frame
-    obs0 = Observation()
-    cur = (
-        e.distinct()
-        .observe(obs0, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
-    )
-    n_cur = obs0.get["n"]
+    cur, m = pin(e.distinct(), "kcore:edges", n=F.count(F.lit(1)))
+    n_cur = m["n"]
     for _ in range(max_rounds):
         deg = cur.groupBy("src").agg(F.count(F.lit(1)).alias("__deg"))
         keep = deg.where(F.col("__deg") >= k).select("src")
-        obs = Observation()
-        nxt = (
+        nxt, m = pin(
             cur.join(keep, "src", "leftsemi")
-            .join(keep.select(F.col("src").alias("dst")), "dst", "leftsemi")
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
+            .join(keep.select(F.col("src").alias("dst")), "dst", "leftsemi"),
+            "kcore:round",
+            n=F.count(F.lit(1)),
         )
-        n_nxt = obs.get["n"]
+        n_nxt = m["n"]
         if n_nxt == n_cur:
             break
         cur, n_cur = nxt, n_nxt

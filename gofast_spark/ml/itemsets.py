@@ -34,6 +34,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from gofast_spark.session import pin
+
 logger = logging.getLogger(__name__)
 
 # Handles persisted by cap_basket_size (default materialize=True path).
@@ -117,18 +119,14 @@ def cap_basket_size(
     sizes = pruned.groupBy(basket_col).agg(
         F.count(F.lit(1)).alias("__bk_n")
     )
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    # r16: count rides the materialization; when the cap binds, the
-    # anti-join below reads the pinned frame instead of re-running the
-    # size aggregate
-    oversized = (
-        sizes.where(F.col("__bk_n") > max_basket_size)
-        .observe(obs, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
+    # when the cap binds, the anti-join below reads the pinned frame
+    # instead of re-running the size aggregate
+    oversized, m = pin(
+        sizes.where(F.col("__bk_n") > max_basket_size),
+        "basket_cap:oversized",
+        n=F.count(F.lit(1)),
     )
-    n_over = obs.get["n"]
+    n_over = m["n"]
     if n_over == 0:
         return pruned, 0
     logger.warning(
@@ -162,34 +160,25 @@ def _basket_pairs(
     and ``n_baskets`` is a 1-row frame ``(__nb)`` holding the basket
     count of the SAME corpus the pair counts were taken from (capped
     when the cap binds)."""
-    b = (
+    # the distinct (basket, item) frame feeds the support table, the
+    # prune join, and the basket count — pin it once, four cheap
+    # consumers (guide §1.2: remove repeated passes)
+    b, _ = pin(
         df.select(
             F.col(basket_col).alias("bk"), F.col(item_col).alias("it")
         )
         .where(F.col(basket_col).isNotNull() & F.col(item_col).isNotNull())
-        .distinct()
-        # the distinct (basket, item) frame feeds the support table, the
-        # prune join, and the basket count — and the broadcast-gate
-        # count() below otherwise re-executes the corpus distinct from
-        # scratch.  One materialization, four cheap consumers
-        # (guide §1.2: remove repeated passes).
-        .localCheckpoint(eager=True)
+        .distinct(),
+        "baskets:items",
     )
-    from pyspark.sql import Observation
-
-    # r16: the gate count used to re-run the support aggregate (count +
-    # prune join = 2 passes over b); pin the frequent-vocab frame once
-    # with its count as an observed metric of the materialization
-    obs = Observation()
+    # the gate count and the prune join read the frequent-vocab frame
     support = b.groupBy("it").agg(F.count(F.lit(1)).alias("n_it"))
-    freq = (
-        support.where(F.col("n_it") >= min_support)
-        .observe(obs, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
+    freq, m = pin(
+        support.where(F.col("n_it") >= min_support),
+        "baskets:freq",
+        n=F.count(F.lit(1)),
     )
-    freq_small = (
-        broadcast_limit is not None and obs.get["n"] <= broadcast_limit
-    )
+    freq_small = broadcast_limit is not None and m["n"] <= broadcast_limit
     if freq_small:
         freq = F.broadcast(freq)
     pruned, n_dropped = cap_basket_size(

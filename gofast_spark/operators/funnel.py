@@ -22,6 +22,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from gofast_spark.session import pin
 # the shared auto/exact/sketch percentile switch (stats/prebin.py)
 from gofast_spark.stats.prebin import percentile_expr as _percentile_expr
 
@@ -48,37 +49,28 @@ def funnel(
         F.col(type_col).alias("__ty"),
     ).where(F.col(ts_col).isNotNull())
 
-    # localCheckpoint(eager) each frontier: step k's count otherwise
-    # replays the whole join chain from the raw event stream
-    # (k(k+1)/2 scans for a k-step funnel) — the same lineage-truncation
-    # discipline as the pagerank / connected-components loops.  Each
-    # checkpointed frame is user-sized, and the per-step count rides
-    # the materialization as an observed metric (r16: was a separate
-    # count job per step).
-    from pyspark.sql import Observation
-
-    def _ck_count(fr: DataFrame) -> tuple[DataFrame, int]:
-        obs = Observation()
-        fr = fr.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(
-            eager=True
-        )
-        return fr, obs.get["n"]
-
-    frontier, n0 = _ck_count(
+    # pin each (user-sized) frontier: step k's count otherwise replays
+    # the whole join chain from the raw event stream (k(k+1)/2 scans
+    # for a k-step funnel); the pin observes the step count
+    frontier, m = pin(
         ev.where(F.col("__ty") == steps[0])
         .groupBy("__u")
-        .agg(F.min("__ts").alias("__t"))
+        .agg(F.min("__ts").alias("__t")),
+        "funnel:step",
+        n=F.count(F.lit(1)),
     )
-    counts = [n0]
+    counts = [m["n"]]
     for step in steps[1:]:
-        frontier, nk = _ck_count(
+        frontier, m = pin(
             ev.where(F.col("__ty") == step)
             .join(frontier, "__u")
             .where(F.col("__ts") >= F.col("__t"))
             .groupBy("__u")
-            .agg(F.min("__ts").alias("__t"))
+            .agg(F.min("__ts").alias("__t")),
+            "funnel:step",
+            n=F.count(F.lit(1)),
         )
-        counts.append(nk)
+        counts.append(m["n"])
 
     spark = df.sparkSession
     rows = []
@@ -183,7 +175,7 @@ def rfm_segments(
     quantile cuts — plus the concatenated ``rfm`` code.
 
     Scale shape: one user groupBy builds the (user-sized) RFM frame,
-    localCheckpoint'd so the cut aggregate and the scored output share
+    pinned so the cut aggregate and the scored output share
     one materialization instead of scanning the event stream twice;
     the default ``ref_date`` rides the same plan as a 1-row broadcast
     cross join (no eager collect).  ``quantile_mode='auto'`` (default)
@@ -208,19 +200,19 @@ def rfm_segments(
         # every other scalar normalizer in the repo
         ref_row = ev.agg(F.max(ts_col).cast("date").alias("__ref"))
         base = base.crossJoin(F.broadcast(ref_row))
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    base = base.select(
-        "user",
-        F.datediff(F.col("__ref"), F.col("__last"))
-        .cast("double")
-        .alias("recency"),
-        "frequency",
-        "monetary",
-    ).observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(eager=True)
-    # count rides the materialization as an observed metric (r16)
-    n_users = obs.get["n"] if quantile_mode == "auto" else None
+    base, m = pin(
+        base.select(
+            "user",
+            F.datediff(F.col("__ref"), F.col("__last"))
+            .cast("double")
+            .alias("recency"),
+            "frequency",
+            "monetary",
+        ),
+        "rfm:base",
+        n=F.count(F.lit(1)),
+    )
+    n_users = m["n"] if quantile_mode == "auto" else None
     qs = list(quantiles)
     cuts = base.agg(
         *[
@@ -271,7 +263,7 @@ def funnel_latencies(
     always "how fast".
 
     Scale shape: identical frontier chain to ``funnel`` (k-1 user-keyed
-    joins, each frontier localCheckpoint'd so later transitions don't
+    joins, each frontier pinned so later transitions don't
     replay the chain from the raw stream); latency aggregation is one
     pass per transition over a user-sized frame.  ``median_mode='auto'``
     (default) switches the median to a bounded-memory
@@ -288,29 +280,24 @@ def funnel_latencies(
         F.col(type_col).alias("__ty"),
     ).where(F.col(ts_col).isNotNull())
 
-    frontier = (
+    frontier, _ = pin(
         ev.where(F.col("__ty") == steps[0])
         .groupBy("__u")
-        .agg(F.min("__s").alias("__t"))
-        .localCheckpoint(eager=True)
+        .agg(F.min("__s").alias("__t")),
+        "funnel_latencies:step",
     )
-    from pyspark.sql import Observation
-
     out = None
     for i, step in enumerate(steps[1:], start=1):
-        obs = Observation()
-        nxt = (
+        nxt, m = pin(
             ev.where(F.col("__ty") == step)
             .join(frontier.select("__u", F.col("__t").alias("__prev")), "__u")
             .where(F.col("__s") >= F.col("__prev"))
             .groupBy("__u", "__prev")
-            .agg(F.min("__s").alias("__t"))
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
+            .agg(F.min("__s").alias("__t")),
+            "funnel_latencies:step",
+            n=F.count(F.lit(1)),
         )
-        # the mode decision's count rides the materialization as an
-        # observed metric (r16: was a separate count job per step)
-        n_conv = obs.get["n"] if median_mode == "auto" else None
+        n_conv = m["n"] if median_mode == "auto" else None
         lat = nxt.agg(
             F.count(F.lit(1)).alias("n_users"),
             F.avg(F.col("__t") - F.col("__prev")).alias("avg_latency_sec"),
@@ -489,25 +476,17 @@ def funnel_windowed(
         F.col(type_col).alias("__ty"),
     ).where(F.col(ts_col).isNotNull())
 
-    # per-step counts ride the checkpoint materializations as observed
-    # metrics (r16), same as the unwindowed funnel above
-    from pyspark.sql import Observation
-
-    def _ck_count(fr: DataFrame) -> tuple[DataFrame, int]:
-        obs = Observation()
-        fr = fr.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(
-            eager=True
-        )
-        return fr, obs.get["n"]
-
-    frontier, n0 = _ck_count(
+    # frontiers pinned as in the unwindowed funnel above
+    frontier, m = pin(
         ev.where(F.col("__ty") == steps[0])
         .groupBy("__u")
-        .agg(F.min("__s").alias("__t"))
+        .agg(F.min("__s").alias("__t")),
+        "windowed_funnel:step",
+        n=F.count(F.lit(1)),
     )
-    counts = [n0]
+    counts = [m["n"]]
     for step in steps[1:]:
-        frontier, nk = _ck_count(
+        frontier, m = pin(
             ev.where(F.col("__ty") == step)
             .join(frontier, "__u")
             .where(
@@ -515,9 +494,11 @@ def funnel_windowed(
                 & (F.col("__s") <= F.col("__t") + F.lit(window_sec))
             )
             .groupBy("__u")
-            .agg(F.min("__s").alias("__t"))
+            .agg(F.min("__s").alias("__t")),
+            "windowed_funnel:step",
+            n=F.count(F.lit(1)),
         )
-        counts.append(nk)
+        counts.append(m["n"])
 
     spark = df.sparkSession
     rows = []

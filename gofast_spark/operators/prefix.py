@@ -31,6 +31,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from gofast_spark.session import pin
+
 
 def distributed_cumsum(
     df: DataFrame,
@@ -47,7 +49,7 @@ def distributed_cumsum(
     the COMBINATION must be globally unique."""
     order = [order_col] if isinstance(order_col, str) else list(order_col)
     n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    # r16: `part` feeds BOTH the local-window leg and the per-partition
+    # `part` feeds BOTH the local-window leg and the per-partition
     # totals leg.  Left lazy, the static plan gave each leg its OWN
     # range exchange (plan-verified: two rangepartitioning nodes, the
     # whole upstream scanned twice) — and, worse, each RangePartitioner
@@ -55,13 +57,13 @@ def distributed_cumsum(
     # for partial sampling the two legs can pick DIFFERENT boundaries,
     # making `__pid` disagree between the rows and the offsets — a
     # latent wrong-cumsum hazard that small, fully-sampled inputs never
-    # trigger.  One eager localCheckpoint pins a single exchange and a
-    # single boundary set: exact by construction at any scale, and the
-    # upstream is scanned once instead of twice.
-    part = (
+    # trigger.  One pin fixes a single exchange and a single boundary
+    # set: exact by construction at any scale, and the upstream is
+    # scanned once instead of twice.
+    part, _ = pin(
         df.repartitionByRange(n, *[F.col(c) for c in order])
-        .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
+        .withColumn("__pid", F.spark_partition_id()),
+        "cumsum:range",
     )
     w_local = (
         Window.partitionBy("__pid")

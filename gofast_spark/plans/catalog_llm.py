@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from gofast_spark.dedup.minhash import MINHASH_COEFFS, MINHASH_P
 from gofast_spark.plans.catalog import _t, query
+from gofast_spark.session import pin
 from gofast_spark.sim.lsh import hyperplane_weight
 from gofast_spark.text.analysis import EN_STOPWORDS, LANG_STOPWORDS
 from gofast_spark.text.hashing import char_hash_sql, md5_hash64_sql
@@ -2067,14 +2068,14 @@ def corpus_build_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _minhash_build(
     spark: SparkSession, sf_dir: str, *, stage_sink: str | None = None
 ) -> DataFrame:
-    """corpus_build_pipeline body with the stage boundary as a knob
-    (text/corpus_filter.py stage_boundary): the entry runs the toy
+    """corpus_build_pipeline body with the stage layout as a knob
+    (``session.pin``'s ``sink``): the entry runs the toy
     localCheckpoint layout; a production build passes a parquet
     path/table prefix and gets the replayable persisted layout —
     tests/test_corpus_build_plans.py exercises BOTH."""
     from gofast_spark.dedup import dedup_near_duplicates
     from gofast_spark.operators import pack_sequences
-    from gofast_spark.text import corpus_filter, stage_boundary
+    from gofast_spark.text import corpus_filter
     from gofast_spark.text.analysis import normalize_text
 
     # tag-then-filter with stage pins (see
@@ -2082,13 +2083,15 @@ def _minhash_build(
     # an inlined `.where("keep")` re-derives the signal battery per
     # conjunct, and the single-split toy scan defeats _docs'
     # redistribution)
-    d = stage_boundary(
+    d, _ = pin(
         _docs(spark, sf_dir),
-        stage_sink=None if stage_sink is None else f"{stage_sink}_raw",
+        "corpus_build:raw",
+        sink=None if stage_sink is None else f"{stage_sink}_raw",
     )
-    tagged = stage_boundary(
+    tagged, _ = pin(
         corpus_filter(d, "text").select("doc_id", "text", "keep"),
-        stage_sink=None if stage_sink is None else f"{stage_sink}_tagged",
+        "corpus_build:tagged",
+        sink=None if stage_sink is None else f"{stage_sink}_tagged",
     )
     kept = tagged.where("keep").select("doc_id", "text")
     surv = dedup_near_duplicates(kept, "doc_id", "text", threshold=0.8)
@@ -4053,7 +4056,7 @@ def corpus_build_persisted_stage_survivors(
     """The SAME containment corpus build run through the PRODUCTION
     stage layout (r13 verdict ask #4: stage_sink= in an oracle-checked
     driver entry, not just a unit test): every stage boundary persists
-    as a parquet table (text/corpus_filter.py stage_boundary) and the
+    as a parquet table (``session.pin``'s ``sink``) and the
     next stage reads it back, so the keep-predicate and the
     three-column projection push into a real columnar scan — the
     replayable, fault-tolerant layout a 100-TB build runs — and the
@@ -4069,7 +4072,7 @@ def corpus_build_persisted_stage_survivors(
             spark, sf_dir, stage_sink=f"{base}/stage"
         )
         # pin the result before the stage tables are deleted
-        return out.localCheckpoint(eager=True)
+        return pin(out, "persisted_stage:result")[0]
     finally:
         shutil.rmtree(base, ignore_errors=True)
 
@@ -4086,8 +4089,8 @@ _REG["corpus_build_persisted_stage_survivors"] = _REG[
 def _containment_build(
     spark: SparkSession, sf_dir: str, *, stage_sink: str | None = None
 ) -> DataFrame:
-    """corpus_build_containment_survivors body with the stage boundary
-    as a knob (text/corpus_filter.py stage_boundary; r12 verdict ask
+    """corpus_build_containment_survivors body with the stage layout
+    as a knob (``session.pin``'s ``sink``; r12 verdict ask
     #4): stage_sink=None is the toy localCheckpoint layout; a path or
     table-name prefix persists each stage as parquet — replayable,
     fault-tolerant, and the downstream keep-filter pushes into the
@@ -4119,12 +4122,12 @@ def _containment_survivors(
     survivors) so the per-source build and the flagship shard-card
     entry compose the SAME verified chain instead of re-deriving it."""
     from gofast_spark.dedup.ngram import ngram_containment_pairs
-    from gofast_spark.text import corpus_filter, stage_boundary
+    from gofast_spark.text import corpus_filter
 
     # Two toy-scale plan pins (measured at sf0.1: 204 s -> ~8 s).
     # 1. _docs' repartition is transparent to Catalyst, so any filter
     #    collapses back onto the single-split scan (one core); an
-    #    eager stage boundary on the raw docs pins the redistribution.
+    #    eager pin of the raw docs fixes the redistribution.
     # 2. `.where("keep")` inlines the ENTIRE rule chain into a Filter,
     #    where each of the six conjuncts re-derives the full signal
     #    battery (whole-stage CSE does not survive the collapsed
@@ -4133,13 +4136,15 @@ def _containment_survivors(
     #    frame first makes the verdict a stored boolean — the same
     #    tag-then-filter layout a production corpus build writes to
     #    storage between stages (stage_sink= makes that layout code).
-    d = stage_boundary(
+    d, _ = pin(
         _docs(spark, sf_dir),
-        stage_sink=None if stage_sink is None else f"{stage_sink}_raw",
+        "containment_build:raw",
+        sink=None if stage_sink is None else f"{stage_sink}_raw",
     )
-    tagged = stage_boundary(
+    tagged, _ = pin(
         corpus_filter(d, "text").select("doc_id", "text", "source", "keep"),
-        stage_sink=None if stage_sink is None else f"{stage_sink}_tagged",
+        "containment_build:tagged",
+        sink=None if stage_sink is None else f"{stage_sink}_tagged",
     )
     kept = tagged.where("keep").select("doc_id", "text", "source")
     pairs = ngram_containment_pairs(
@@ -4314,7 +4319,7 @@ def corpus_flagship_card_documents(
     # surv feeds TWO sinks (shard/card chain + the inventory count);
     # pin it so the containment pair join replays at most once — the
     # same storage contract as the pair functions (dedup/ngram.py)
-    surv = surv.localCheckpoint(eager=True)
+    surv, _ = pin(surv, "flagship_card:survivors")
     counts = tagged.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
         F.coalesce(F.sum(F.col("keep").cast("int")), F.lit(0))

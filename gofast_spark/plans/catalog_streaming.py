@@ -10,6 +10,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gofast_spark.plans.catalog import _t, query
+from gofast_spark.session import pin
 
 
 @query(
@@ -1295,10 +1296,13 @@ def stream_dedup_rate_report_documents(
     # the SAME doc merge by design; two DIFFERENT docs sharing an id
     # collapse here but count twice in the batch count(*).
     # n_exact_unique = distinct non-null normalized texts.
-    stats = docs.agg(
-        count_distinct_with_null_group("doc_id").alias("n_docs"),
-        F.countDistinct("__t").cast("bigint").alias("n_exact_unique"),
-    ).localCheckpoint(eager=True)
+    stats, _ = pin(
+        docs.agg(
+            count_distinct_with_null_group("doc_id").alias("n_docs"),
+            F.countDistinct("__t").cast("bigint").alias("n_exact_unique"),
+        ),
+        "stream_dedup_report:stats",
+    )
     rep = ngram_dedup_report_from_shingles(
         sh,
         "doc_id",
@@ -1391,11 +1395,11 @@ def stream_corpus_flagship_card_documents(
         "doc_id", "keep", "n_tokens"
     )
     kept_ids = docs.where(F.col("keep") == 1).select("doc_id")
-    sh = (
+    sh, _ = pin(
         state.where(F.col("sh_hash").isNotNull())
         .join(kept_ids, "doc_id", "left_semi")
-        .select("doc_id", "sh_hash")
-        .localCheckpoint(eager=True)
+        .select("doc_id", "sh_hash"),
+        "stream_flagship:kept_shingles",
     )
     counts = docs.agg(
         count_distinct_with_null_group("doc_id").alias("n_docs"),
@@ -1410,11 +1414,11 @@ def stream_corpus_flagship_card_documents(
         .otherwise(F.greatest("id_a", "id_b"))
         .alias("doc_id")
     ).distinct()
-    surv = (
+    surv, _ = pin(
         docs.where(F.col("keep") == 1)
         .select("doc_id", "n_tokens")
-        .join(drop, "doc_id", "left_anti")
-        .localCheckpoint(eager=True)
+        .join(drop, "doc_id", "left_anti"),
+        "stream_flagship:survivors",
     )
     sharded = token_budget_shards(surv, "doc_id", "n_tokens", budget=2000)
     per = sharded.groupBy("shard").agg(F.sum("n_tokens").alias("tok"))

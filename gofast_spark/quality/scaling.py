@@ -17,6 +17,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from gofast_spark.session import pin
+
 
 def minmax_scale(
     df: DataFrame,
@@ -125,18 +127,11 @@ def robust_scale_grouped(
         )
     stats = df.groupBy(*group_cols).agg(*aggs)
     if broadcast_limit is not None:
-        # materialize the group-sized stats before the gate — a bare
-        # count() would re-execute the exact-percentile aggregate over
-        # the corpus, and the apply join would run it again (guide
-        # §1.2).  r16: the gate count rides the checkpoint
-        # materialization as an observed metric (zero extra jobs).
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        stats = stats.observe(
-            obs, F.count(F.lit(1)).alias("n")
-        ).localCheckpoint(eager=True)
-        if obs.get["n"] <= broadcast_limit:
+        # pin the group-sized stats: the gate count and the apply join
+        # would each re-execute the exact-percentile aggregate over the
+        # corpus (guide §1.2)
+        stats, m = pin(stats, "robust_scale:stats", n=F.count(F.lit(1)))
+        if m["n"] <= broadcast_limit:
             stats = F.broadcast(stats)
     else:
         stats = F.broadcast(stats)

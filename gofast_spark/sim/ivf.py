@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from gofast_spark.session import pin
 from gofast_spark.sim.cosine import cosine_sim, l2_norm
 
 
@@ -335,12 +336,12 @@ def ivf_topk_kmeans_exact(
         md5_hash64(F.col(id_col).cast("string")).alias("__hv"),
         xs.alias("__xs"),
     ).where(F.col("__id").isNotNull())
-    cent = (
+    # nlist rows; pin them so the Lloyd chain executes ONCE instead of
+    # replaying under both the assignment and the probe broadcast
+    cent, _ = pin(
         fit_kmeans_lloyd_arrays(fit_pts, nlist, iterations=iterations)
-        .select(F.col("cid").cast("int").alias("cell"), "__ks")
-        # nlist rows; pin them so the Lloyd chain executes ONCE instead
-        # of replaying under both the assignment and the probe broadcast
-        .localCheckpoint(eager=True)
+        .select(F.col("cid").cast("int").alias("cell"), "__ks"),
+        "ivf:centroids",
     )
 
     dist = dist2_units(F.col("__xs"), F.col("__ks"))

@@ -129,8 +129,8 @@ class DBAnalysis:
     # no self-reference).  ``auto_commit=False`` stages rewrites; commit()
     # applies them in order — the reference's transaction semantics.
     # Each rewrite deepens the logical plan; long transactions should
-    # materialize (e.g. ``spark.table(t).localCheckpoint()``) as a real
-    # warehouse writer would.
+    # materialize (e.g. ``gofast_spark.session.pin(spark.table(t), t)``)
+    # as a real warehouse writer would.
 
     _INSERT_RE = re.compile(
         r"^\s*INSERT\s+INTO\s+(\w+)\s*(?:\(([^)]*)\))?\s*(VALUES\s*.+|SELECT\b.+)$",

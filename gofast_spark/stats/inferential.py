@@ -20,6 +20,8 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from gofast_spark.session import pin
+
 
 def _scipy_sf(kind: str, stat: float, *params) -> float | None:
     """p-value via scipy on the driver; None when scipy is unavailable."""
@@ -2248,13 +2250,12 @@ def fligner_killeen(
     centred = base.join(F.broadcast(med), "__g").select(
         "__g", F.abs(F.col("__x") - F.col("__med")).alias("__d")
     )
-    # materialize the (group x distinct-d) grid once: dd/scores (whose
-    # broadcast replays the lineage) and per_g both consume it, and its
-    # lineage is the corpus centring pass
-    gd = (
-        centred.groupBy("__g", "__d")
-        .agg(F.count(F.lit(1)).alias("__c"))
-        .localCheckpoint(eager=True)
+    # pin the (group x distinct-d) grid: dd/scores (whose broadcast
+    # replays the lineage) and per_g both consume it, and its lineage
+    # is the corpus centring pass
+    gd, _ = pin(
+        centred.groupBy("__g", "__d").agg(F.count(F.lit(1)).alias("__c")),
+        "fligner:grid",
     )
     dd = gd.groupBy("__d").agg(F.sum("__c").alias("__cd"))
     w = Window.orderBy("__d").rowsBetween(Window.unboundedPreceding, -1)

@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from gofast_spark.session import pin
+
 
 def ca_residuals(
     df: DataFrame,
@@ -178,8 +180,7 @@ def dca_analysis(
             out = scores.select(
                 F.col("site").alias(site_col), "axis1", "axis2"
             )
-            out = out.localCheckpoint(eager=True)
-            return out
+            return pin(out, "dca:scores")[0]
         # quantile-sketch segment boundaries (no global-sort window: the
         # score frame is one row per site, which can still be huge)
         persisted.append(scores.persist())
@@ -201,9 +202,8 @@ def dca_analysis(
                 F.col("axis2").alias("axis2_raw"),
             )
         )
-        # materialize before unpersisting the lineage inputs
-        out = out.localCheckpoint(eager=True)
-        return out
+        # pin before unpersisting the lineage inputs
+        return pin(out, "dca:detrended")[0]
     finally:
         for frame in persisted:
             frame.unpersist()
@@ -339,8 +339,7 @@ def dca_analysis_power(
                 F.col("axis2_dt").alias("axis2"),
             )
         )
-        out = out.localCheckpoint(eager=True)
-        return out
+        return pin(out, "dca_power:detrended")[0]
     finally:
         for frame in persisted:
             frame.unpersist()

@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from gofast_spark.session import pin
+
 
 def nelson_aalen(
     df: DataFrame,
@@ -339,16 +341,19 @@ def cox_ph_binary(
     )
     g = F.col(group_col).cast("long")
     ev = F.col(event_col).cast("long")
-    per_t = df.groupBy(F.col(duration_col).alias("duration")).agg(
-        F.sum(F.lit(1) - g).alias("m0"),
-        F.sum(g).alias("m1"),
-        F.sum(ev * (F.lit(1) - g)).alias("d0"),
-        F.sum(ev * g).alias("d1"),
-        # materialize the bins-sized rollup ONCE: every Newton
-        # iteration's broadcast state replays its lineage (the corpus
-        # groupBy) when materialized, so 4 iterations + the SE readout
-        # + sizes cost ~6 corpus scans without this (guide §1.2)
-    ).localCheckpoint(eager=True)
+    # pin the bins-sized rollup: every Newton iteration's broadcast
+    # state replays its lineage (the corpus groupBy) when materialized,
+    # so 4 iterations + the SE readout + sizes cost ~6 corpus scans
+    # without this (guide §1.2)
+    per_t, _ = pin(
+        df.groupBy(F.col(duration_col).alias("duration")).agg(
+            F.sum(F.lit(1) - g).alias("m0"),
+            F.sum(g).alias("m1"),
+            F.sum(ev * (F.lit(1) - g)).alias("d0"),
+            F.sum(ev * g).alias("d1"),
+        ),
+        "cox:rollup",
+    )
     w_prev = Window.orderBy("duration").rowsBetween(
         Window.unboundedPreceding, -1
     )
@@ -447,17 +452,20 @@ def cox_ph_binary_grouped(
     )
     g = F.col(group_col).cast("long")
     ev = F.col(event_col).cast("long")
-    per_t = df.groupBy(
-        F.col(segment_col).alias("seg"),
-        F.col(duration_col).alias("duration"),
-    ).agg(
-        F.sum(F.lit(1) - g).alias("m0"),
-        F.sum(g).alias("m1"),
-        F.sum(ev * (F.lit(1) - g)).alias("d0"),
-        F.sum(ev * g).alias("d1"),
-        # same materialize-once as cox_ph_binary: the (segments x bins)
-        # rollup feeds every per-iteration state materialization
-    ).localCheckpoint(eager=True)
+    # pinned as in cox_ph_binary: the (segments x bins) rollup feeds
+    # every per-iteration state materialization
+    per_t, _ = pin(
+        df.groupBy(
+            F.col(segment_col).alias("seg"),
+            F.col(duration_col).alias("duration"),
+        ).agg(
+            F.sum(F.lit(1) - g).alias("m0"),
+            F.sum(g).alias("m1"),
+            F.sum(ev * (F.lit(1) - g)).alias("d0"),
+            F.sum(ev * g).alias("d1"),
+        ),
+        "cox_grouped:rollup",
+    )
     w_prev = Window.partitionBy("seg").orderBy("duration").rowsBetween(
         Window.unboundedPreceding, -1
     )

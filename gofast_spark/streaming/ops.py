@@ -23,6 +23,8 @@ from pyspark.sql.types import (
     TimestampNTZType,
 )
 
+from gofast_spark.session import pin
+
 # events.parquet schema with ts as raw nanos (the TIMESTAMP(NANOS)
 # testdata generation; sources.events sets the legacy conf lazily)
 EVENTS_RAW_SCHEMA = StructType(
@@ -167,7 +169,7 @@ def run_available_now(
 
     ``complete`` mode (the big-state drains: the (doc, shingle) index
     grids are 100s of thousands of rows) captures the FINAL micro-batch
-    through ``foreachBatch`` + ``localCheckpoint``: the state stays on
+    through ``foreachBatch`` + ``session.pin``: the state stays on
     the executors.  The previous memory-sink layout collected every grid
     row to the driver and re-shipped the whole LocalTableScan to the
     executors on EVERY downstream job — exactly the driver-as-data-plane
@@ -184,7 +186,7 @@ def run_available_now(
             # complete mode re-emits the FULL state every batch; only the
             # last snapshot matters.  Pin it executor-side; earlier
             # snapshots are released by the ContextCleaner when replaced.
-            holder["df"] = batch_df.localCheckpoint(eager=True)
+            holder["df"], _ = pin(batch_df, "stream:last_batch")
 
         q = (
             sdf.writeStream.foreachBatch(_capture)
@@ -669,10 +671,13 @@ def dedup_health_card_from_tables(
 
     sh = spark.read.parquet(shingle_path).select(id_col, "sh_hash")
     ex = spark.read.parquet(exact_path).select("__t", id_col)
-    stats = ex.agg(
-        count_distinct_with_null_group(id_col).alias("n_docs"),
-        F.countDistinct("__t").cast("bigint").alias("n_exact_unique"),
-    ).localCheckpoint(eager=True)
+    stats, _ = pin(
+        ex.agg(
+            count_distinct_with_null_group(id_col).alias("n_docs"),
+            F.countDistinct("__t").cast("bigint").alias("n_exact_unique"),
+        ),
+        "dedup_health:stats",
+    )
     rep = ngram_dedup_report_from_shingles(
         sh,
         id_col,

@@ -29,11 +29,7 @@ from gofast_spark.text.classifier import (
     quality_classifier_filter,
 )
 from gofast_spark.text.contamination import contamination_check, decontaminate
-from gofast_spark.text.corpus_filter import (
-    DEFAULT_RULES,
-    corpus_filter,
-    stage_boundary,
-)
+from gofast_spark.text.corpus_filter import DEFAULT_RULES, corpus_filter
 from gofast_spark.text.pii import (
     PII_PATTERNS,
     pii_profile,
@@ -83,7 +79,6 @@ __all__ = [
     "word_freq_table",
     "dsir_resample",
     "corpus_filter",
-    "stage_boundary",
     "bm25_topk",
     "build_postings",
     "corpus_stats",

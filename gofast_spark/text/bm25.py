@@ -37,6 +37,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from gofast_spark.session import pin
 from gofast_spark.text.analysis import normalize_text
 
 
@@ -108,13 +109,11 @@ def bm25_topk(
     else:
         stats = corpus_stats(postings, id_col)
 
-    # materialize the query-term postings once: the dfreq broadcast and
-    # the scoring join below otherwise EACH re-run the full corpus
-    # explode + (doc, term) groupBy behind `postings` (guide §1.2); the
-    # filtered frame is bounded by docs-containing-query-terms
-    hits = postings.where(F.col("term").isin(terms)).localCheckpoint(
-        eager=True
-    )
+    # pin the query-term postings: the dfreq broadcast and the scoring
+    # join below otherwise EACH re-run the full corpus explode +
+    # (doc, term) groupBy behind `postings` (guide §1.2); the filtered
+    # frame is bounded by docs-containing-query-terms
+    hits, _ = pin(postings.where(F.col("term").isin(terms)), "bm25:hits")
     # df_t over the filtered postings: rows <= len(terms), broadcast back
     dfreq = hits.groupBy("term").agg(F.count("*").alias("df_t"))
     scored = (
@@ -163,12 +162,12 @@ def tfidf_topk_terms(
 
     if postings is None:
         # the index feeds dfreq (join build side), the stats broadcast
-        # and the scoring join — materialize it once instead of running
-        # the tokenize + explode + groupBy chain for each consumer
-        # (guide §1.2); a caller-supplied postings frame is left as-is
-        # (the index-once-query-many contract)
-        postings = build_postings(df, id_col, text_col).localCheckpoint(
-            eager=True
+        # and the scoring join — pin it instead of running the tokenize
+        # + explode + groupBy chain for each consumer (guide §1.2); a
+        # caller-supplied postings frame is left as-is (the
+        # index-once-query-many contract)
+        postings, _ = pin(
+            build_postings(df, id_col, text_col), "tfidf_terms:postings"
         )
     dfreq = postings.groupBy("term").agg(F.count("*").alias("df_t"))
     stats = corpus_stats(postings, id_col)

@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from gofast_spark.session import pin
 from gofast_spark.text.analysis import normalize_text
 
 
@@ -86,7 +87,7 @@ def bpe_learn_merges(
         # 'hello' -> 'h e l l o'
         F.trim(F.regexp_replace(F.col("word"), "(.)", "$1 ")).alias("sym"),
     )
-    vocab = vocab.localCheckpoint(eager=True)
+    vocab, _ = pin(vocab, "bpe:vocab")
     bests: list[DataFrame] = []
     for r in range(num_merges):
         pairs = (
@@ -119,9 +120,9 @@ def bpe_learn_merges(
                 "word", "freq", F.expr(_MERGE_FOLD).alias("sym")
             )
         )
-        # materialize each round: the next round's argmax would
-        # otherwise replay every earlier round inside its own job
-        vocab = applied.localCheckpoint(eager=True)
+        # pin each round: the next round's argmax would otherwise
+        # replay every earlier round inside its own job
+        vocab, _ = pin(applied, "bpe:round")
     out = bests[0]
     for b in bests[1:]:
         out = out.unionByName(b)

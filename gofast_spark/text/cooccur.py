@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from gofast_spark.session import pin
 from gofast_spark.text.analysis import normalize_text
 
 
@@ -57,24 +58,18 @@ def bigram_pmi(
     # -gate count() job, the totals aggregate, and the scoring join each
     # re-ran the corpus explode + groupBy chain — 3 extra corpus scans
     # for frames that are vocabulary-sized.
-    pair_counts = (
-        pairs.groupBy("w1", "w2")
-        .agg(F.count(F.lit(1)).alias("n_pair"))
-        .localCheckpoint(eager=True)
+    pair_counts, _ = pin(
+        pairs.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("n_pair")),
+        "pmi:pairs",
     )
-
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    uni = (
+    uni, m = pin(
         toks.select(F.explode("tk").alias("w"))
         .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("n_w"))
-        .observe(obs, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
+        .agg(F.count(F.lit(1)).alias("n_w")),
+        "pmi:unigrams",
+        n=F.count(F.lit(1)),
     )
-    # r16: the gate count rides the checkpoint as an observed metric
-    if broadcast_limit is None or obs.get["n"] <= broadcast_limit:
+    if broadcast_limit is None or m["n"] <= broadcast_limit:
         uni = F.broadcast(uni)
 
     # both totals from the materialized count tables: sum(n_w) over the
@@ -213,27 +208,21 @@ def llr_collocations(
     # the total, the gate count and the scoring join — materialize it
     # once (guide §2.4; the gate's count() otherwise re-executes the
     # whole explode chain and the main plan re-runs it per consumer)
-    pc = (
-        pairs.groupBy("w1", "w2")
-        .agg(F.count(F.lit(1)).alias("n_pair"))
-        .localCheckpoint(eager=True)
+    pc, _ = pin(
+        pairs.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("n_pair")),
+        "llr:pairs",
     )
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    # r16: the gate count used to re-execute the w1-margin aggregate
-    # (count + join = 2 passes over pc); the margin is now pinned once
-    # with the count as an observed metric of its materialization
-    first = (
-        pc.groupBy("w1").agg(F.sum("n_pair").alias("r1"))
-        .observe(obs, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
+    # the gate count and the join read the w1 margin: pin it once
+    first, m = pin(
+        pc.groupBy("w1").agg(F.sum("n_pair").alias("r1")),
+        "llr:margin",
+        n=F.count(F.lit(1)),
     )
     second = pc.groupBy("w2").agg(F.sum("n_pair").alias("c1"))
     total = pc.agg(F.sum("n_pair").alias("nn"))
     # same vocabulary-size broadcast gate as bigram_pmi: above the limit
     # the margin joins shuffle and AQE decides
-    if broadcast_limit is None or obs.get["n"] <= broadcast_limit:
+    if broadcast_limit is None or m["n"] <= broadcast_limit:
         first, second = F.broadcast(first), F.broadcast(second)
 
     j = (
@@ -316,45 +305,33 @@ def ngram_novelty(
     # count table first — type/occurrence novelty then read off ONE
     # anti-join of vocabulary-sized frames: count(novel types) and
     # sum(their occurrence counts) are the same integers as the old
-    # per-occurrence anti-join by definition of the grouping.
-    # r16: all five scalar readouts ride the three checkpoint
-    # materializations as observed metrics — zero separate driver
-    # actions (they were 5: three counts + two sum collects)
-    from pyspark.sql import Observation
-
-    obs_train, obs_test, obs_novel = Observation(), Observation(), Observation()
-    train_set = (
-        bigrams(base.where(F.col("id") % holdout_mod != 0))
-        .distinct()
-        .observe(obs_train, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
+    # per-occurrence anti-join by definition of the grouping.  All five
+    # scalar readouts are observed by the three pins.
+    train_set, m_train = pin(
+        bigrams(base.where(F.col("id") % holdout_mod != 0)).distinct(),
+        "novelty:train",
+        n=F.count(F.lit(1)),
     )
-    test_cnt = (
+    test_cnt, m_test = pin(
         bigrams(base.where(F.col("id") % holdout_mod == 0))
         .groupBy("bg")
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .observe(
-            obs_test,
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(F.sum("__n"), F.lit(0)).alias("occ"),
-        )
-        .localCheckpoint(eager=True)
+        .agg(F.count(F.lit(1)).alias("__n")),
+        "novelty:test",
+        n=F.count(F.lit(1)),
+        occ=F.coalesce(F.sum("__n"), F.lit(0)),
     )
-    novel_cnt = (
-        test_cnt.join(train_set, "bg", "left_anti")
-        .observe(
-            obs_novel,
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(F.sum("__n"), F.lit(0)).alias("occ"),
-        )
-        .localCheckpoint(eager=True)
+    _, m_novel = pin(
+        test_cnt.join(train_set, "bg", "left_anti"),
+        "novelty:novel",
+        n=F.count(F.lit(1)),
+        occ=F.coalesce(F.sum("__n"), F.lit(0)),
     )
     spark = df.sparkSession
-    n_train = obs_train.get["n"]
-    n_test = obs_test.get["n"]
-    n_novel = obs_novel.get["n"]
-    occ_test = obs_test.get["occ"]
-    occ_novel = obs_novel.get["occ"]
+    n_train = m_train["n"]
+    n_test = m_test["n"]
+    n_novel = m_novel["n"]
+    occ_test = m_test["occ"]
+    occ_novel = m_novel["occ"]
     return spark.createDataFrame(
         [(
             n_train, n_test, n_novel,

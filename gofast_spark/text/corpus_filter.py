@@ -36,41 +36,6 @@ DEFAULT_RULES = {
 }
 
 
-def stage_boundary(df: DataFrame, *, stage_sink: str | None = None) -> DataFrame:
-    """Executable stage-boundary contract for multi-stage corpus builds
-    (r12 verdict ask #4).
-
-    ``stage_sink=None`` (toy/test default): ``localCheckpoint(eager=True)``
-    — pins partitioning and truncates lineage in one job, but the
-    blocks are EXECUTOR-LOCAL and non-replayable: a lost executor loses
-    the stage.  Fine at sf0.1 on local[32]; wrong for a 1000-executor
-    100-TB build.
-
-    ``stage_sink='<path or warehouse table>'``: write the frame as
-    parquet and read it back — the production layout.  Replayable and
-    fault-tolerant (any executor can re-read any split), auditable (the
-    tagged frame with keep/reason IS the filtering audit artifact), and
-    downstream stages scan a real columnar table, so their predicates
-    (e.g. ``keep = true``) and projections push into the scan instead
-    of filtering runtime blocks.  Values containing a path separator
-    (``/`` — which every URI like ``s3a://...`` or ``file://...`` also
-    contains) are treated as filesystem paths; everything else —
-    including dotted or catalog-qualified identifiers like
-    ``cat.db.tbl`` — becomes a warehouse table via ``saveAsTable``.
-    (A bare ``:`` no longer forces the path branch: catalog-qualified
-    table names must not be silently written as literal parquet
-    directories — r13 judge advice.)
-    """
-    if stage_sink is None:
-        return df.localCheckpoint(eager=True)
-    spark = df.sparkSession
-    if "/" in stage_sink:
-        df.write.mode("overwrite").parquet(stage_sink)
-        return spark.read.parquet(stage_sink)
-    df.write.mode("overwrite").format("parquet").saveAsTable(stage_sink)
-    return spark.table(stage_sink)
-
-
 def corpus_filter(
     df: DataFrame,
     text_col: str,

@@ -41,6 +41,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from gofast_spark.operators.mixture import _U_BUCKETS, uniform_hash
+from gofast_spark.session import pin
 from gofast_spark.text.features import hashed_tf_sparse
 
 _MICRO = 1_000_000
@@ -101,7 +102,6 @@ def dsir_logweights(
     dim: int = 256,
     alpha: float = 1.0,
     llr_micro: bool = False,
-    eager: bool = True,
 ) -> DataFrame:
     """(id, logw) importance log-weights for every raw doc with >= 1
     token (token-less docs have no features, hence no weight — absent,
@@ -114,17 +114,18 @@ def dsir_logweights(
     on the already-computed features).
 
     The raw feature frame feeds the raw distribution, possibly the
-    target distribution, and the weight aggregate; ``eager`` (default)
-    checkpoint-materializes it so the tokenize+hash pass runs once.
+    target distribution, and the weight aggregate; it is pinned so the
+    tokenize+hash pass runs once.
 
     With ``llr_micro`` the output column is ``logw_micro`` (bigint,
     micro-units): an exact integer aggregate, engine-reproducible
     bit-for-bit."""
     if (target is None) == (target_ids is None):
         raise ValueError("pass exactly one of target / target_ids")
-    raw_tf = hashed_tf_sparse(raw, id_col=id_col, text_col=text_col, dim=dim)
-    if eager:
-        raw_tf = raw_tf.localCheckpoint(eager=True)
+    raw_tf, _ = pin(
+        hashed_tf_sparse(raw, id_col=id_col, text_col=text_col, dim=dim),
+        "dsir:raw_tf",
+    )
     if target_ids is not None:
         tgt_tf = raw_tf.join(
             target_ids.select(F.col(id_col).alias("__tid")),
@@ -167,7 +168,6 @@ def dsir_resample(
     dim: int = 256,
     alpha: float = 1.0,
     llr_micro: bool = False,
-    eager: bool = True,
 ) -> DataFrame:
     """Weighted sample WITHOUT replacement of ``k`` raw docs, biased
     toward the target distribution: top-k of ``logw + Gumbel``.
@@ -184,7 +184,6 @@ def dsir_resample(
         dim=dim,
         alpha=alpha,
         llr_micro=llr_micro,
-        eager=eager,
     )
     g = gumbel_noise(id_col, seed=seed)
     if llr_micro:

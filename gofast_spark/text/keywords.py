@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gofast_spark.ml.graph import pagerank
+from gofast_spark.session import pin
 from gofast_spark.text.analysis import EN_STOPWORDS, normalize_text
 
 __all__ = ["textrank_keywords"]
@@ -119,9 +120,9 @@ def rake_keywords(
     # The phrase frame feeds THREE consumers (word stats, the phrase
     # -word join, the phrase-frequency count) plus the broadcast-gate
     # count — and its lineage is the expensive stopword-alternation
-    # regexp pass over the corpus.  Materialize it once so the regex
-    # battery runs one time instead of four (guide §1.2/§2.4).
-    phrases = phrases.localCheckpoint(eager=True)
+    # regexp pass over the corpus.  Pin it so the regex battery runs
+    # one time instead of four (guide §1.2/§2.4).
+    phrases, _ = pin(phrases, "rake:phrases")
 
     words = phrases.select(
         "phrase",
@@ -140,18 +141,11 @@ def rake_keywords(
             * F.lit(1e6) + F.lit(0.5)
         ).cast("bigint").alias("score_u"),
     )
-    # r16: the broadcast-gate count used to re-execute the vocab-sized
-    # aggregate (and the scoring join re-ran it a third time); the
-    # count now rides a checkpoint materialization as an observed
-    # metric — the aggregate runs ONCE
+    # pin the vocab-sized stats: the gate count and the scoring join
+    # would each re-execute the aggregate
     if broadcast_limit is not None:
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        stats = stats.observe(
-            obs, F.count(F.lit(1)).alias("n")
-        ).localCheckpoint(eager=True)
-        if obs.get["n"] <= broadcast_limit:
+        stats, m = pin(stats, "rake:word_stats", n=F.count(F.lit(1)))
+        if m["n"] <= broadcast_limit:
             stats = F.broadcast(stats)
     else:
         stats = F.broadcast(stats)

@@ -37,7 +37,8 @@ def pytest_collection_modifyitems(config, items):
 def spark():
     from gofast_spark import get_session
 
-    s = get_session("gofast-spark-tests", master="local[8]")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "8")
+    s = get_session("gofast-spark-tests", master=f"local[{cpus}]")
     yield s
 
 

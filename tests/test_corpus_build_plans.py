@@ -62,7 +62,7 @@ def test_stage_sink_layout_matches_and_pushes_down(
         # final plan at that boundary — the tagged-stage scan executed
         # during construction.  The pushdown property is then asserted
         # on the same composition the builder ran downstream of the
-        # boundary: stage_boundary returns spark.read.parquet(sink),
+        # boundary: pin(..., sink=) returns spark.read.parquet(sink),
         # and the next stage filters the stored keep boolean.
         back = spark.read.parquet(f"{sink}_tagged").where("keep")
         plan = back._jdf.queryExecution().executedPlan().toString()
@@ -82,39 +82,39 @@ def test_stage_sink_layout_matches_and_pushes_down(
     assert _glob.glob(f"{sink}_tagged/*.parquet")
 
 
-def test_stage_boundary_table_sink(spark, sf_small):
-    """A bare (no separator) stage_sink becomes a warehouse table."""
-    from gofast_spark.text import stage_boundary
+def test_pin_table_sink(spark, sf_small):
+    """A bare (no separator) pin sink becomes a warehouse table."""
+    from gofast_spark.session import pin
 
     df = spark.range(5).selectExpr("id", "id % 2 = 0 AS keep")
-    out = stage_boundary(df, stage_sink="stage_boundary_test_tbl")
+    out, _ = pin(df, "test", sink="pin_sink_test_tbl")
     try:
         assert sorted(r[0] for r in out.where("keep").collect()) == [0, 2, 4]
-        assert spark.catalog.tableExists("stage_boundary_test_tbl")
+        assert spark.catalog.tableExists("pin_sink_test_tbl")
     finally:
-        spark.sql("DROP TABLE IF EXISTS stage_boundary_test_tbl")
+        spark.sql("DROP TABLE IF EXISTS pin_sink_test_tbl")
 
 
-def test_stage_boundary_sink_kind_heuristic(spark, tmp_path):
+def test_pin_sink_kind_heuristic(spark, tmp_path):
     """r13 judge advice: only '/' or a URI scheme prefix selects the
     filesystem-path branch; a bare colon no longer does (so dotted or
     otherwise qualified table identifiers aren't silently written as
     literal parquet directories)."""
-    from gofast_spark.text import stage_boundary
+    from gofast_spark.session import pin
 
     df = spark.range(3).selectExpr("id")
     # URI scheme -> path branch
     uri = (tmp_path / "stage_uri").as_uri()  # file:///...
-    out = stage_boundary(df, stage_sink=uri)
+    out, _ = pin(df, "test", sink=uri)
     assert sorted(r[0] for r in out.collect()) == [0, 1, 2]
     import glob as _glob
 
     assert _glob.glob(str(tmp_path / "stage_uri" / "*.parquet"))
     # qualified identifier (spark_catalog.default.tbl) -> table branch
-    name = "spark_catalog.default.stage_boundary_qual_tbl"
+    name = "spark_catalog.default.pin_sink_qual_tbl"
     try:
-        out2 = stage_boundary(df, stage_sink=name)
+        out2, _ = pin(df, "test", sink=name)
         assert sorted(r[0] for r in out2.collect()) == [0, 1, 2]
-        assert spark.catalog.tableExists("stage_boundary_qual_tbl")
+        assert spark.catalog.tableExists("pin_sink_qual_tbl")
     finally:
-        spark.sql("DROP TABLE IF EXISTS default.stage_boundary_qual_tbl")
+        spark.sql("DROP TABLE IF EXISTS default.pin_sink_qual_tbl")

@@ -1,0 +1,147 @@
+"""Contract of ``session.pin``, the one eager-materialization helper:
+job count, job labels, description restore, observed metrics on empty
+input, and the build-job counts of the loop operators routed through it."""
+
+from __future__ import annotations
+
+from pyspark.sql import functions as F
+
+from gofast_spark.session import pin
+
+
+def _dag(spark):
+    return spark.sparkContext._jsc.sc().dagScheduler()
+
+
+def _jobs(spark, fn):
+    """(result of fn(), ids of the Spark jobs it launched)."""
+    dag = _dag(spark)
+    j0 = dag.numTotalJobs()
+    out = fn()
+    return out, range(j0, dag.numTotalJobs())
+
+
+def _descriptions(spark, job_ids):
+    jsc = spark.sparkContext._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    store = jsc.statusStore()
+    out = []
+    for j in job_ids:
+        d = store.job(j).description()
+        out.append(d.get() if d.isDefined() else None)
+    return out
+
+
+def _frame(spark):
+    # one shuffle, so the pin runs more than one job under AQE
+    return spark.range(200).groupBy((F.col("id") % 7).alias("k")).agg(
+        F.sum("id").alias("s")
+    )
+
+
+def test_observed_pin_costs_no_extra_job(spark):
+    _, bare = _jobs(spark, lambda: _frame(spark).localCheckpoint(eager=True))
+    (out, m), pinned = _jobs(
+        spark,
+        lambda: pin(
+            _frame(spark), "t:obs", n=F.count(F.lit(1)), total=F.sum("s")
+        ),
+    )
+    assert len(pinned) <= len(bare)
+    assert m == {"n": 7, "total": sum(range(200))}
+    assert out.count() == 7
+
+
+def test_pin_jobs_carry_label(spark):
+    _, ids = _jobs(spark, lambda: pin(_frame(spark), "t:label", n=F.count("*")))
+    assert len(ids) >= 1
+    assert _descriptions(spark, ids) == ["pin:t:label"] * len(ids)
+
+
+def test_pin_restores_previous_description(spark):
+    sc = spark.sparkContext
+    key = "spark.job.description"
+    try:
+        sc.setJobDescription("caller")
+        pin(spark.range(5), "t:restore")
+        assert sc.getLocalProperty(key) == "caller"
+        sc.setJobDescription(None)
+        pin(spark.range(5), "t:restore")
+        assert sc.getLocalProperty(key) is None
+    finally:
+        sc.setJobDescription(None)
+
+
+def test_pin_restores_description_inside_foreach_batch(
+    spark, tmp_path, monkeypatch
+):
+    import gofast_spark.streaming.ops as ops
+
+    src = str(tmp_path / "src")
+    spark.range(20).write.parquet(src)
+    seen = []
+
+    def spy(df, label, **kw):
+        sc = df.sparkSession.sparkContext
+        before = sc.getLocalProperty("spark.job.description")
+        out = pin(df, label, **kw)
+        seen.append((before, sc.getLocalProperty("spark.job.description")))
+        return out
+
+    monkeypatch.setattr(ops, "pin", spy)
+    sdf = (
+        spark.readStream.schema("id long")
+        .parquet(src)
+        .groupBy((F.col("id") % 3).alias("k"))
+        .count()
+    )
+    out = ops.run_available_now(sdf, mode="complete")
+    assert sorted(r["count"] for r in out.collect()) == [6, 7, 7]
+    assert seen
+    for before, after in seen:
+        # the stream's own batch description, put back after the pin
+        assert before is not None and not before.startswith("pin:")
+        assert after == before
+
+
+def test_pin_empty_input_metrics(spark):
+    empty = spark.range(10).where("id < 0")
+    out, m = pin(empty, "t:empty", n=F.count(F.lit(1)), s=F.sum("id"))
+    assert m == {"n": 0, "s": None}
+    assert out.count() == 0
+
+
+def test_pin_without_observed_returns_empty_metrics(spark):
+    _, m = pin(spark.range(3), "t:bare")
+    assert m == {}
+
+
+def test_loop_operator_build_jobs_unchanged(spark):
+    """Build-job counts of three pinned loop operators on tiny inputs,
+    as measured before they were routed through ``pin``."""
+    from gofast_spark.dedup.cluster import connected_components
+    from gofast_spark.ml.graph import kcore_members
+    from gofast_spark.operators.funnel import funnel
+
+    steps = ["view", "cart", "buy"]
+    ev = spark.createDataFrame(
+        [(u, t, s) for u in range(6) for t, s in enumerate(steps[: 1 + u % 3])],
+        "user long, ts long, type string",
+    ).withColumn("ts", F.col("ts").cast("timestamp"))
+    edges = spark.createDataFrame(
+        [(0, 1), (1, 2), (2, 0), (2, 3), (3, 4)], "src long, dst long"
+    )
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11)], "id_a long, id_b long"
+    )
+    fun, ids = _jobs(spark, lambda: funnel(ev, "user", "ts", "type", steps))
+    assert len(ids) == 8
+    assert [r["n_users"] for r in fun.orderBy("step_idx").collect()] == [6, 4, 2]
+    core, ids = _jobs(spark, lambda: kcore_members(edges, 2))
+    assert len(ids) == 17
+    assert sorted(r["node"] for r in core.collect()) == [0, 1, 2]
+    cc, ids = _jobs(spark, lambda: connected_components(pairs))
+    assert len(ids) == 24
+    assert sorted((r["id"], r["cluster_id"]) for r in cc.collect()) == [
+        (1, 1), (2, 1), (3, 1), (4, 1), (5, 1), (10, 10), (11, 10)
+    ]
