@@ -13,7 +13,8 @@ from gofast_spark.operators.bloom import bloom_build, bloom_might_contain, bloom
 from gofast_spark.operators.merge_upsert import merge_upsert, source_col, target_col
 from gofast_spark.operators.range_join import range_join
 from gofast_spark.operators.scd import scd2_as_of, scd2_init, scd2_merge
-from gofast_spark.operators.sessionize import compact_files, session_stats, sessionize
+from gofast_spark.operators.maintenance import compact_files
+from gofast_spark.operators.sessionize import session_stats, sessionize
 from gofast_spark.operators.linkage import blocked_levenshtein_pairs
 from gofast_spark.operators.mixture import (
     mixture_rates,

@@ -1,4 +1,4 @@
-"""Batch sessionization (gaps-and-islands) and small-file compaction.
+"""Batch sessionization (gaps-and-islands).
 
 ``sessionize`` is the batch twin of the streaming session window
 (streaming/ops.sessionized_aggregate): assign a session id to every
@@ -8,11 +8,6 @@ event exceeds the timeout.  The classic gaps-and-islands rewrite: a
 Both windows partition BY KEY, so the work distributes across keys; a
 single key's history still sorts in one partition (per-key history is
 the irreducible unit of sessionization).
-
-``compact_files`` addresses the small-files problem: a long-running
-pipeline that appends micro-batches leaves thousands of KB-sized
-parquet files whose per-file open/footer overhead dominates scans.
-Rewrite the dataset into ~target-sized files with one job.
 """
 
 from __future__ import annotations
@@ -69,56 +64,6 @@ def session_stats(
             - F.unix_timestamp(F.min(ts_col))
         ).alias("duration_sec"),
     )
-
-
-def compact_files(
-    spark,
-    path: str,
-    *,
-    target_file_mb: int = 128,
-    format: str = "parquet",
-) -> int:
-    """Rewrite a parquet dataset into ~``target_file_mb`` files (by
-    current on-disk size) and return the file count written.
-
-    LOCAL FILESYSTEM ONLY (sizing walks the directory and the final
-    swap uses renames): a remote URI (s3://, hdfs://) would size to 0,
-    funnel everything through one task, and fail the swap — rejected up
-    front instead.  Swap order is crash-safe: the old layout is renamed
-    aside FIRST, then the new layout renamed in, then the old deleted —
-    a kill at any point leaves a complete dataset at either ``path`` or
-    ``path + '__old'`` (never nothing, never a mix)."""
-    import math
-    import os
-    import shutil
-
-    if "://" in path:
-        raise ValueError(
-            "compact_files operates on local paths only (sizing and the "
-            f"rename swap are local filesystem operations): {path!r}"
-        )
-    size = 0
-    for root, _, files in os.walk(path):
-        size += sum(
-            os.path.getsize(os.path.join(root, f))
-            for f in files
-            if not f.startswith((".", "_"))
-        )
-    n = max(1, math.ceil(size / (target_file_mb * 1024 * 1024)))
-    base = path.rstrip("/")
-    tmp, old = base + "__compacting", base + "__old"
-    (
-        spark.read.format(format)
-        .load(path)
-        .repartition(n)
-        .write.format(format)
-        .mode("overwrite")
-        .save(tmp)
-    )
-    os.rename(base, old)
-    os.rename(tmp, base)
-    shutil.rmtree(old)
-    return n
 
 
 def audience_overlap(

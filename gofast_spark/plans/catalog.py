@@ -28,8 +28,8 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLE_SQL: dict[str, str] = {}
 
 
-def query(name: str, oracle: str | None = None):
-    """Register a catalog entry."""
+def query(name: str, oracle: str):
+    """Register a catalog entry with its DuckDB oracle SQL."""
 
     def deco(fn):
         # a second registration under an existing name would silently
@@ -38,8 +38,7 @@ def query(name: str, oracle: str | None = None):
         if name in QUERIES:
             raise ValueError(f"duplicate catalog entry name: {name!r}")
         QUERIES[name] = fn
-        if oracle is not None:
-            ORACLE_SQL[name] = oracle
+        ORACLE_SQL[name] = oracle
         return fn
 
     return deco
@@ -918,7 +917,7 @@ from gofast_spark.plans import catalog_windows  # noqa: E402,F401  (registration
 # constant was last folded).  From r13 the ordering is DERIVED at import
 # from the committed CORRECTNESS_r*.json artifacts themselves:
 #
-#   1. never-green oracle-backed entries lead, in registration order —
+#   1. never-green entries lead, in registration order —
 #      no window slot is ever wasted while an entry awaits its first
 #      driver check;
 #   2. remaining slots fill with re-verification picks: driver-green
@@ -927,10 +926,7 @@ from gofast_spark.plans import catalog_windows  # noqa: E402,F401  (registration
 #      state, every entry cycles through the window every
 #      ceil(n_green / 50) ~ 11 rounds;
 #   3. overflow never-green entries queue contiguously right after the
-#      window (first in line for the next rotation);
-#   4. parked rows-only entries (none since r14 — the lot is empty)
-#      would sit at the very END of the ordering, never consuming a
-#      slot.
+#      window (first in line for the next rotation).
 #
 # The policy is a tested invariant (tests/test_driver_window.py
 # recomputes the expected order from the same artifacts and from a pure
@@ -939,7 +935,6 @@ from gofast_spark.plans import catalog_windows  # noqa: E402,F401  (registration
 # rotates the window the moment it lands on disk.
 # ---------------------------------------------------------------------------
 
-_WINDOW_SIZE = 50
 _REPO_ROOT = os.path.dirname(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 )
@@ -997,34 +992,18 @@ def _driver_green_history(repo_root: str = _REPO_ROOT) -> dict[str, int]:
 
 
 def _catalog_order(
-    registration: list[str],
-    oracle_backed: set[str],
-    parked: list[str],
-    last_green: dict[str, int],
-    window_size: int = _WINDOW_SIZE,
+    registration: list[str], last_green: dict[str, int]
 ) -> list[str]:
-    """Pure ordering policy (unit-testable without touching disk)."""
-    parked_set = set(parked)
-    checkable = [
-        n for n in registration if n in oracle_backed and n not in parked_set
-    ]
-    never = [n for n in checkable if n not in last_green]
+    """Pure ordering policy (unit-testable without touching disk):
+    never-green entries in registration order, then driver-green ones
+    by (last-green round, name) — any window of the first N entries
+    meets points 1-3 above."""
+    never = [n for n in registration if n not in last_green]
     reverify = sorted(
-        (n for n in checkable if n in last_green),
+        (n for n in registration if n in last_green),
         key=lambda n: (last_green[n], n),
     )
-    window = (never + reverify)[:window_size]
-    placed = set(window)
-    tail_never = [n for n in never if n not in placed]
-    placed.update(tail_never)
-    tail_reverify = [n for n in reverify if n not in placed]
-    placed.update(tail_reverify)
-    placed.update(parked_set)
-    # rows-only entries that are not permanently parked (none today) keep
-    # registration order between the checkable tail and the parked block
-    tail_rest = [n for n in registration if n not in placed]
-    parked_present = [n for n in parked if n in registration]
-    return window + tail_never + tail_reverify + tail_rest + parked_present
+    return never + reverify
 
 
 # Cumulative union of driver-green entries (hash_match=true in any
@@ -1290,27 +1269,6 @@ _DRIVER_VERIFIED = {
     "zorder_write_morton_orders"
 }
 
-# Rows-only parking lot — EMPTY since r14: every catalog entry is now
-# oracle-backed.  History of the four entries that were parked here
-# (r8 adjudication) and how each was converted:
-#   kernel_pca_embeddings (r13) — deterministic fixed-iteration
-#     power-iteration Nystrom variant (ml/dimensionality.py
-#     kernel_pca_power); oracle replays the full pipeline in SQL.
-#   linkage_matrix_nation (r13) — natural-key leaf ordering + a fully
-#     unrolled 24-step argmin-merge SQL replay (engine-exact heights).
-#   embedding_ivf_kmeans_topk (r14) — the Lloyd coarse quantizer swapped
-#     for the bit-replayable integer micro-unit k-means
-#     (ml/kmeans_exact.py) with md5-seeded init; the oracle replays
-#     train/assign/probe/re-rank end to end (plans/catalog_llm.py).
-#   dca_segment_status_orders (r14) — the J x J Gram eigh swapped for
-#     fixed-iteration power iteration + deflation from the sorted-
-#     species ramp, and sketch detrend boundaries for an exact ntile
-#     (stats/ordination.py dca_analysis_power).
-# The list stays (empty) because _catalog_order's policy contract and
-# tests reference it; a future genuinely-nondeterministic entry would
-# re-enter here with a named adjudication.
-_NO_ORACLE_PARKED: list[str] = []
-
 # Registration order snapshot (pre-rotation), for tests that derive the
 # expected window independently.
 _REGISTRATION_ORDER: tuple[str, ...] = ()
@@ -1319,14 +1277,9 @@ _REGISTRATION_ORDER: tuple[str, ...] = ()
 def _rotate_catalog() -> None:
     global _REGISTRATION_ORDER
     _REGISTRATION_ORDER = tuple(QUERIES)
-    order = _catalog_order(
-        list(QUERIES),
-        set(ORACLE_SQL),
-        _NO_ORACLE_PARKED,
-        _driver_green_history(),
-    )
+    order = _catalog_order(list(QUERIES), _driver_green_history())
     q = {n: QUERIES[n] for n in order}
-    o = {n: ORACLE_SQL[n] for n in order if n in ORACLE_SQL}
+    o = {n: ORACLE_SQL[n] for n in order}
     QUERIES.clear()
     QUERIES.update(q)
     ORACLE_SQL.clear()

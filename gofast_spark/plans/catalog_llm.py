@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gofast_spark.dedup.minhash import MINHASH_COEFFS, MINHASH_P
-from gofast_spark.plans.catalog import _t, query
+from gofast_spark.plans.catalog import ORACLE_SQL, _t, query
 from gofast_spark.session import pin
 from gofast_spark.sim.lsh import hyperplane_weight
 from gofast_spark.text.analysis import EN_STOPWORDS, LANG_STOPWORDS
@@ -1180,10 +1180,28 @@ def _pii_input_sql() -> str:
     )
 
 
-@query(
-    "pii_redact_contacts",
-    oracle=None,  # filled below — needs pii_oracle_sql at import time
-)
+def _pii_oracle_sql() -> str:
+    from gofast_spark.text.pii import PII_PATTERNS, pii_oracle_sql
+
+    inp = _pii_input_sql()
+    # staged counts: count each class on the text with earlier classes
+    # already redacted (mirrors text.pii.pii_profile)
+    stages, cur = [], inp
+    for name, pat, rep in PII_PATTERNS:
+        sql_pat = pat.replace("'", "''")
+        stages.append(
+            f"len(regexp_extract_all({cur}, '{sql_pat}')) AS n_{name}"
+        )
+        cur = f"regexp_replace({cur}, '{sql_pat}', '{rep}', 'g')"
+    return f"""
+    SELECT c_custkey,
+           {pii_oracle_sql(inp)} AS redacted,
+           {", ".join(stages)}
+    FROM customer
+    """
+
+
+@query("pii_redact_contacts", oracle=_pii_oracle_sql())
 def pii_redact_contacts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PII redaction: synthesize a contact string per customer (email +
     IP + SSN-shaped id), scrub it with the portable regex chain
@@ -1207,31 +1225,6 @@ def pii_redact_contacts(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_ipv4").alias("n_ipv4"),
         F.col("n_phone").alias("n_phone"),
     )
-
-
-def _register_pii_oracle() -> None:
-    from gofast_spark.plans.catalog import ORACLE_SQL
-    from gofast_spark.text.pii import PII_PATTERNS, pii_oracle_sql
-
-    inp = _pii_input_sql()
-    # staged counts: count each class on the text with earlier classes
-    # already redacted (mirrors text.pii.pii_profile)
-    stages, cur = [], inp
-    for name, pat, rep in PII_PATTERNS:
-        sql_pat = pat.replace("'", "''")
-        stages.append(
-            f"len(regexp_extract_all({cur}, '{sql_pat}')) AS n_{name}"
-        )
-        cur = f"regexp_replace({cur}, '{sql_pat}', '{rep}', 'g')"
-    ORACLE_SQL["pii_redact_contacts"] = f"""
-    SELECT c_custkey,
-           {pii_oracle_sql(inp)} AS redacted,
-           {", ".join(stages)}
-    FROM customer
-    """
-
-
-_register_pii_oracle()
 
 
 # --- product-quantization ANN ---------------------------------------------
@@ -4049,7 +4042,12 @@ def corpus_build_containment_survivors(
     return _containment_build(spark, sf_dir, stage_sink=None)
 
 
-@query("corpus_build_persisted_stage_survivors")
+# the persisted-stage entry must hash-match the SAME oracle as the toy
+# layout — register it by reference so the two can never drift
+@query(
+    "corpus_build_persisted_stage_survivors",
+    oracle=ORACLE_SQL["corpus_build_containment_survivors"],
+)
 def corpus_build_persisted_stage_survivors(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -4060,9 +4058,7 @@ def corpus_build_persisted_stage_survivors(
     next stage reads it back, so the keep-predicate and the
     three-column projection push into a real columnar scan — the
     replayable, fault-tolerant layout a 100-TB build runs — and the
-    result must still hash-match the toy-layout oracle byte-for-byte.
-    Oracle registered below via the shared registry (identical SQL to
-    corpus_build_containment_survivors)."""
+    result must still hash-match the toy-layout oracle byte-for-byte."""
     import shutil
     import tempfile
 
@@ -4075,15 +4071,6 @@ def corpus_build_persisted_stage_survivors(
         return pin(out, "persisted_stage:result")[0]
     finally:
         shutil.rmtree(base, ignore_errors=True)
-
-
-# the persisted-stage entry must hash-match the SAME oracle as the toy
-# layout — register it by reference so the two can never drift
-from gofast_spark.plans.catalog import ORACLE_SQL as _REG  # noqa: E402
-
-_REG["corpus_build_persisted_stage_survivors"] = _REG[
-    "corpus_build_containment_survivors"
-]
 
 
 def _containment_build(

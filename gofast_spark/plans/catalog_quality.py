@@ -796,8 +796,8 @@ def observed_report_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     decimal128(38,0) against Spark's bigint — the only int-vs-decimal
     skew among all oracles, masked locally by Python's
     ``Decimal(0) == 0`` equality.  Both oracles now CAST the sum back
-    to BIGINT, and ``tests/test_type_parity.py`` sweeps the whole
-    catalog so the class can never pass the local gate again.  The
+    to BIGINT, and ``tests/oracle_util.compare`` checks every entry's
+    type classes so the class can never pass the local gate again.  The
     entry stays a PURE plan (no Observation/write/collect); the
     zero-extra-scan observation's equivalence to this relational
     truth is certified by ``tests/test_hardening_r10.py

@@ -53,42 +53,16 @@ def psi_report(
     if bins < 2 or not hi > lo:
         raise ValueError("need bins >= 2 and hi > lo")
     width = (hi - lo) / bins
-    s = float(smooth)
 
-    def side(df: DataFrame, name: str) -> DataFrame:
+    def counts(df: DataFrame) -> DataFrame:
         x = F.col(col).cast("double")
         return (
             df.where(x.isNotNull())
             .groupBy(_bin(x, lo, width, bins).alias("bin"))
-            .agg(F.count(F.lit(1)).alias(f"n_{name}"))
+            .agg(F.count(F.lit(1)).alias("n"))
         )
-    a = side(ref, "ref")
-    b = side(cur, "cur")
-    grid = ref.sparkSession.range(bins).select(
-        F.col("id").cast("int").alias("bin")
-    )
-    joined = (
-        grid.join(a, "bin", "left")
-        .join(b, "bin", "left")
-        .select(
-            "bin",
-            F.coalesce(F.col("n_ref"), F.lit(0)).alias("n_ref"),
-            F.coalesce(F.col("n_cur"), F.lit(0)).alias("n_cur"),
-        )
-    )
-    tot = joined.agg(
-        F.sum("n_ref").alias("__tr"), F.sum("n_cur").alias("__tc")
-    )
-    p = (F.col("n_ref") + F.lit(s)) / (F.col("__tr") + F.lit(s) * bins)
-    q = (F.col("n_cur") + F.lit(s)) / (F.col("__tc") + F.lit(s) * bins)
-    return (
-        joined.crossJoin(F.broadcast(tot))
-        .agg(
-            F.sum((p - q) * F.log(p / q)).alias("psi"),
-            F.max("__tr").alias("n_ref"),
-            F.max("__tc").alias("n_cur"),
-        )
-    )
+
+    return psi_from_counts(counts(ref), counts(cur), bins=bins, smooth=smooth)
 
 
 def psi_by_group(

@@ -17,8 +17,7 @@ SF_MED = os.environ.get("SPARK_GRAFT_SF_MED", "/root/testdata/sf0.01")
 # measured slow set (see tests/slow_tests.txt header): tagged `slow`
 # here and deselected by pytest.ini's default `-m` expression so the
 # default suite fits the driver's verify window; `pytest -m slow` runs
-# them, and the full-catalog oracle sweep covers their correctness
-# surface after every change
+# them
 _SLOW_FILE = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                           "slow_tests.txt")
 with open(_SLOW_FILE) as _f:

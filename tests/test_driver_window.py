@@ -3,7 +3,7 @@
 _DRIVER_VERIFIED must equal the union of hash_match=true entries across
 the committed CORRECTNESS_r*.json files — deriving it in a test makes
 hand-maintenance drift fail loudly (an entry wrongly listed as verified
-would otherwise be parked outside the driver window indefinitely)."""
+would otherwise sit outside the driver window indefinitely)."""
 
 from __future__ import annotations
 
@@ -60,46 +60,22 @@ def test_driver_verified_matches_correctness_files():
     assert not unbacked, f"_DRIVER_VERIFIED claims never-green: {sorted(unbacked)}"
 
 
-def test_window_is_oracle_backed_and_parked_entries_last():
-    from gofast_spark.plans.catalog import (
-        _NO_ORACLE_PARKED,
-        ORACLE_SQL,
-        QUERIES,
-    )
+def test_every_entry_is_oracle_backed():
+    from gofast_spark.plans.catalog import ORACLE_SQL, QUERIES
 
-    names = list(QUERIES)
-    window = names[:50]
-    missing = [n for n in window if n not in ORACLE_SQL]
-    assert not missing, f"rows-only entries inside the driver window: {missing}"
-    # parked rows-only entries sit at the very end of the ordering
-    # (names[-0:] would be the whole list — guard the empty-lot case,
-    # which is the steady state since r14)
-    parked_present = [n for n in _NO_ORACLE_PARKED if n in QUERIES]
-    if parked_present:
-        assert names[-len(parked_present):] == parked_present
-    else:
-        # every registered entry must then be oracle-backed
-        assert all(n in ORACLE_SQL for n in names)
+    assert list(ORACLE_SQL) == list(QUERIES)
 
 
 def test_never_green_entries_lead_the_window():
     """No window slot is wasted on an already-verified entry, and any
-    never-green oracle entries that overflow the 50-slot window queue
+    never-green entries that overflow the 50-slot window queue
     contiguously right after it (first in line for the next rotation)."""
-    from gofast_spark.plans.catalog import (
-        _NO_ORACLE_PARKED,
-        ORACLE_SQL,
-        QUERIES,
-    )
+    from gofast_spark.plans.catalog import QUERIES
 
     derived = _derived_green_union()
     names = list(QUERIES)
     window = names[:50]
-    never = [
-        n
-        for n in names
-        if n not in derived and n in ORACLE_SQL and n not in _NO_ORACLE_PARKED
-    ]
+    never = [n for n in names if n not in derived]
     overflow = [n for n in never if n not in window]
     # A green entry in the window is a WASTED slot only when it displaces
     # a never-green entry (overflow non-empty).  When never-green entries
@@ -142,29 +118,21 @@ def test_window_matches_derived_policy():
     """r12 verdict ask #2: the rotation policy is a tested invariant.
 
     The catalog ordering must equal the pure policy function applied to
-    (registration order, oracle set, parked list, green history) — i.e.
-    never-green entries lead in registration order, remaining window
-    slots go to the stalest driver-green entries by (last-green round
-    ASC, name ASC), never-green overflow queues contiguously after the
-    window, and parked rows-only entries sit at the very end.  Because
+    (registration order, green history) — i.e. never-green entries lead
+    in registration order, remaining window slots go to the stalest
+    driver-green entries by (last-green round ASC, name ASC), and
+    never-green overflow queues contiguously after the window.  Because
     the ordering is DERIVED at import from the CORRECTNESS artifacts,
     the old by-design start-of-round stale-window alarm can no longer
     fire: a new CORRECTNESS file rotates the window when it lands."""
     from gofast_spark.plans.catalog import (
         _catalog_order,
-        _NO_ORACLE_PARKED,
         _REGISTRATION_ORDER,
-        ORACLE_SQL,
         QUERIES,
     )
 
     assert sorted(_REGISTRATION_ORDER) == sorted(QUERIES)
-    expected = _catalog_order(
-        list(_REGISTRATION_ORDER),
-        set(ORACLE_SQL),
-        _NO_ORACLE_PARKED,
-        _green_history(),
-    )
+    expected = _catalog_order(list(_REGISTRATION_ORDER), _green_history())
     assert list(QUERIES) == expected
 
 
@@ -173,20 +141,13 @@ def test_reverify_slots_are_stalest_greens():
     stalest driver-green entries, ordered (last-green round ASC, name
     ASC) — the zero-queue steady-state rotation: ~50 re-proofs per round
     cycles all ~508 green entries every ~11 rounds."""
-    from gofast_spark.plans.catalog import _NO_ORACLE_PARKED, ORACLE_SQL, QUERIES
+    from gofast_spark.plans.catalog import QUERIES
 
     last = _green_history()
     names = list(QUERIES)
     window = names[:50]
     fillers = [n for n in window if n in last]
-    eligible = sorted(
-        (
-            n
-            for n in names
-            if n in last and n in ORACLE_SQL and n not in _NO_ORACLE_PARKED
-        ),
-        key=lambda n: (last[n], n),
-    )
+    eligible = sorted((n for n in names if n in last), key=lambda n: (last[n], n))
     assert fillers == eligible[: len(fillers)]
 
 
@@ -199,19 +160,17 @@ def test_zero_queue_policy_pure():
     from gofast_spark.plans.catalog import _catalog_order
 
     names = [f"e{i:03d}" for i in range(120)]
-    oracle = set(names)
     last = {n: 1 + (i % 3) for i, n in enumerate(names)}  # rounds 1..3
-    order = _catalog_order(names, oracle, [], last, window_size=50)
+    order = _catalog_order(names, last)
     expected = sorted(names, key=lambda n: (last[n], n))
     assert order == expected
-    # and with a parked entry + a never-green entry mixed in
+    # and with a never-green entry mixed in
     last2 = dict(last)
     del last2["e007"]  # never green -> must lead
-    order2 = _catalog_order(names, oracle, ["e005"], last2, window_size=50)
+    order2 = _catalog_order(names, last2)
     assert order2[0] == "e007"
-    assert order2[-1] == "e005"
-    rest = [n for n in names if n not in ("e005", "e007")]
-    assert order2[1:-1] == sorted(rest, key=lambda n: (last2[n], n))
+    rest = [n for n in names if n != "e007"]
+    assert order2[1:] == sorted(rest, key=lambda n: (last2[n], n))
 
 
 def test_green_history_fails_loudly(tmp_path):
@@ -236,12 +195,11 @@ def test_green_history_fails_loudly(tmp_path):
 
 def test_catalog_order_properties():
     """Property test over the pure ordering policy: for random
-    registration orders, oracle subsets, parked lists, and green
-    histories, the derived order must satisfy every invariant the
-    driver contract depends on — a permutation of the input, never
-    -green entries leading in registration order, window fillers =
-    stalest greens by (round, name), never-green overflow contiguous
-    after the window, parked entries last."""
+    registration orders and green histories, the derived order must
+    satisfy every invariant the driver contract depends on — a
+    permutation of the input, never-green entries leading in
+    registration order, window fillers = stalest greens by (round,
+    name), never-green overflow contiguous after the window."""
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
@@ -252,32 +210,17 @@ def test_catalog_order_properties():
     def run(data):
         n = data.draw(st.integers(min_value=0, max_value=120))
         names = [f"e{i:03d}" for i in range(n)]
-        oracle = set(data.draw(st.lists(st.sampled_from(names or ["x"]))))
-        oracle &= set(names)
-        parked_pool = [m for m in names if m not in oracle] or []
-        parked = data.draw(
-            st.lists(st.sampled_from(parked_pool), unique=True)
-            if parked_pool
-            else st.just([])
-        )
         greens = {
             m: data.draw(st.integers(min_value=1, max_value=9))
             for m in names
             if data.draw(st.booleans())
         }
         w = data.draw(st.integers(min_value=1, max_value=60))
-        order = _catalog_order(names, oracle, parked, greens, window_size=w)
+        order = _catalog_order(names, greens)
         assert sorted(order) == sorted(names)  # permutation
-        parked_present = [m for m in parked if m in names]
-        if parked_present:
-            assert order[-len(parked_present):] == parked_present
-        checkable = [
-            m for m in names if m in oracle and m not in set(parked)
-        ]
-        never = [m for m in checkable if m not in greens]
+        never = [m for m in names if m not in greens]
         reverify = sorted(
-            (m for m in checkable if m in greens),
-            key=lambda m: (greens[m], m),
+            (m for m in names if m in greens), key=lambda m: (greens[m], m)
         )
         expect_head = (never + reverify)[:w]
         assert order[: len(expect_head)] == expect_head
@@ -297,6 +240,6 @@ def test_duplicate_registration_raises():
 
     with pytest.raises(ValueError, match="duplicate catalog entry"):
 
-        @query("flagship_revenue_by_region")
+        @query("flagship_revenue_by_region", oracle="SELECT 1")
         def _clash(spark, sf_dir):  # pragma: no cover
             raise AssertionError

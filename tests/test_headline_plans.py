@@ -1,30 +1,19 @@
-"""Blanket plan invariants over every headline bench query: no
-cartesian products and no row-at-a-time Python UDFs anywhere in the
-set the benchmark advertises (audit_plan generalizes the spot checks
-in test_plans.py / test_plans_r6b.py)."""
+"""Plan invariants over every headline bench query: no cartesian
+product and no row-at-a-time Python UDF in the executed plan.
+
+This reports the ``plan`` check of ``tests/oracle_util.catalog_checks``,
+so it reads the same build as ``test_oracle_match`` and rebuilds nothing.
+"""
 
 from __future__ import annotations
 
 import pytest
 
-from gofast_spark.plans.audit import audit_plan
-from gofast_spark.plans.catalog import QUERIES
-
-# streaming entries execute their micro-batch drain on invocation and
-# return a memory-sink table (nothing left to audit); the two dedicated
-# streaming tests cover them
 import bench
-
-_BATCH_HEADLINE = [
-    n
-    for n in bench.HEADLINE
-    if n in QUERIES
-    and n not in ("streaming_window_counts", "stream_token_counts_documents")
-]
+from gofast_spark.plans.catalog import QUERIES
+from tests.oracle_util import assert_passed, catalog_checks
 
 
-@pytest.mark.parametrize("name", _BATCH_HEADLINE)
+@pytest.mark.parametrize("name", [n for n in bench.HEADLINE if n in QUERIES])
 def test_headline_no_cartesian_no_row_udfs(spark, sf_small, name):
-    a = audit_plan(QUERIES[name](spark, sf_small))
-    assert a["cartesian_joins"] == 0, f"{name} plans a cartesian product"
-    assert a["python_row_udfs"] == 0, f"{name} uses a row-at-a-time UDF"
+    assert_passed(catalog_checks(spark, name, sf_small), "plan")

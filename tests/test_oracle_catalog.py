@@ -1,13 +1,26 @@
-"""Differential correctness: every catalog query with an oracle must match
-DuckDB at sf0.001 (fast) — the driver repeats this at sf0.01.
+"""Differential correctness: every catalog entry must pass
+``tests/oracle_util.compare`` at sf0.001 — the driver repeats the value
+check at sf0.01.  ``compare`` builds and collects the entry once and
+checks that one frame three ways (``tests/test_type_parity.py`` and
+``tests/test_headline_plans.py`` report checks 2 and 3 of the same build
+on their own):
+
+1. values: column names, row count and order-insensitive rows match
+   the DuckDB oracle;
+2. type classes: each Spark column's class matches the oracle's
+   DuckDB Arrow schema (decimal-vs-float is the one accepted skew);
+3. plan invariants: the executed plan has no ``CartesianProduct`` and
+   no ``BatchEvalPython`` (row-at-a-time Python UDF).
 
 Sweep artifact (r13 verdict ask #6): when ``SPARK_GRAFT_SWEEP_OUT`` names
 a file, the run persists one JSON object per entry —
 ``{"<entry>": {"match": bool, "sf_dir": ..., "checked_at": ...}}`` — so a
 future judge can distinguish "stale driver green, fresh local green" from
-"stale everything" without re-running the sweep.  The round-close ritual
-sets it for the strict sf0.01 pass and commits the file next to
-``bench_result.json``.
+"stale everything" without re-running the sweep.  The committed
+``LOCAL_SWEEP.json`` comes from the sf0.01 run::
+
+    SPARK_GRAFT_SF_SMALL=<testdata>/sf0.01 \\
+        SPARK_GRAFT_SWEEP_OUT=LOCAL_SWEEP.json pytest tests/test_oracle_catalog.py
 """
 
 from __future__ import annotations
@@ -16,10 +29,13 @@ import json
 import os
 import time
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import functions as F
 
-from gofast_spark.plans.catalog import ORACLE_SQL, QUERIES
-from tests.oracle_util import compare
+from gofast_spark.plans.catalog import QUERIES
+from tests.oracle_util import assert_passed, catalog_checks, compare
 
 _SWEEP_OUT = os.environ.get("SPARK_GRAFT_SWEEP_OUT")
 _RESULTS: dict[str, dict] = {}
@@ -33,34 +49,74 @@ def _persist_sweep():
             json.dump(dict(sorted(_RESULTS.items())), fh, indent=1)
 
 
-def _record(name: str, match: bool, sf_dir: str, kind: str) -> None:
+def _record(name: str, match: bool, sf_dir: str) -> None:
     if _SWEEP_OUT:
         _RESULTS[name] = {
             "match": match,
-            "kind": kind,
             "sf_dir": sf_dir,
             "checked_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         }
 
 
-@pytest.mark.parametrize("name", sorted(ORACLE_SQL))
+@pytest.mark.parametrize("name", sorted(QUERIES))
 def test_oracle_match(spark, sf_small, name):
     try:
-        compare(spark, name, sf_small, QUERIES[name], ORACLE_SQL[name])
+        assert_passed(catalog_checks(spark, name, sf_small))
     except Exception:
         # Exception only: a KeyboardInterrupt / pytest Skipped mid-
         # compare must not be persisted as a fresh local red (r14 review)
-        _record(name, False, sf_small, "oracle")
+        _record(name, False, sf_small)
         raise
-    _record(name, True, sf_small, "oracle")
+    _record(name, True, sf_small)
 
 
-@pytest.mark.parametrize("name", sorted(set(QUERIES) - set(ORACLE_SQL)))
-def test_rows_only(spark, sf_small, name):
-    try:
-        df = QUERIES[name](spark, sf_small)
-        assert df.count() >= 0
-    except Exception:
-        _record(name, False, sf_small, "rows_only")
-        raise
-    _record(name, True, sf_small, "rows_only")
+# --- the folded gate on hand-built entries --------------------------------
+
+
+@pytest.fixture
+def tiny(tmp_path):
+    pq.write_table(
+        pa.table({"k": pa.array([1, 2, 3], pa.int64()),
+                  "v": pa.array([10, 20, 30], pa.int64())}),
+        str(tmp_path / "orders.parquet"),
+    )
+    return str(tmp_path)
+
+
+def _orders(spark, sf_dir):
+    return spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
+
+
+def test_compare_rejects_int_vs_hugeint(spark, tiny):
+    # values agree (60 == 60); DuckDB's sum(BIGINT) is HUGEINT -> decimal
+    with pytest.raises(AssertionError, match="type-class skew"):
+        compare(spark, "sum_v", tiny,
+                lambda s, d: _orders(s, d).agg(F.sum("v").alias("s")),
+                "SELECT sum(v) AS s FROM orders")
+
+
+def test_compare_rejects_cartesian_product(spark, tiny):
+    def cross(s, d):
+        a = _orders(s, d).select(F.col("k").alias("ka"))
+        b = _orders(s, d).select(F.col("k").alias("kb"))
+        # the hint keeps the tiny side from being broadcast
+        return a.crossJoin(b.hint("shuffle_replicate_nl"))
+
+    with pytest.raises(AssertionError, match="cartesian product"):
+        compare(spark, "cross", tiny, cross,
+                "SELECT a.k AS ka, b.k AS kb FROM orders a CROSS JOIN orders b")
+
+
+def test_compare_rejects_row_udf(spark, tiny):
+    with pytest.raises(AssertionError, match="row-at-a-time UDF"):
+        compare(spark, "row_udf", tiny,
+                lambda s, d: _orders(s, d).select(
+                    F.udf(lambda x: x + 1, "bigint")("k").alias("k1")),
+                "SELECT k + 1 AS k1 FROM orders")
+
+
+def test_compare_accepts_decimal_vs_float(spark, tiny):
+    compare(spark, "half", tiny,
+            lambda s, d: _orders(s, d).select(
+                (F.col("v") + 0.5).cast("double").alias("h")),
+            "SELECT CAST(v + 0.5 AS DECIMAL(10, 1)) AS h FROM orders")

@@ -1,14 +1,10 @@
-"""Batch sessionization + compaction (operators/sessionize.py)."""
+"""Batch sessionization (operators/sessionize.py)."""
 
 from __future__ import annotations
 
 import datetime as dt
-import glob
-import os
 
-from pyspark.sql import functions as F
-
-from gofast_spark.operators import compact_files, session_stats, sessionize
+from gofast_spark.operators import session_stats, sessionize
 
 
 def _t(minute):
@@ -53,17 +49,6 @@ def test_boundary_gap_exactly_at_timeout_continues(spark):
         .collect()
     ]
     assert got == [1, 1]
-
-
-def test_compact_files(spark, tmp_path):
-    path = os.path.join(str(tmp_path), "frag")
-    # 40 tiny files
-    spark.range(10_000).repartition(40).write.parquet(path)
-    assert len(glob.glob(os.path.join(path, "*.parquet"))) == 40
-    n = compact_files(spark, path, target_file_mb=128)
-    assert n == 1
-    assert len(glob.glob(os.path.join(path, "*.parquet"))) == 1
-    assert spark.read.parquet(path).count() == 10_000
 
 
 def test_funnel_sequential_semantics(spark):

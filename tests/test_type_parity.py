@@ -1,116 +1,21 @@
-"""Engine-vs-oracle TYPE parity for every oracle-backed catalog entry.
+"""Engine-vs-oracle type parity for every catalog entry: each Spark
+column's type class must match the DuckDB oracle's Arrow schema
+(decimal-vs-float is the one accepted skew).  The value gate cannot see
+a skew such as DuckDB's ``sum(BIGINT)`` (HUGEINT) against Spark's
+``bigint``, but the driver's hash can.
 
-The round-11 root cause of the five-round ``observed_report_lineitem``
-driver-red was a type skew invisible to value comparison: DuckDB's
-``sum(BIGINT)`` returns HUGEINT, which surfaces through Arrow as
-``decimal128(38,0)`` while Spark's side is ``bigint`` — and Python's
-``Decimal(0) == 0`` equality masked it in the local value gate for four
-rounds while the driver's hash (which distinguishes integer renderings
-from Decimal renderings) kept failing.  This sweep makes the local gate
-strictly STRONGER than the driver hash for that class: for every entry
-it compares the Spark result schema's type class against the DuckDB
-``.arrow()`` schema's type class, column by column, and fails on any
-mismatch — so an oracle whose column comes back HUGEINT/decimal against
-an integer engine column can never again pass locally.
-
-One grandfathered equivalence: decimal-vs-float (two historically
-driver-green entries, ``build_df_inline`` and ``hist_quantile_events``,
-return DuckDB DECIMAL against Spark double; the driver's float coercion
-hashes those equal, so the pair is genuinely compatible).  Everything
-else — including int-vs-decimal, int-vs-float, and timestamp-vs-date —
-must match exactly by class.
+This reports the ``types`` check of ``tests/oracle_util.catalog_checks``,
+so it reads the same build as ``test_oracle_match`` and rebuilds nothing.
 """
 
 from __future__ import annotations
 
-import pyarrow as pa
 import pytest
-from pyspark.sql import types as T
 
-from gofast_spark.plans.catalog import ORACLE_SQL, QUERIES
-from tests.oracle_util import duck_conn
-
-# decimal-vs-float is the one driver-compatible skew (float coercion
-# hashes Decimal('87.5') and 87.5 equal); every other pair must match.
-_COMPATIBLE = {frozenset({"decimal", "float"})}
-
-
-def spark_type_class(dt: T.DataType) -> str:
-    if isinstance(dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
-        return "int"
-    if isinstance(dt, (T.FloatType, T.DoubleType)):
-        return "float"
-    if isinstance(dt, T.DecimalType):
-        return "decimal"
-    if isinstance(dt, T.StringType):
-        return "string"
-    if isinstance(dt, T.BooleanType):
-        return "bool"
-    if isinstance(dt, T.DateType):
-        return "date"
-    # NTZ-vs-instant timestamps hash identically through the driver's
-    # tz-naive rendering; both map to one class (the VALUE gate still
-    # catches any actual instant shift).
-    if isinstance(dt, (T.TimestampType, T.TimestampNTZType)):
-        return "timestamp"
-    if isinstance(dt, T.ArrayType):
-        return f"array<{spark_type_class(dt.elementType)}>"
-    return dt.typeName()
-
-
-def arrow_type_class(dt: pa.DataType) -> str:
-    if pa.types.is_integer(dt):
-        return "int"
-    if pa.types.is_floating(dt):
-        return "float"
-    if pa.types.is_decimal(dt):
-        return "decimal"
-    if pa.types.is_string(dt) or pa.types.is_large_string(dt):
-        return "string"
-    if pa.types.is_boolean(dt):
-        return "bool"
-    if pa.types.is_date(dt):
-        return "date"
-    if pa.types.is_timestamp(dt):
-        return "timestamp"
-    if pa.types.is_list(dt) or pa.types.is_large_list(dt):
-        return f"array<{arrow_type_class(dt.value_type)}>"
-    return str(dt)
-
-
-def oracle_arrow_schema(con, sql: str) -> pa.Schema:
-    """DuckDB Arrow schema of an oracle; LIMIT-0 wrap keeps it cheap,
-    full execution is the fallback for any non-wrappable statement."""
-    try:
-        return con.execute(f"SELECT * FROM (\n{sql}\n) __tp LIMIT 0").arrow().schema
-    except Exception:  # pragma: no cover - non-wrappable statement
-        return con.execute(sql).arrow().schema
-
-
-@pytest.fixture(scope="module")
-def duck(sf_small):
-    con = duck_conn(sf_small)
-    yield con
-    con.close()
+from gofast_spark.plans.catalog import ORACLE_SQL
+from tests.oracle_util import assert_passed, catalog_checks
 
 
 @pytest.mark.parametrize("name", sorted(ORACLE_SQL))
-def test_type_parity(spark, sf_small, duck, name):
-    sdf = QUERIES[name](spark, sf_small)
-    s_types = {f.name: spark_type_class(f.dataType) for f in sdf.schema.fields}
-    a_schema = oracle_arrow_schema(duck, ORACLE_SQL[name])
-    d_types = {f.name: arrow_type_class(f.type) for f in a_schema}
-    assert sorted(s_types) == sorted(d_types), (
-        f"{name}: column name mismatch spark={sorted(s_types)} "
-        f"duck={sorted(d_types)}"
-    )
-    skews = {
-        c: (s_types[c], d_types[c])
-        for c in s_types
-        if s_types[c] != d_types[c]
-        and frozenset({s_types[c], d_types[c]}) not in _COMPATIBLE
-    }
-    assert not skews, (
-        f"{name}: engine-vs-oracle type-class skew (driver hash will "
-        f"diverge even when values agree): {skews}"
-    )
+def test_type_parity(spark, sf_small, name):
+    assert_passed(catalog_checks(spark, name, sf_small), "types")
