@@ -19,11 +19,11 @@ Scale notes (the reason this shape was chosen):
   min-groupBy on src).  Iteration count is bounded by the graph
   diameter, and near-dup graphs are overwhelmingly star/clique shaped
   (diameter 1-2), so 3-4 iterations typically reach the fixpoint.  For
-  adversarially long chain graphs, hash-min is O(diameter) — the
-  large-star/small-star algorithm (Kiveris et al., "Connected
-  Components in MapReduce and Beyond", SoCC 2014) converges in
-  O(log² n) rounds and would be the upgrade path; it is not needed for
-  dedup workloads.
+  adversarially long chain graphs, hash-min is O(diameter);
+  :func:`connected_components_two_phase` runs the large-star/small-star
+  algorithm (Kiveris et al., "Connected Components in MapReduce and
+  Beyond", SoCC 2014), which converges in O(log² n) rounds on any graph
+  shape (``ml.dbscan`` uses it for its core-point graph).
 - The label frame is pinned every iteration (``session.pin``) —
   without it the plan doubles per round and Catalyst analysis time
   explodes by iteration ~10 (same driver-loop discipline as
@@ -42,7 +42,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gofast_spark.session import pin
+from gofast_spark.session import pin, pin_small
 
 
 def connected_components(
@@ -60,8 +60,8 @@ def connected_components(
         is an undirected edge.  Self-loops and duplicate edges are fine.
     max_iter : safety bound on propagation rounds; the loop exits early
         at the fixpoint.  50 covers a diameter-50 chain — far beyond any
-        realistic near-dup graph (see module docstring for the
-        large-star/small-star upgrade path if that assumption breaks).
+        realistic near-dup graph; for chain-shaped graphs use
+        :func:`connected_components_two_phase`.
 
     Returns
     -------
@@ -138,8 +138,8 @@ def connected_components(
         raise RuntimeError(
             f"connected_components did not converge within max_iter="
             f"{max_iter} rounds — the pair graph has diameter > max_iter "
-            "(raise max_iter, or switch to large-star/small-star for "
-            "chain-shaped graphs; see module docstring)"
+            "(raise max_iter, or use connected_components_two_phase, "
+            "the large-star/small-star variant, for chain-shaped graphs)"
         )
     return labels.select(F.col("id"), F.col("lab").alias("cluster_id"))
 
@@ -290,13 +290,26 @@ def near_dup_clusters(
     return connected_components(pairs, "id_a", "id_b", max_iter=max_iter)
 
 
+def _cluster_side(
+    clusters: DataFrame, cluster_id_col: str, op: str
+) -> tuple[DataFrame, bool]:
+    """``(__cc_id, __cc_lab)`` join side of a cluster frame, pinned and
+    broadcast-gated by ``session.pin_small``."""
+    return pin_small(
+        clusters.select(
+            F.col("id").alias("__cc_id"),
+            F.col(cluster_id_col).alias("__cc_lab"),
+        ),
+        f"{op}:clusters",
+    )
+
+
 def keep_canonical(
     df: DataFrame,
     clusters: DataFrame,
     id_col: str,
     *,
     cluster_id_col: str = "cluster_id",
-    broadcast_limit: int | None = 500_000,
 ) -> DataFrame:
     """Keep one canonical row per duplicate cluster (the min-id member)
     plus every unclustered row.
@@ -308,16 +321,10 @@ def keep_canonical(
     cluster min.  On a duplicate-HEAVY corpus the clustered population
     approaches the corpus and an unconditional broadcast would blow the
     build side (the minhash verify stage had exactly this failure mode),
-    so the broadcast is gated on a row-count check — cheap here because
-    the connected-components output is already checkpoint-materialized.
-    The default bound (500k rows, ~tens of MB serialized) is a BYTES
-    proxy chosen to stay far from executor broadcast limits; pass
-    ``broadcast_limit=None`` to force the broadcast."""
-    cl = clusters.select(
-        F.col("id").alias("__cc_id"),
-        F.col(cluster_id_col).alias("__cc_lab"),
-    )
-    if broadcast_limit is None or clusters.count() <= broadcast_limit:
+    so the broadcast is gated on the session's broadcast threshold
+    (``session.pin_small``)."""
+    cl, fits = _cluster_side(clusters, cluster_id_col, "keep_canonical")
+    if fits:
         cl = F.broadcast(cl)
     return (
         df.join(cl, df[id_col] == F.col("__cc_id"), "left")
@@ -363,7 +370,6 @@ def leakage_safe_split(
     k: int = 3,
     num_hashes: int = 16,
     rows_per_band: int = 2,
-    broadcast_limit: int | None = 500_000,
 ) -> tuple[DataFrame, DataFrame]:
     """Train/test split that can NEVER put two near-duplicate documents
     on opposite sides: the split key is the near-dup cluster id (the
@@ -390,10 +396,8 @@ def leakage_safe_split(
         num_hashes=num_hashes,
         rows_per_band=rows_per_band,
     )
-    cl = clusters.select(
-        F.col("id").alias("__cc_id"), F.col("cluster_id").alias("__cc_lab")
-    )
-    if broadcast_limit is None or clusters.count() <= broadcast_limit:
+    cl, fits = _cluster_side(clusters, "cluster_id", "leakage_split")
+    if fits:
         cl = F.broadcast(cl)
     keyed = df.join(cl, df[id_col] == F.col("__cc_id"), "left").withColumn(
         "__gkey", F.coalesce(F.col("__cc_lab"), F.col(id_col))
@@ -412,7 +416,6 @@ def keep_best(
     score_col: str,
     *,
     cluster_id_col: str = "cluster_id",
-    broadcast_limit: int | None = 500_000,
 ) -> DataFrame:
     """Keep the highest-``score_col`` member of each duplicate cluster
     (ties -> min id) plus every unclustered row — the quality-weighted
@@ -425,10 +428,7 @@ def keep_best(
     min-id aggregate among the maximizers — deterministic for any
     orderable id type, no window.  The corpus-side plan stays one
     (gated-broadcast) left join + filter, same as keep_canonical."""
-    cl = clusters.select(
-        F.col("id").alias("__cc_id"),
-        F.col(cluster_id_col).alias("__cc_lab"),
-    )
+    cl, fits = _cluster_side(clusters, cluster_id_col, "keep_best")
     scored = cl.join(
         df.select(
             F.col(id_col).alias("__cc_id"), F.col(score_col).alias("__sc")
@@ -442,8 +442,8 @@ def keep_best(
         .groupBy("__cc_lab")
         .agg(F.min("__cc_id").alias("__win"))
     )
-    small = broadcast_limit is None or clusters.count() <= broadcast_limit
-    if small:
+    # winners has at most one row per cluster: it fits when cl does
+    if fits:
         cl = F.broadcast(cl)
         winners = F.broadcast(winners)
     return (

@@ -16,8 +16,9 @@ encoders every tabular-ML pipeline reaches for:
 
 Scale shape: ONE groupBy over the category builds the (vocab-sized)
 encoding table; the global prior is a 1-row broadcast; applying the
-encoding is a broadcast join when the vocabulary is small (gated like
-every dim broadcast in the repo).  No per-row Python, no second scan.
+encoding is a broadcast join when the vocabulary fits the session's
+broadcast threshold (``session.pin_small``).  No per-row Python, no
+second scan.
 """
 
 from __future__ import annotations
@@ -25,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from gofast_spark.session import pin
+from gofast_spark.session import pin_small
 
 
 def target_encode(
@@ -35,7 +36,6 @@ def target_encode(
     *,
     alpha: float = 10.0,
     out_col: str | None = None,
-    broadcast_limit: int | None = 100_000,
 ) -> DataFrame:
     """Append the smoothed per-category target mean as ``out_col``
     (default ``{cat_col}_te``).  Null categories get the global mean
@@ -58,12 +58,11 @@ def target_encode(
             / (F.col("__n") + F.lit(float(alpha)))
         ).alias(out),
     )
-    if broadcast_limit is not None:
-        # pin the category-sized table: the gate count and the apply
-        # join would each re-execute the corpus aggregate (guide §1.2)
-        enc, m = pin(enc, "target_encode:table", n=F.count(F.lit(1)))
-        if m["n"] <= broadcast_limit:
-            enc = F.broadcast(enc)
+    # pin the category-sized table: the gate count and the apply join
+    # would each re-execute the corpus aggregate (guide §1.2)
+    enc, fits = pin_small(enc, "target_encode:table")
+    if fits:
+        enc = F.broadcast(enc)
     return (
         df.join(enc, df[cat_col].eqNullSafe(enc["__cat"]), "left")
         .crossJoin(F.broadcast(prior))
@@ -80,7 +79,6 @@ def woe_encode(
     positive=1,
     smooth: float = 0.5,
     out_col: str | None = None,
-    broadcast_limit: int | None = 100_000,
 ) -> DataFrame:
     """Append the weight of evidence of ``cat_col`` against a binary
     label: ``ln((good_c + s) / (G + s*k) * (B + s*k) / (bad_c + s))``
@@ -107,11 +105,9 @@ def woe_encode(
             / ((F.col("__bad") + s) / (F.col("__b") + s * F.col("__k")))
         ).alias(out),
     )
-    if broadcast_limit is not None:
-        # same pinned gate as target_encode
-        enc, m = pin(enc, "woe_encode:table", n=F.count(F.lit(1)))
-        if m["n"] <= broadcast_limit:
-            enc = F.broadcast(enc)
+    enc, fits = pin_small(enc, "woe_encode:table")
+    if fits:
+        enc = F.broadcast(enc)
     return (
         df.join(enc, df[cat_col].eqNullSafe(enc["__cat"]), "left")
         .withColumn(out, F.coalesce(F.col(out), F.lit(0.0)))

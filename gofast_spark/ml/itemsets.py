@@ -11,7 +11,7 @@ frequency tail.
 
 Plan shape: one distinct projection (basket, item), one item-support
 groupBy, a semi-join-style prune (broadcast when the frequent-item set
-is small, gated like every other dim broadcast in the repo), ONE
+fits the session's broadcast threshold, ``session.pin_small``), ONE
 equi-join on the basket key with ``item_a < item_b`` to canonicalize,
 one pair groupBy, and lift from a 1-row broadcast of the basket count.
 Top-k is TakeOrderedAndProject with a deterministic
@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from gofast_spark.session import pin
+from gofast_spark.session import pin, pin_small
 
 logger = logging.getLogger(__name__)
 
@@ -149,7 +149,6 @@ def _basket_pairs(
     item_col: str,
     *,
     min_support: int,
-    broadcast_limit: int | None,
     max_basket_size: int | None,
     materialize: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
@@ -173,13 +172,10 @@ def _basket_pairs(
     )
     # the gate count and the prune join read the frequent-vocab frame
     support = b.groupBy("it").agg(F.count(F.lit(1)).alias("n_it"))
-    freq, m = pin(
-        support.where(F.col("n_it") >= min_support),
-        "baskets:freq",
-        n=F.count(F.lit(1)),
+    freq, fits = pin_small(
+        support.where(F.col("n_it") >= min_support), "baskets:freq"
     )
-    freq_small = broadcast_limit is not None and m["n"] <= broadcast_limit
-    if freq_small:
+    if fits:
         freq = F.broadcast(freq)
     pruned, n_dropped = cap_basket_size(
         b.join(freq, "it").select("bk", "it", "n_it"),
@@ -202,7 +198,7 @@ def _basket_pairs(
             .agg(F.count(F.lit(1)).alias("n_it"))
             .where(F.col("n_it") >= min_support)
         )
-        if freq_small:
+        if fits:
             supp2 = F.broadcast(supp2)
         pruned = pruned.select("bk", "it").join(supp2, "it")
     pairs = (
@@ -230,7 +226,6 @@ def frequent_pairs(
     *,
     min_support: int = 3,
     top_k: int = 20,
-    broadcast_limit: int | None = 100_000,
     max_basket_size: int | None = 10_000,
 ) -> DataFrame:
     """Top-``top_k`` co-occurring item pairs:
@@ -247,7 +242,6 @@ def frequent_pairs(
         basket_col,
         item_col,
         min_support=min_support,
-        broadcast_limit=broadcast_limit,
         max_basket_size=max_basket_size,
     )
     return (
@@ -277,7 +271,6 @@ def association_rules(
     *,
     min_support: int = 3,
     top_pairs: int = 20,
-    broadcast_limit: int | None = 100_000,
     max_basket_size: int | None = 10_000,
 ) -> DataFrame:
     """Directional association rules from the top frequent pairs
@@ -307,7 +300,6 @@ def association_rules(
         basket_col,
         item_col,
         min_support=min_support,
-        broadcast_limit=broadcast_limit,
         max_basket_size=max_basket_size,
     )
     fp = (

@@ -32,7 +32,6 @@ def item_similarity_topk(
     *,
     min_count: int = 2,
     k: int = 5,
-    broadcast_limit: int | None = 100_000,
     max_basket_size: int | None = 10_000,
 ) -> DataFrame:
     """Top-``k`` cosine neighbors per item:
@@ -53,7 +52,6 @@ def item_similarity_topk(
         basket_col,
         item_col,
         min_support=min_count,
-        broadcast_limit=broadcast_limit,
         max_basket_size=max_basket_size,
     )
     pairs = pairs.withColumnRenamed("n_pair", "n_both")

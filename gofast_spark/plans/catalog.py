@@ -44,43 +44,20 @@ def query(name: str, oracle: str):
     return deco
 
 
-# per-process parquet schema memo: schema INFERENCE (footer read +
-# merge) costs ~145 ms of driver time per spark.read.parquet call vs
-# ~27 ms with an explicit schema (measured at sf0.1, r15) — paid again
-# by EVERY query invocation since entries build their plans fresh.
-# This memoizes metadata derived from the input file, never results;
-# each process re-infers on first touch, so testdata swaps stay safe.
-# The 100-TB analog is passing explicit schemas so repeated jobs skip
-# object-store footer sampling (guide §6/§7.3 driver-side planning).
-_SCHEMA_MEMO: dict = {}
-
-
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load a driver table.  The events parquet's ``ts`` physical encoding
+    """Load a catalog table through ``sources.events.read_events_batch``,
+    whose per-process schema memo spares every entry build the parquet
+    footer inference.  The events parquet's ``ts`` physical encoding
     has varied across testdata generations; sources.events owns the
     tolerant read + normalize policy (shared with the streaming reader so
     batch and stream cannot drift apart)."""
-    if name == "events":
-        from gofast_spark.sources.events import (
-            normalize_event_ts,
-            read_events_batch,
-        )
+    from gofast_spark.sources.events import (
+        normalize_event_ts,
+        read_events_batch,
+    )
 
-        df = read_events_batch(spark, os.path.join(sf_dir, "events.parquet"))
-        return normalize_event_ts(df)
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    # key on (path, local stamp): an in-process rewrite of the file
-    # invalidates the memo instead of silently serving a stale explicit
-    # schema (ADVICE r15 #2); the stamp is one os.stat per call
-    from gofast_spark.sources.events import local_input_stamp
-
-    key = (path, local_input_stamp(path))
-    sch = _SCHEMA_MEMO.get(key)
-    if sch is None:
-        df = spark.read.parquet(path)
-        _SCHEMA_MEMO[key] = df.schema
-        return df
-    return spark.read.schema(sch).parquet(path)
+    df = read_events_batch(spark, os.path.join(sf_dir, f"{name}.parquet"))
+    return normalize_event_ts(df) if name == "events" else df
 
 
 def _units6(c):

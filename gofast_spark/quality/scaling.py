@@ -17,7 +17,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from gofast_spark.session import pin
+from gofast_spark.session import pin_small
 
 
 def minmax_scale(
@@ -103,19 +103,17 @@ def robust_scale_grouped(
     group_cols: Sequence[str],
     *,
     suffix: str = "",
-    broadcast_limit: int | None = 500_000,
 ) -> DataFrame:
     """Per-GROUP median/IQR scaling: one groupBy computes exact
     percentile stats for every (group, column), then a stats join
     applies them — normalize each segment against its own distribution
     (per-tenant/per-sensor calibration).  Zero IQR divides by 1.
 
-    The stats join is broadcast only while the group count stays under
-    ``broadcast_limit`` (one cheap count over the already-computed
-    aggregate); above it — e.g. per-user calibration with 100M users —
-    the hint would force a driver collect+broadcast OOM, so the join
-    falls back to a shuffle and AQE picks the strategy.
-    ``broadcast_limit=None`` forces the hint unconditionally."""
+    The stats join is broadcast only while the stats table fits the
+    session's broadcast threshold (``session.pin_small``); above it —
+    e.g. per-user calibration with 100M users — the hint would force a
+    driver collect+broadcast OOM, so the join falls back to a shuffle
+    and AQE picks the strategy."""
     aggs = []
     for c in columns:
         col = F.col(c)
@@ -126,14 +124,11 @@ def robust_scale_grouped(
             )
         )
     stats = df.groupBy(*group_cols).agg(*aggs)
-    if broadcast_limit is not None:
-        # pin the group-sized stats: the gate count and the apply join
-        # would each re-execute the exact-percentile aggregate over the
-        # corpus (guide §1.2)
-        stats, m = pin(stats, "robust_scale:stats", n=F.count(F.lit(1)))
-        if m["n"] <= broadcast_limit:
-            stats = F.broadcast(stats)
-    else:
+    # pin the group-sized stats: the gate count and the apply join
+    # would each re-execute the exact-percentile aggregate over the
+    # corpus (guide §1.2)
+    stats, fits = pin_small(stats, "robust_scale:stats")
+    if fits:
         stats = F.broadcast(stats)
     out = df.join(stats, list(group_cols))
     for c in columns:

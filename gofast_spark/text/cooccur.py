@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from gofast_spark.session import pin
+from gofast_spark.session import pin, pin_small
 from gofast_spark.text.analysis import normalize_text
 
 
@@ -28,14 +28,14 @@ def bigram_pmi(
     *,
     min_count: int = 5,
     top_k: int = 50,
-    broadcast_limit: int | None = 500_000,
 ) -> DataFrame:
     """Top-``top_k`` adjacent pairs by PMI: ``(w1, w2, n_pair, pmi)``.
 
     ``min_count`` drops rare pairs (PMI is noise-dominated at tiny
-    counts — the Church & Hanks caveat); ``broadcast_limit`` gates the
-    unigram-table broadcast exactly like the other dedup/scaling
-    operators (above it the joins shuffle and AQE decides)."""
+    counts — the Church & Hanks caveat).  The unigram table is broadcast
+    only while it fits the session's broadcast threshold
+    (``session.pin_small``); above it the joins shuffle and AQE
+    decides."""
     # filter on the NORMALIZED string, not size(tk): split('') returns
     # [''] (size 1), so a size guard never fires and an empty/whitespace
     # -only document would contribute a '' unigram and inflate n_tokens
@@ -62,14 +62,13 @@ def bigram_pmi(
         pairs.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("n_pair")),
         "pmi:pairs",
     )
-    uni, m = pin(
+    uni, fits = pin_small(
         toks.select(F.explode("tk").alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("n_w")),
         "pmi:unigrams",
-        n=F.count(F.lit(1)),
     )
-    if broadcast_limit is None or m["n"] <= broadcast_limit:
+    if fits:
         uni = F.broadcast(uni)
 
     # both totals from the materialized count tables: sum(n_w) over the
@@ -177,7 +176,6 @@ def llr_collocations(
     *,
     min_count: int = 5,
     top_k: int = 50,
-    broadcast_limit: int | None = 500_000,
 ) -> DataFrame:
     """Top-``top_k`` adjacent pairs by Dunning's log-likelihood ratio
     (Dunning, Computational Linguistics 1993) — the count-robust
@@ -213,16 +211,14 @@ def llr_collocations(
         "llr:pairs",
     )
     # the gate count and the join read the w1 margin: pin it once
-    first, m = pin(
-        pc.groupBy("w1").agg(F.sum("n_pair").alias("r1")),
-        "llr:margin",
-        n=F.count(F.lit(1)),
+    first, fits = pin_small(
+        pc.groupBy("w1").agg(F.sum("n_pair").alias("r1")), "llr:margin"
     )
     second = pc.groupBy("w2").agg(F.sum("n_pair").alias("c1"))
     total = pc.agg(F.sum("n_pair").alias("nn"))
-    # same vocabulary-size broadcast gate as bigram_pmi: above the limit
-    # the margin joins shuffle and AQE decides
-    if broadcast_limit is None or m["n"] <= broadcast_limit:
+    # same vocabulary-size broadcast gate as bigram_pmi; the w2 margin
+    # is as large as the w1 one, so it rides the same answer
+    if fits:
         first, second = F.broadcast(first), F.broadcast(second)
 
     j = (

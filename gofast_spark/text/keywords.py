@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gofast_spark.ml.graph import pagerank
-from gofast_spark.session import pin
+from gofast_spark.session import pin, pin_small
 from gofast_spark.text.analysis import EN_STOPWORDS, normalize_text
 
 __all__ = ["textrank_keywords"]
@@ -86,7 +86,6 @@ def rake_keywords(
     stopwords: tuple[str, ...] = EN_STOPWORDS,
     top_k: int = 20,
     min_phrase_freq: int = 2,
-    broadcast_limit: int | None = 500_000,
 ) -> DataFrame:
     """Top-``top_k`` candidate phrases by RAKE score (Rose, Engel,
     Cramer & Cowley, "Automatic keyword extraction from individual
@@ -143,11 +142,8 @@ def rake_keywords(
     )
     # pin the vocab-sized stats: the gate count and the scoring join
     # would each re-execute the aggregate
-    if broadcast_limit is not None:
-        stats, m = pin(stats, "rake:word_stats", n=F.count(F.lit(1)))
-        if m["n"] <= broadcast_limit:
-            stats = F.broadcast(stats)
-    else:
+    stats, fits = pin_small(stats, "rake:word_stats")
+    if fits:
         stats = F.broadcast(stats)
 
     pw = phrases.select(

@@ -71,3 +71,25 @@ def test_driver_testdata_loads(spark):
     df = _t(spark, "/root/testdata/sf0.001", "events")
     assert df.schema["ts"].dataType.typeName() == "timestamp"
     assert df.count() > 0
+
+
+def test_rewritten_table_serves_new_schema(spark, tmp_path):
+    """A parquet file rewritten with a different schema within one
+    process: ``_t``'s schema memo is keyed on the file's stamp, so the
+    second read infers the new schema instead of replaying the old one
+    (which would read the new column as missing)."""
+    path = os.path.join(str(tmp_path), "orders.parquet")
+    pq.write_table(pa.table({"k": pa.array([1, 2], pa.int64())}), path)
+    assert _t(spark, str(tmp_path), "orders").columns == ["k"]
+    pq.write_table(
+        pa.table(
+            {
+                "k": pa.array([1, 2, 3], pa.int64()),
+                "v": pa.array(["a", "b", "c"], pa.string()),
+            }
+        ),
+        path,
+    )
+    df = _t(spark, str(tmp_path), "orders")
+    assert df.columns == ["k", "v"]
+    assert sorted(map(tuple, df.collect())) == [(1, "a"), (2, "b"), (3, "c")]

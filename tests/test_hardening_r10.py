@@ -207,12 +207,18 @@ def test_mega_basket_cap_binds_at_scale(spark, caplog):
 
     # min_support=1 keeps every bot item past the Apriori prune (with
     # min_support=2 the prune alone would empty the mega basket and the
-    # cap would never bind) — and the 100k+2-item frequent vocabulary
-    # exceeds broadcast_limit, so this also exercises the non-broadcast
-    # prune path
-    got = frequent_pairs(
-        df, "bk", "it", min_support=1, top_k=10, max_basket_size=cap
-    ).collect()
+    # cap would never bind).  Under a 1 MiB broadcast threshold the
+    # 100k+2-item frequent vocabulary (~2.8 MB at 28 bytes a row) does
+    # not fit, so this also exercises the non-broadcast prune path
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, str(1024 * 1024))
+    try:
+        got = frequent_pairs(
+            df, "bk", "it", min_support=1, top_k=10, max_basket_size=cap
+        ).collect()
+    finally:
+        spark.conf.set(key, prev)
     assert [(r["item_a"], r["item_b"], r["n_pair"], r["n_a"], r["n_b"])
             for r in got] == [("a", "b", 500, 500, 500)]
     # lift over the capped corpus: 500 baskets, 500*500/(500*500) = 1.0

@@ -1,12 +1,13 @@
 """Contract of ``session.pin``, the one eager-materialization helper:
 job count, job labels, description restore, observed metrics on empty
-input, and the build-job counts of the loop operators routed through it."""
+input, and the build-job counts of the loop operators routed through it;
+and of ``session.pin_small``, the broadcast gate built on it."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from gofast_spark.session import pin
+from gofast_spark.session import pin, pin_small
 
 
 def _dag(spark):
@@ -145,3 +146,75 @@ def test_loop_operator_build_jobs_unchanged(spark):
     assert sorted((r["id"], r["cluster_id"]) for r in cc.collect()) == [
         (1, 1), (2, 1), (3, 1), (4, 1), (5, 1), (10, 10), (11, 10)
     ]
+
+
+_THRESHOLD = "spark.sql.autoBroadcastJoinThreshold"
+
+
+def _with_threshold(spark, value, fn):
+    prev = spark.conf.get(_THRESHOLD)
+    spark.conf.set(_THRESHOLD, value)
+    try:
+        return fn()
+    finally:
+        spark.conf.set(_THRESHOLD, prev)
+
+
+def _gated(spark):
+    """A gated operator on tiny frames: keep_canonical broadcasts its
+    cluster table through ``pin_small`` and hints no other join."""
+    from gofast_spark.dedup.cluster import keep_canonical
+
+    df = spark.createDataFrame(
+        [(i, f"t{i}") for i in range(20)], "id long, text string"
+    )
+    clusters = spark.createDataFrame(
+        [(1, 1), (3, 1), (5, 5), (7, 5)], "id long, cluster_id long"
+    )
+    return keep_canonical(df, clusters, "id")
+
+
+def _analyzed(df):
+    # the optimizer folds ResolvedHint nodes into join hints, so the
+    # hint is looked for in the analyzed plan
+    return df._jdf.queryExecution().analyzed().toString()
+
+
+def test_pin_small_frame_gets_broadcast_hint(spark):
+    out = _gated(spark)
+    assert "ResolvedHint" in _analyzed(out)
+    assert len(out.collect()) == 18
+    assert "BroadcastHashJoin" in (
+        out._jdf.queryExecution().executedPlan().toString()
+    )
+
+
+def test_pin_small_jobs_carry_label_and_observe_count(spark):
+    _, bare = _jobs(spark, lambda: _frame(spark).localCheckpoint(eager=True))
+    (out, fits), ids = _jobs(spark, lambda: pin_small(_frame(spark), "t:gate"))
+    # the row count rides the pin's own job: no job beyond the checkpoint
+    assert 1 <= len(ids) <= len(bare)
+    assert _descriptions(spark, ids) == ["pin:t:gate"] * len(ids)
+    assert fits and out.count() == 7
+
+
+def test_pin_small_budget_is_rows_times_row_size(spark):
+    # 7 rows of (long, long): 7 * 16 = 112 bytes
+    def fits():
+        return pin_small(_frame(spark), "t:budget")[1]
+
+    assert _with_threshold(spark, "112", fits)
+    assert not _with_threshold(spark, "111", fits)
+    assert not _with_threshold(spark, "0", fits)
+
+
+def test_pin_small_threshold_off_never_hints(spark):
+    hinted = sorted(map(tuple, _gated(spark).collect()))
+
+    def plan_and_rows():
+        out = _gated(spark)
+        return _analyzed(out), sorted(map(tuple, out.collect()))
+
+    plan, rows = _with_threshold(spark, "-1", plan_and_rows)
+    assert "ResolvedHint" not in plan
+    assert rows == hinted

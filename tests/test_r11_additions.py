@@ -652,7 +652,7 @@ class TestNonBindingCapPlanEquality:
 
         rows = [(b, f"i{i}") for b in range(30) for i in range(b % 4 + 2)]
         df = spark.createDataFrame(rows, "bk bigint, it string")
-        kw = dict(min_support=2, broadcast_limit=100, materialize=False)
+        kw = dict(min_support=2, materialize=False)
         pairs_uncapped, nb_uncapped = _basket_pairs(
             df, "bk", "it", max_basket_size=None, **kw
         )
