@@ -42,7 +42,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gofast_spark.session import pin, pin_small
+from gofast_spark.session import pin
 
 
 def connected_components(
@@ -293,15 +293,30 @@ def near_dup_clusters(
 def _cluster_side(
     clusters: DataFrame, cluster_id_col: str, op: str
 ) -> tuple[DataFrame, bool]:
-    """``(__cc_id, __cc_lab)`` join side of a cluster frame, pinned and
-    broadcast-gated by ``session.pin_small``."""
-    return pin_small(
+    """``(__cc_id, __cc_lab)`` join side of a cluster frame, pinned, and
+    whether it fits a broadcast.
+
+    The row count is observed by the pin's own job.  The side fits when
+    rows times the schema's row size (``StructType.defaultSize``) is
+    within the session's ``spark.sql.autoBroadcastJoinThreshold``; a
+    threshold of 0 or below never broadcasts, as in Spark.  AQE cannot
+    make this call: the side descends from the pinned
+    ``connected_components`` output with no shuffle before the join, and
+    a pinned frame keeps its pre-pin size estimate, so AQE has no
+    runtime size to go by.  Callers hint the side with ``F.broadcast``
+    when it fits."""
+    side, m = pin(
         clusters.select(
             F.col("id").alias("__cc_id"),
             F.col(cluster_id_col).alias("__cc_lab"),
         ),
         f"{op}:clusters",
+        n=F.count(F.lit(1)),
     )
+    conf = side.sparkSession._jsparkSession.sessionState().conf()
+    limit = conf.autoBroadcastJoinThreshold()
+    size = m["n"] * side._jdf.schema().defaultSize()
+    return side, 0 < limit and size <= limit
 
 
 def keep_canonical(
@@ -322,7 +337,7 @@ def keep_canonical(
     approaches the corpus and an unconditional broadcast would blow the
     build side (the minhash verify stage had exactly this failure mode),
     so the broadcast is gated on the session's broadcast threshold
-    (``session.pin_small``)."""
+    (``_cluster_side``)."""
     cl, fits = _cluster_side(clusters, cluster_id_col, "keep_canonical")
     if fits:
         cl = F.broadcast(cl)

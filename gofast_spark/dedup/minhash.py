@@ -37,6 +37,10 @@ from gofast_spark.text.hashing import md5_hash64
 # intermediate < 2^62 — safe in int64 on both Spark and DuckDB.
 MINHASH_P = 2147483647
 
+# near_dup_pairs broadcasts its verify-stage set and candidate-id legs
+# only while the candidate pair count is at most this many rows.
+_BROADCAST_CANDIDATES = 50_000
+
 
 def _make_coeffs(k: int) -> list[tuple[int, int]]:
     """Deterministic (a_j, b_j) pairs via two mixed LCGs (Knuth/Numerical
@@ -430,7 +434,6 @@ def near_dup_pairs(
     num_hashes: int = 16,
     rows_per_band: int = 2,
     merge_fragments: bool = False,
-    broadcast_candidate_limit: int = 50_000,
 ) -> DataFrame:
     """End-to-end near-duplicate pairs: shingle -> minhash -> LSH bands ->
     exact-Jaccard verify >= threshold.
@@ -465,9 +468,8 @@ def near_dup_pairs(
     genuinely small: on a duplicate-heavy corpus candidates approach the
     corpus and the build side would blow past executor memory (ADVICE
     r5).  The candidate pin therefore observes the pair count and only
-    broadcasts the set legs when pairs <= ``broadcast_candidate_limit``;
-    above it the set joins shuffle while the tiny id/pair frames stay
-    broadcast."""
+    broadcasts the set and candidate-id legs when pairs <=
+    ``_BROADCAST_CANDIDATES``; above it those joins shuffle."""
 
     def _verify(
         sets_df: DataFrame,
@@ -538,7 +540,7 @@ def near_dup_pairs(
         # it approaches corpus cardinality and must not be broadcast
         # unconditionally either (ADVICE r5, same failure mode as the
         # set frames)
-        small = m["n"] <= broadcast_candidate_limit
+        small = m["n"] <= _BROADCAST_CANDIDATES
         return pin(
             _verify(sets_df, cand, bcast_ids=small, bcast_sets=small),
             "near_dup:pairs",

@@ -15,18 +15,15 @@ encoders every tabular-ML pipeline reaches for:
   encoding whose aggregate is the repo's ``information_value``.
 
 Scale shape: ONE groupBy over the category builds the (vocab-sized)
-encoding table; the global prior is a 1-row broadcast; applying the
-encoding is a broadcast join when the vocabulary fits the session's
-broadcast threshold (``session.pin_small``).  No per-row Python, no
-second scan.
+encoding table; the global prior is a 1-row broadcast; AQE makes the
+apply join a broadcast at runtime while the vocabulary fits the
+session's broadcast threshold.  No per-row Python, no second scan.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from gofast_spark.session import pin_small
 
 
 def target_encode(
@@ -58,11 +55,6 @@ def target_encode(
             / (F.col("__n") + F.lit(float(alpha)))
         ).alias(out),
     )
-    # pin the category-sized table: the gate count and the apply join
-    # would each re-execute the corpus aggregate (guide §1.2)
-    enc, fits = pin_small(enc, "target_encode:table")
-    if fits:
-        enc = F.broadcast(enc)
     return (
         df.join(enc, df[cat_col].eqNullSafe(enc["__cat"]), "left")
         .crossJoin(F.broadcast(prior))
@@ -105,9 +97,6 @@ def woe_encode(
             / ((F.col("__bad") + s) / (F.col("__b") + s * F.col("__k")))
         ).alias(out),
     )
-    enc, fits = pin_small(enc, "woe_encode:table")
-    if fits:
-        enc = F.broadcast(enc)
     return (
         df.join(enc, df[cat_col].eqNullSafe(enc["__cat"]), "left")
         .withColumn(out, F.coalesce(F.col(out), F.lit(0.0)))

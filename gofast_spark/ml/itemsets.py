@@ -10,8 +10,8 @@ matter, and the per-basket pair count collapses with the item
 frequency tail.
 
 Plan shape: one distinct projection (basket, item), one item-support
-groupBy, a semi-join-style prune (broadcast when the frequent-item set
-fits the session's broadcast threshold, ``session.pin_small``), ONE
+groupBy, a semi-join-style prune (AQE broadcasts the frequent-item set
+at runtime while it fits the session's broadcast threshold), ONE
 equi-join on the basket key with ``item_a < item_b`` to canonicalize,
 one pair groupBy, and lift from a 1-row broadcast of the basket count.
 Top-k is TakeOrderedAndProject with a deterministic
@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from gofast_spark.session import pin, pin_small
+from gofast_spark.session import pin
 
 logger = logging.getLogger(__name__)
 
@@ -170,13 +170,8 @@ def _basket_pairs(
         .distinct(),
         "baskets:items",
     )
-    # the gate count and the prune join read the frequent-vocab frame
     support = b.groupBy("it").agg(F.count(F.lit(1)).alias("n_it"))
-    freq, fits = pin_small(
-        support.where(F.col("n_it") >= min_support), "baskets:freq"
-    )
-    if fits:
-        freq = F.broadcast(freq)
+    freq = support.where(F.col("n_it") >= min_support)
     pruned, n_dropped = cap_basket_size(
         b.join(freq, "it").select("bk", "it", "n_it"),
         max_basket_size,
@@ -190,16 +185,12 @@ def _basket_pairs(
         # support cleared ``min_support`` only thanks to the dropped
         # baskets is below the floor on the capped corpus and must not
         # reach the pair join (callers like item_similarity_topk have
-        # no later pair-support filter to subsume it).  The recomputed
-        # table is at most frequent-vocab-sized, so it inherits the
-        # same broadcast gate as the prune.
+        # no later pair-support filter to subsume it).
         supp2 = (
             pruned.groupBy("it")
             .agg(F.count(F.lit(1)).alias("n_it"))
             .where(F.col("n_it") >= min_support)
         )
-        if fits:
-            supp2 = F.broadcast(supp2)
         pruned = pruned.select("bk", "it").join(supp2, "it")
     pairs = (
         pruned.alias("l")

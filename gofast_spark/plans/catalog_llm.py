@@ -2296,8 +2296,8 @@ def bigram_pmi_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Collocation mining: top-50 adjacent token pairs by PMI
     (text/cooccur.py; Church & Hanks 1990, the word2vec phrase-pass
     score).  Vocab-sized count tables, one corpus aggregate for both
-    totals, broadcast-gated unigram joins, TakeOrderedAndProject on the
-    rounded score."""
+    totals, unigram joins AQE broadcasts at runtime, TakeOrderedAndProject
+    on the rounded score."""
     from gofast_spark.text.cooccur import bigram_pmi
 
     return bigram_pmi(_docs(spark, sf_dir), "text", min_count=5, top_k=50)

@@ -1066,7 +1066,7 @@ def target_encode_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     freq/label/one-hot encoder battery of
     gofast/transformers/feature_engineering.py): per-priority shrunk
     mean order value from ONE vocab-sized groupBy + a 1-row prior
-    broadcast, applied as a gated broadcast join.  The entry folds the
+    broadcast, applied as a join AQE broadcasts.  The entry folds the
     encoded frame back to the distinct (category, encoding) table the
     oracle recomputes."""
     from gofast_spark.ml.encoding import target_encode

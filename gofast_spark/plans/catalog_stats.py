@@ -719,9 +719,9 @@ def _kpca_power_oracle(m: int = 128, t: int = 24, g: float = 0.25) -> str:
       JOIN rmean r ON k.j = r.i CROSS JOIN gmean gm)
     SELECT k.vec_id,
            CAST(round(sum(k.v * a.x) / sqrt(greatest(l1.lam, 1e-12)), 4)
-             AS DOUBLE) AS kpca_0,
+             + 0.0 AS DOUBLE) AS kpca_0,
            CAST(round(sum(k.v * b.x) / sqrt(greatest(l2.lam, 1e-12)), 4)
-             AS DOUBLE) AS kpca_1
+             + 0.0 AS DOUBLE) AS kpca_1
     FROM kxc k JOIN v1 a ON k.j = a.i JOIN v2 b ON k.j = b.i
     CROSS JOIN l1 CROSS JOIN l2
     GROUP BY k.vec_id, l1.lam, l2.lam
@@ -754,8 +754,10 @@ def kernel_pca_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return out.select(
         "vec_id",
-        F.round("kpca_0", 4).alias("kpca_0"),
-        F.round("kpca_1", 4).alias("kpca_1"),
+        # + 0.0 folds DuckDB's -0.0 round of a tiny negative to +0.0,
+        # the value Spark's round gives
+        (F.round("kpca_0", 4) + 0.0).alias("kpca_0"),
+        (F.round("kpca_1", 4) + 0.0).alias("kpca_1"),
     )
 
 

@@ -17,8 +17,6 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from gofast_spark.session import pin_small
-
 
 def minmax_scale(
     df: DataFrame,
@@ -109,11 +107,11 @@ def robust_scale_grouped(
     applies them — normalize each segment against its own distribution
     (per-tenant/per-sensor calibration).  Zero IQR divides by 1.
 
-    The stats join is broadcast only while the stats table fits the
-    session's broadcast threshold (``session.pin_small``); above it —
-    e.g. per-user calibration with 100M users — the hint would force a
-    driver collect+broadcast OOM, so the join falls back to a shuffle
-    and AQE picks the strategy."""
+    The stats join carries no hint: AQE measures the stats aggregate's
+    shuffle at runtime and broadcasts it while it fits the session's
+    broadcast threshold; above it — e.g. per-user calibration with 100M
+    users — the join stays a shuffle join instead of a driver
+    collect+broadcast OOM."""
     aggs = []
     for c in columns:
         col = F.col(c)
@@ -124,12 +122,6 @@ def robust_scale_grouped(
             )
         )
     stats = df.groupBy(*group_cols).agg(*aggs)
-    # pin the group-sized stats: the gate count and the apply join
-    # would each re-execute the exact-percentile aggregate over the
-    # corpus (guide §1.2)
-    stats, fits = pin_small(stats, "robust_scale:stats")
-    if fits:
-        stats = F.broadcast(stats)
     out = df.join(stats, list(group_cols))
     for c in columns:
         iq = F.col(f"__iq_{c}")

@@ -13,7 +13,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
-from pyspark.sql import functions as F
 
 # Defaults tuned for the local[32] test harness; on a real cluster the
 # user overrides master/partitions via env or kwargs.  AQE coalesces
@@ -112,21 +111,3 @@ def pin(
     finally:
         sc.setLocalProperty(_JOB_DESC, prev)
 
-
-def pin_small(df: DataFrame, label: str) -> tuple[DataFrame, bool]:
-    """Pin ``df`` and return ``(pinned frame, fits)``: the broadcast gate
-    for a join side whose size is known only once it has run (a stats,
-    vocabulary or cluster table).
-
-    The row count is observed by the pin's own job.  ``fits`` is True
-    when rows times the schema's row size (``StructType.defaultSize``)
-    is within the session's ``spark.sql.autoBroadcastJoinThreshold``; a
-    threshold of 0 or below never broadcasts, as in Spark.  Spark cannot
-    make this call itself: a pinned frame keeps its pre-pin size
-    estimate, so a few-row aggregate still plans a sort-merge join.
-    Callers hint the join side with ``F.broadcast`` when it fits.
-    """
-    df, m = pin(df, label, n=F.count(F.lit(1)))
-    conf = df.sparkSession._jsparkSession.sessionState().conf()
-    limit = conf.autoBroadcastJoinThreshold()
-    return df, 0 < limit and m["n"] * df._jdf.schema().defaultSize() <= limit

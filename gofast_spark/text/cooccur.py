@@ -9,7 +9,7 @@ standard pre-tokenization phrase-detection signal for training corpora.
 Scale shape: bigrams and unigrams are each ONE explode + groupBy (the
 count tables are vocab-sized, not corpus-sized); the two totals ride a
 1-row broadcast; the unigram probabilities join back into the pair
-table twice, broadcast-gated on vocabulary size.  Top-k is
+table twice, broadcast by AQE while the vocabulary fits.  Top-k is
 TakeOrderedAndProject on the ROUNDED score so tie order is engine-stable.
 """
 
@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from gofast_spark.session import pin, pin_small
+from gofast_spark.session import pin
 from gofast_spark.text.analysis import normalize_text
 
 
@@ -32,10 +32,9 @@ def bigram_pmi(
     """Top-``top_k`` adjacent pairs by PMI: ``(w1, w2, n_pair, pmi)``.
 
     ``min_count`` drops rare pairs (PMI is noise-dominated at tiny
-    counts — the Church & Hanks caveat).  The unigram table is broadcast
-    only while it fits the session's broadcast threshold
-    (``session.pin_small``); above it the joins shuffle and AQE
-    decides."""
+    counts — the Church & Hanks caveat).  The unigram joins carry no
+    hint: AQE broadcasts the unigram table at runtime while it fits the
+    session's broadcast threshold; above it the joins shuffle."""
     # filter on the NORMALIZED string, not size(tk): split('') returns
     # [''] (size 1), so a size guard never fires and an empty/whitespace
     # -only document would contribute a '' unigram and inflate n_tokens
@@ -53,26 +52,21 @@ def bigram_pmi(
             )
         ).alias("bg")
     ).select(F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2"))
-    # Materialize both vocab-sized count tables ONCE (guide §1.2/§2.4:
-    # remove repeated passes): without the checkpoint, the broadcast
-    # -gate count() job, the totals aggregate, and the scoring join each
-    # re-ran the corpus explode + groupBy chain — 3 extra corpus scans
-    # for frames that are vocabulary-sized.
+    # Materialize the bigram count table ONCE (guide §1.2/§2.4: remove
+    # repeated passes): the totals aggregate and the scoring join would
+    # each re-run the corpus explode + groupBy chain.
     pair_counts, _ = pin(
         pairs.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("n_pair")),
         "pmi:pairs",
     )
-    uni, fits = pin_small(
+    uni = (
         toks.select(F.explode("tk").alias("w"))
         .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("n_w")),
-        "pmi:unigrams",
+        .agg(F.count(F.lit(1)).alias("n_w"))
     )
-    if fits:
-        uni = F.broadcast(uni)
 
-    # both totals from the materialized count tables: sum(n_w) over the
-    # unigram table == sum(size(tk)) and sum(n_pair) over the bigram
+    # both totals from the count tables: sum(n_w) over the unigram
+    # table == sum(size(tk)) and sum(n_pair) over the bigram
     # table == sum(size(tk) - 1) — exact integer identities, no third
     # corpus scan
     totals = uni.agg(F.sum("n_w").alias("n_tokens")).crossJoin(
@@ -203,23 +197,17 @@ def llr_collocations(
         ).alias("bg")
     ).select(F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2"))
     # one corpus explode EVER: the bigram count table feeds the margins,
-    # the total, the gate count and the scoring join — materialize it
-    # once (guide §2.4; the gate's count() otherwise re-executes the
-    # whole explode chain and the main plan re-runs it per consumer)
+    # the total and the scoring join — materialize it once (guide §2.4;
+    # the main plan otherwise re-runs the explode chain per consumer)
     pc, _ = pin(
         pairs.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("n_pair")),
         "llr:pairs",
     )
-    # the gate count and the join read the w1 margin: pin it once
-    first, fits = pin_small(
-        pc.groupBy("w1").agg(F.sum("n_pair").alias("r1")), "llr:margin"
-    )
+    # vocab-sized margins: AQE broadcasts them at runtime while they fit
+    # the session's broadcast threshold, as in bigram_pmi
+    first = pc.groupBy("w1").agg(F.sum("n_pair").alias("r1"))
     second = pc.groupBy("w2").agg(F.sum("n_pair").alias("c1"))
     total = pc.agg(F.sum("n_pair").alias("nn"))
-    # same vocabulary-size broadcast gate as bigram_pmi; the w2 margin
-    # is as large as the w1 one, so it rides the same answer
-    if fits:
-        first, second = F.broadcast(first), F.broadcast(second)
 
     j = (
         pc.where(F.col("n_pair") >= min_count)

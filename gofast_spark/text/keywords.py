@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gofast_spark.ml.graph import pagerank
-from gofast_spark.session import pin, pin_small
+from gofast_spark.session import pin
 from gofast_spark.text.analysis import EN_STOPWORDS, normalize_text
 
 __all__ = ["textrank_keywords"]
@@ -117,10 +117,10 @@ def rake_keywords(
         ).alias("ps")
     ).select(F.explode("ps").alias("phrase"))
     # The phrase frame feeds THREE consumers (word stats, the phrase
-    # -word join, the phrase-frequency count) plus the broadcast-gate
-    # count — and its lineage is the expensive stopword-alternation
-    # regexp pass over the corpus.  Pin it so the regex battery runs
-    # one time instead of four (guide §1.2/§2.4).
+    # -word join, the phrase-frequency count) — and its lineage is the
+    # expensive stopword-alternation regexp pass over the corpus.  Pin
+    # it so the regex battery runs one time instead of three (guide
+    # §1.2/§2.4).
     phrases, _ = pin(phrases, "rake:phrases")
 
     words = phrases.select(
@@ -140,15 +140,12 @@ def rake_keywords(
             * F.lit(1e6) + F.lit(0.5)
         ).cast("bigint").alias("score_u"),
     )
-    # pin the vocab-sized stats: the gate count and the scoring join
-    # would each re-execute the aggregate
-    stats, fits = pin_small(stats, "rake:word_stats")
-    if fits:
-        stats = F.broadcast(stats)
 
     pw = phrases.select(
         "phrase", F.explode(F.split(F.col("phrase"), " ")).alias("w")
     )
+    # the stats are vocab-sized: AQE broadcasts them at runtime while
+    # they fit the session's broadcast threshold
     ps = pw.join(stats, "w").groupBy("phrase").agg(
         F.sum("score_u").alias("__su")
     )

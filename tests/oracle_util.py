@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import math
 import os
+from collections import Counter
 
 import duckdb
 import pyarrow as pa
@@ -133,6 +134,16 @@ def oracle_arrow_schema(con, sql: str) -> pa.Schema:
         return con.execute(sql).arrow().schema
 
 
+def row_difference(s_norm, d_norm, shown: int = 5) -> str:
+    """The multiset difference of two normalized row lists: how many
+    rows each side has that the other lacks, and up to ``shown`` of
+    each."""
+    s_only = list((Counter(s_norm) - Counter(d_norm)).elements())
+    d_only = list((Counter(d_norm) - Counter(s_norm)).elements())
+    return (f"{len(s_only)} rows only in spark {s_only[:shown]!r}; "
+            f"{len(d_only)} rows only in duck {d_only[:shown]!r}")
+
+
 def checks(spark, name, sf_dir, query_fn, sql) -> dict[str, str | None]:
     """Build and collect the entry once; return each check's failure
     message (``None`` when it passes) under ``values``, ``types`` and
@@ -149,17 +160,14 @@ def checks(spark, name, sf_dir, query_fn, sql) -> dict[str, str | None]:
 
     s_norm, s_colnames = normalize_rows(s_cols, [tuple(r) for r in s_rows])
     d_norm, d_colnames = normalize_rows(d_cols, d_rows)
-    mism = [i for i, (a, b) in enumerate(zip(s_norm, d_norm)) if a != b]
     values = None
     if s_colnames != d_colnames:
         values = f"{name}: column mismatch spark={s_colnames} duck={d_colnames}"
     elif len(s_norm) != len(d_norm):
         values = (f"{name}: row count mismatch spark={len(s_norm)} "
-                  f"duck={len(d_norm)}")
-    elif mism:
-        values = (f"{name}: {len(mism)} row mismatches; first: "
-                  f"spark={s_norm[mism[0]]!r} duck={d_norm[mism[0]]!r} "
-                  f"cols={s_colnames}")
+                  f"duck={len(d_norm)}; {row_difference(s_norm, d_norm)}")
+    elif s_norm != d_norm:
+        values = f"{name}: {row_difference(s_norm, d_norm)} cols={s_colnames}"
 
     s_types = {f.name: spark_type_class(f.dataType) for f in sdf.schema.fields}
     d_types = {f.name: arrow_type_class(f.type) for f in a_schema}

@@ -4,7 +4,8 @@
    only on TRUE), not silently drop it through ~(TRUE & NULL).
 2. bpe_segment: merge symbols containing the literal substrings 'pa'/'pb'
    must not corrupt the spliced fold expression.
-3. robust_scale_grouped: the stats broadcast is gated on group count.
+3. robust_scale_grouped: the stats join carries no broadcast hint; AQE
+   broadcasts the stats at runtime only under the session threshold.
 4. stream_merge_upsert: crash mid-swap leaves the state recoverable; the
    next sink invocation restores a complete table.
 5. bloom_might_contain: the bitmap binds as ONE literal node, so large
@@ -68,21 +69,24 @@ def test_robust_scale_grouped_gate_matches_broadcast(spark):
     df = spark.createDataFrame(
         [Row(g=i % 3, x=float(i)) for i in range(30)]
     )
-    hinted = robust_scale_grouped(df, ["x"], ["g"], suffix="_s")
-    a = sorted(map(tuple, hinted.collect()))
+    out = robust_scale_grouped(df, ["x"], ["g"], suffix="_s")
+    a = sorted(map(tuple, out.collect()))
+    qe = out._jdf.queryExecution()
+    # no hint (analyzed: the optimizer folds ResolvedHint into join
+    # hints); AQE broadcasts the stats in the final adaptive plan
+    assert "ResolvedHint" not in qe.analyzed().toString()
+    assert "BroadcastHashJoin" in qe.executedPlan().executedPlan().toString()
     key = "spark.sql.autoBroadcastJoinThreshold"
     prev = spark.conf.get(key)
     spark.conf.set(key, "-1")
     try:
-        gated = robust_scale_grouped(df, ["x"], ["g"], suffix="_s")
-        b = sorted(map(tuple, gated.collect()))
-        # above-limit path must not carry the broadcast hint in the plan
-        # (analyzed: the optimizer folds ResolvedHint into join hints)
-        plan = gated._jdf.queryExecution().analyzed().toString()
+        off = robust_scale_grouped(df, ["x"], ["g"], suffix="_s")
+        b = sorted(map(tuple, off.collect()))
+        plan = off._jdf.queryExecution().executedPlan().toString()
     finally:
         spark.conf.set(key, prev)
     assert a == b
-    assert "ResolvedHint" not in plan
+    assert "BroadcastHashJoin" not in plan
 
 
 def test_stream_merge_upsert_recovers_from_crash_states(spark, tmp_path):

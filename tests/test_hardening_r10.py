@@ -207,9 +207,10 @@ def test_mega_basket_cap_binds_at_scale(spark, caplog):
 
     # min_support=1 keeps every bot item past the Apriori prune (with
     # min_support=2 the prune alone would empty the mega basket and the
-    # cap would never bind).  Under a 1 MiB broadcast threshold the
-    # 100k+2-item frequent vocabulary (~2.8 MB at 28 bytes a row) does
-    # not fit, so this also exercises the non-broadcast prune path
+    # cap would never bind).  Under a 1 MiB broadcast threshold AQE
+    # does not broadcast the 100k+2-item frequent vocabulary (the prune
+    # runs as a sort-merge join), so this also exercises the
+    # non-broadcast prune path
     key = "spark.sql.autoBroadcastJoinThreshold"
     prev = spark.conf.get(key)
     spark.conf.set(key, str(1024 * 1024))

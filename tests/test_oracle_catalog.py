@@ -35,7 +35,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from gofast_spark.plans.catalog import QUERIES
-from tests.oracle_util import assert_passed, catalog_checks, compare
+from tests.oracle_util import assert_passed, catalog_checks, checks, compare
 
 _SWEEP_OUT = os.environ.get("SPARK_GRAFT_SWEEP_OUT")
 _RESULTS: dict[str, dict] = {}
@@ -120,3 +120,17 @@ def test_compare_accepts_decimal_vs_float(spark, tiny):
             lambda s, d: _orders(s, d).select(
                 (F.col("v") + 0.5).cast("double").alias("h")),
             "SELECT CAST(v + 0.5 AS DECIMAL(10, 1)) AS h FROM orders")
+
+
+def test_values_message_names_the_unmatched_rows(spark, tiny):
+    # one changed cell: one row only on each side, the two equal rows
+    # not reported
+    def one_cell(s, d):
+        o = _orders(s, d)
+        return o.select("k", F.when(o.k == 2, 21).otherwise(o.v).alias("v"))
+
+    res = checks(spark, "one_cell", tiny, one_cell, "SELECT k, v FROM orders")
+    assert res["values"] == (
+        "one_cell: 1 rows only in spark ['2|21']; "
+        "1 rows only in duck ['2|20'] cols=['k', 'v']"
+    )

@@ -1,13 +1,15 @@
 """Contract of ``session.pin``, the one eager-materialization helper:
 job count, job labels, description restore, observed metrics on empty
 input, and the build-job counts of the loop operators routed through it;
-and of ``session.pin_small``, the broadcast gate built on it."""
+of ``dedup.cluster._cluster_side``, the measured broadcast gate built on
+it; and of the aggregate-fed join sides left to AQE, which pin nothing."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from gofast_spark.session import pin, pin_small
+from gofast_spark.dedup.cluster import _cluster_side, keep_canonical
+from gofast_spark.session import pin
 
 
 def _dag(spark):
@@ -160,11 +162,16 @@ def _with_threshold(spark, value, fn):
         spark.conf.set(_THRESHOLD, prev)
 
 
+def _clusters(spark):
+    # 7 rows of (long, long): 7 * 16 = 112 bytes
+    return _frame(spark).select(
+        F.col("k").alias("id"), F.col("s").alias("cluster_id")
+    )
+
+
 def _gated(spark):
     """A gated operator on tiny frames: keep_canonical broadcasts its
-    cluster table through ``pin_small`` and hints no other join."""
-    from gofast_spark.dedup.cluster import keep_canonical
-
+    cluster table through ``_cluster_side`` and hints no other join."""
     df = spark.createDataFrame(
         [(i, f"t{i}") for i in range(20)], "id long, text string"
     )
@@ -190,18 +197,22 @@ def test_pin_small_frame_gets_broadcast_hint(spark):
 
 
 def test_pin_small_jobs_carry_label_and_observe_count(spark):
-    _, bare = _jobs(spark, lambda: _frame(spark).localCheckpoint(eager=True))
-    (out, fits), ids = _jobs(spark, lambda: pin_small(_frame(spark), "t:gate"))
+    _, bare = _jobs(
+        spark, lambda: _clusters(spark).localCheckpoint(eager=True)
+    )
+    (out, fits), ids = _jobs(
+        spark, lambda: _cluster_side(_clusters(spark), "cluster_id", "t")
+    )
     # the row count rides the pin's own job: no job beyond the checkpoint
     assert 1 <= len(ids) <= len(bare)
-    assert _descriptions(spark, ids) == ["pin:t:gate"] * len(ids)
+    assert _descriptions(spark, ids) == ["pin:t:clusters"] * len(ids)
     assert fits and out.count() == 7
+    assert out.columns == ["__cc_id", "__cc_lab"]
 
 
 def test_pin_small_budget_is_rows_times_row_size(spark):
-    # 7 rows of (long, long): 7 * 16 = 112 bytes
     def fits():
-        return pin_small(_frame(spark), "t:budget")[1]
+        return _cluster_side(_clusters(spark), "cluster_id", "t")[1]
 
     assert _with_threshold(spark, "112", fits)
     assert not _with_threshold(spark, "111", fits)
@@ -218,3 +229,27 @@ def test_pin_small_threshold_off_never_hints(spark):
     plan, rows = _with_threshold(spark, "-1", plan_and_rows)
     assert "ResolvedHint" not in plan
     assert rows == hinted
+
+
+def test_aggregate_fed_sides_build_without_jobs_broadcast_at_runtime(spark):
+    """target_encode, woe_encode and robust_scale_grouped join a fresh
+    aggregate without a pin or a hint: building them launches no Spark
+    job, and AQE broadcasts the aggregate from its shuffle statistics
+    (the initial plan of these inputs is a sort-merge join)."""
+    from gofast_spark.ml.encoding import target_encode, woe_encode
+    from gofast_spark.quality.scaling import robust_scale_grouped
+
+    df = spark.createDataFrame(
+        [(i, f"c{i % 3}", i % 2, float(i)) for i in range(30)],
+        "id long, cat string, y int, x double",
+    )
+    for build in (
+        lambda: target_encode(df, "cat", "y"),
+        lambda: woe_encode(df, "cat", "y"),
+        lambda: robust_scale_grouped(df, ["x"], ["cat"]),
+    ):
+        out, ids = _jobs(spark, build)
+        assert len(ids) == 0
+        assert len(out.collect()) == 30
+        final = out._jdf.queryExecution().executedPlan().executedPlan()
+        assert "BroadcastHashJoin" in final.toString()

@@ -2,8 +2,8 @@
 
 Every document gets N_COPIES-1 near-identical copies, so candidate
 pairs approach corpus x N_COPIES — the exact regime where the MinHash
-verify stage must refuse to broadcast the candidate set frames
-(broadcast_candidate_limit gate) and connected components must label a
+verify stage must refuse to broadcast the candidate set frames (its
+``_BROADCAST_CANDIDATES`` gate) and connected components must label a
 vertex set whose every node has N_COPIES-1 edges.  The assertion is on
 SHAPE, not wall-clock: both stages complete through the non-broadcast
 path and produce the structurally-expected counts, which regresses
@@ -67,7 +67,6 @@ def test_dup_heavy_pairs_and_cc_scale_with_volume(spark):
         "doc_id",
         "text",
         threshold=0.7,
-        broadcast_candidate_limit=50_000,
     )
     n_pairs = pairs.count()
     t_pairs = time.perf_counter() - t0
