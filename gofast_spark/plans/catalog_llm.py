@@ -11,103 +11,32 @@ verifies the algorithms, not just row counts.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gofast_spark.dedup.minhash import MINHASH_COEFFS, MINHASH_P
+from gofast_spark.dedup.minhash import (
+    MINHASH_COEFFS,
+    MINHASH_P,
+    spread_small_scan,
+)
 from gofast_spark.plans.catalog import ORACLE_SQL, _t, query
 from gofast_spark.session import pin
 from gofast_spark.sim.lsh import hyperplane_weight
 from gofast_spark.text.analysis import EN_STOPWORDS, LANG_STOPWORDS
 from gofast_spark.text.hashing import char_hash_sql, md5_hash64_sql
 
-# --- shared DuckDB SQL fragments (mirror text.analysis exactly) -----------
-
-def _data_file_sizes(path: str) -> list[int] | None:
-    """Byte sizes of the data files under a LOCAL parquet path,
-    recursing into subdirectories (partitioned layouts); None when the
-    path is missing or not local."""
-    if os.path.isfile(path):
-        return [os.path.getsize(path)]
-    if not os.path.isdir(path):
-        return None
-    out: list[int] = []
-    for root, dirs, files in os.walk(path):
-        dirs[:] = [x for x in dirs if not x.startswith(("_", "."))]
-        for f in files:
-            if not f.startswith(("_", ".")):
-                out.append(os.path.getsize(os.path.join(root, f)))
-    return out
-
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents table spread across the cluster: the text entries run
     token-array higher-order functions (interpreted, compute-heavy), and a
     single small parquet part would pin them to one core.
+    :func:`gofast_spark.dedup.minhash.spread_small_scan` adds the
+    repartition when the scan's estimated split count is below the
+    session's parallelism."""
+    return spread_small_scan(_t(spark, sf_dir, "documents"))
 
-    r15: the narrow-scan guard used ``d.rdd.getNumPartitions()``, which
-    converts the plan to an RDD on the DRIVER — measured 288 ms per
-    call at sf0.1, paid by every documents entry on every invocation
-    (guide §7.3 driver-side work).  The split count is now estimated
-    from the on-disk byte sizes (local paths; ~0.1 ms), falling back to
-    the RDD probe for non-local URIs.  r16 (ADVICE r15 #3): the
-    estimate mirrors Spark's actual FilePartition math — maxSplitBytes
-    with the openCost charge and the totalBytes/parallelism shrink —
-    and recurses into subdirectories, so it no longer under-estimates
-    and adds a redundant repartition on mid-sized inputs.  The guard
-    only ever adds/skips a result-neutral repartition, so an estimate
-    is safe by construction."""
-    d = _t(spark, sf_dir, "documents")
-    target = spark.sparkContext.defaultParallelism
-    path = os.path.join(sf_dir, "documents.parquet")
-    est = None
-    try:
-        sizes = _data_file_sizes(path)
-        if sizes is not None:
-            # mirror Spark's FilePartition split math (ADVICE r15 #3:
-            # the plain ceil(bytes/maxPartitionBytes) ignored the
-            # totalBytes/defaultParallelism shrink and under-estimated,
-            # adding a redundant repartition on mid-sized inputs):
-            #   maxSplitBytes = min(maxPartitionBytes,
-            #                       max(openCostInBytes, totalBytes/par))
-            # with each file charged openCostInBytes on top.
-            mpb = int(
-                spark.conf.get(
-                    "spark.sql.files.maxPartitionBytes", "134217728"
-                )
-            )
-            open_cost = int(
-                spark.conf.get("spark.sql.files.openCostInBytes", "4194304")
-            )
-            # conf.get validates non-None defaults against the key's
-            # requirement (a "0" default throws on minPartitionNum) —
-            # use None defaults and coalesce in Python
-            par = (
-                int(
-                    spark.conf.get("spark.sql.files.minPartitionNum", None)
-                    or 0
-                )
-                or int(
-                    spark.conf.get(
-                        "spark.sql.leafNodeDefaultParallelism", None
-                    )
-                    or 0
-                )
-                or target
-            )
-            total = sum(s + open_cost for s in sizes)
-            max_split = min(mpb, max(open_cost, total // max(1, par)))
-            est = max(1, -(-total // max(1, max_split)))
-    except (OSError, ValueError):
-        est = None
-    if est is None:
-        est = d.rdd.getNumPartitions()
-    if est < target:
-        d = d.repartition(target)
-    return d
 
+# --- shared DuckDB SQL fragments (mirror text.analysis exactly) -----------
 
 def _norm_sql(c: str) -> str:
     return (

@@ -327,12 +327,19 @@ def dagostino_k2(
     transform chain runs on the driver and is replayed
     expression-for-expression by the oracle (signed-pow cube root,
     never a cbrt builtin).  Returns ONE row
-    ``(n, g1, b2, z_skew, z_kurt, k2)``."""
+    ``(n, g1, b2, z_skew, z_kurt, k2)``.  Raises ``ValueError`` below 8
+    non-null values, where the skewness transform is undefined (scipy's
+    ``skewtest`` minimum; the SQL replay fails there too)."""
     import math
 
     v = F.col(value_col).cast("double")
     d = df.where(v.isNotNull()).select(v.alias("v"))
-    mu, sd = d.agg(F.avg("v"), F.stddev_pop("v")).first()
+    mu, sd, n0 = d.agg(F.avg("v"), F.stddev_pop("v"), F.count("v")).first()
+    if n0 < 8:
+        raise ValueError(
+            f"dagostino_k2 needs at least 8 non-null values of "
+            f"{value_col!r}, got {n0}"
+        )
     mu, sd = float(mu), float(sd)
     z = (F.col("v") - F.lit(mu)) / F.lit(sd)
     agg = d.agg(

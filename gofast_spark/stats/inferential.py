@@ -228,7 +228,8 @@ def friedman_test(
     (gofast/stats/inferential.py:1272):
     ``chi2 = 12/(n*k*(k+1)) * sum(R_j^2) - 3*n*(k+1)`` with ranks
     assigned WITHIN each block — the rank window partitions by block, so
-    state is bounded per block and the op scales with block count."""
+    state is bounded per block and the op scales with block count.
+    Empty input gives one row ``(NULL, -1, 0)``, as the SQL form does."""
     w = Window.partitionBy(block_col).orderBy(F.col(value_col).asc())
     ties = Window.partitionBy(block_col, value_col)
     rk = F.rank().over(w) + (F.count(F.lit(1)).over(ties) - 1) / 2.0
@@ -241,9 +242,10 @@ def friedman_test(
     n_blocks = df.select(block_col).distinct().count()
     k = per_t.count()
     stats = per_t.agg(F.sum(F.col("rsum") * F.col("rsum")).alias("s"))
-    chi2 = (
-        12.0 / (n_blocks * k * (k + 1)) * F.col("s") - 3.0 * n_blocks * (k + 1)
-    )
+    # empty input (no blocks): the rank sum is NULL, so chi2 is NULL
+    denom = n_blocks * k * (k + 1)
+    scale = F.lit(12.0 / denom if denom else None).cast("double")
+    chi2 = scale * F.col("s") - 3.0 * n_blocks * (k + 1)
     return stats.select(
         chi2.alias("friedman_chi2"),
         F.lit(k - 1).cast("bigint").alias("dof"),
@@ -1507,12 +1509,18 @@ def cvm_normal_test(
     order-invariant.  Each term is quantized to ``1/unit`` before the
     integer sum.  Intended for samples whose distinct support fits an
     ordered window (pre-bin at 100 TB — the ks_test contract).
-    Returns ONE row ``(n, mu, sd, w2_u9)``."""
+    Returns ONE row ``(n, mu, sd, w2_u9)``, all NULL when ``value_col``
+    has no non-null value."""
     from gofast_spark.stats.probs import normal_cdf
 
     v = F.col(value_col).cast("double")
     d = df.where(v.isNotNull()).select(v.alias("v"))
     mu, sd = d.agg(F.avg("v"), F.stddev_pop("v")).first()
+    if mu is None:  # no non-null value: SQL's one all-NULL aggregate row
+        return df.sparkSession.createDataFrame(
+            [(None, None, None, None)],
+            "n bigint, mu double, sd double, w2_u9 bigint",
+        )
     mu, sd = float(mu), float(sd)
     w = Window.orderBy("v")
     tot = Window.partitionBy()
@@ -1568,7 +1576,8 @@ def mood_median_test(
     interpolated median is not ulp-stable across engines).  Counts are
     integers; each group's chi-square contribution is one replayed
     expression over integers, u9-quantized before the final integer
-    sum.  Returns ONE row ``(n, k_groups, n_above, chi2_u9, dof)``."""
+    sum.  Returns ONE row ``(n, k_groups, n_above, chi2_u9, dof)``, or
+    no row when no row has both a value and a group."""
     v = F.col(value_col).cast("double")
     g = F.col(group_col)
     d = df.where(v.isNotNull() & g.isNotNull()).select(
@@ -1581,13 +1590,19 @@ def mood_median_test(
         F.row_number().over(w).alias("i"),
         F.count(F.lit(1)).over(tot).alias("nn"),
     )
-    med = ranked.where(
+    med_row = ranked.where(
         F.col("i")
         == F.floor(
             (F.col("nn").cast("double") + F.lit(1.0)) / F.lit(2.0)
         ).cast("bigint")
-    ).first()["v"]
-    med = float(med)
+    ).first()
+    if med_row is None:  # no non-null (group, value) pair: no groups
+        return df.sparkSession.createDataFrame(
+            [],
+            "n bigint, k_groups bigint, n_above bigint, chi2_u9 bigint, "
+            "dof bigint",
+        )
+    med = float(med_row["v"])
     per = d.groupBy("g").agg(
         F.count(F.lit(1)).alias("n_g"),
         F.sum((F.col("v") > F.lit(med)).cast("bigint")).alias("a_g"),

@@ -177,10 +177,33 @@ def run_available_now(
     driver round-trip was ~10% of the query; the re-ship multiplied per
     downstream join).  ``append``/``update`` keep the memory sink: their
     result is the concatenation of per-batch emissions (small by
-    construction in this catalog), not a last-batch snapshot."""
+    construction in this catalog), not a last-batch snapshot.
+
+    State partitions: each drain starts with ``spark.sql.shuffle.partitions``
+    lowered to ``min(<session value>, sparkContext.defaultParallelism)``,
+    set just before ``start()`` and restored in a ``finally`` as soon as
+    ``start()`` returns or raises.  Spark disables AQE for stateful
+    queries, so the static count is the number of state-store tasks,
+    delta-file commits and loads per stateful operator per micro-batch;
+    at 32 on four cores that per-task overhead, not the operator work,
+    dominated the drains.  The count is read once at ``start()`` and
+    frozen into the query's checkpoint, which is safe to size per drain
+    here because every drain gets a fresh temporary checkpoint that is
+    never restarted.  Another thread that plans a query on the same
+    session while ``start()`` runs sees the lowered value.  The sinks
+    that take a caller's checkpoint (:func:`write_stream_to_warehouse`,
+    :func:`stream_merge_upsert`, :func:`stream_dedup_index_upsert`)
+    deliberately keep the session value: their checkpoint freezes it
+    across restarts."""
     qname = name or f"q_{uuid.uuid4().hex[:12]}"
+    spark = sdf.sparkSession
+    writer = (
+        sdf.writeStream.queryName(qname)
+        .outputMode(mode)
+        .trigger(availableNow=True)
+    )
+    holder: dict[str, DataFrame] = {}
     if mode == "complete":
-        holder: dict[str, DataFrame] = {}
 
         def _capture(batch_df: DataFrame, _batch_id: int) -> None:
             # complete mode re-emits the FULL state every batch; only the
@@ -188,28 +211,24 @@ def run_available_now(
             # snapshots are released by the ContextCleaner when replaced.
             holder["df"], _ = pin(batch_df, "stream:last_batch")
 
-        q = (
-            sdf.writeStream.foreachBatch(_capture)
-            .queryName(qname)
-            .outputMode(mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        q.stop()
-        if "df" not in holder:  # source had no data: zero micro-batches
-            return sdf.sparkSession.createDataFrame([], sdf.schema)
-        return holder["df"]
-    q = (
-        sdf.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode(mode)
-        .trigger(availableNow=True)
-        .start()
-    )
+        writer = writer.foreachBatch(_capture)
+    else:
+        writer = writer.format("memory")
+    key = "spark.sql.shuffle.partitions"
+    session_parts = spark.conf.get(key)
+    parts = min(int(session_parts), spark.sparkContext.defaultParallelism)
+    spark.conf.set(key, str(parts))
+    try:
+        q = writer.start()
+    finally:
+        spark.conf.set(key, session_parts)
     q.awaitTermination()
     q.stop()
-    return sdf.sparkSession.table(qname)
+    if mode != "complete":
+        return spark.table(qname)
+    if "df" not in holder:  # source had no data: zero micro-batches
+        return spark.createDataFrame([], sdf.schema)
+    return holder["df"]
 
 
 def stateful_running_totals(

@@ -1,10 +1,12 @@
 """Structured Streaming surface: micro-batch replay must equal the batch
-answer; streaming dedup suppresses within-watermark duplicates."""
+answer; streaming dedup suppresses within-watermark duplicates; each
+drain's state store is sized to the cores."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQueryListener
 
 
 def test_stream_window_equals_batch(spark, sf_small):
@@ -167,3 +169,63 @@ def test_streaming_token_counts_match_batch(spark, sf_small):
         .agg(F.count("*").alias("n"))
     )
     assert got == {(r.term, r.n) for r in batch.collect()}
+
+
+class _StatePartitions(StreamingQueryListener):
+    """Records ``numShufflePartitions`` of every state operator in every
+    micro-batch progress."""
+
+    def __init__(self) -> None:
+        self.parts: list[int] = []
+
+    def onQueryStarted(self, event) -> None:
+        pass
+
+    def onQueryProgress(self, event) -> None:
+        self.parts += [o.numShufflePartitions
+                       for o in event.progress.stateOperators or []]
+
+    def onQueryIdle(self, event) -> None:
+        pass
+
+    def onQueryTerminated(self, event) -> None:
+        pass
+
+
+@pytest.mark.parametrize(
+    "name", ["streaming_window_counts", "stream_dedup_events"]
+)
+def test_drain_state_partitions_sized_to_cores(spark, sf_small, name):
+    """Each drain's state store runs min(shuffle.partitions,
+    defaultParallelism) partitions (complete mode through foreachBatch,
+    append mode through the memory sink), and the session keeps its
+    own value."""
+    from gofast_spark.plans.catalog import QUERIES
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    listener = _StatePartitions()
+    spark.streams.addListener(listener)
+    try:
+        QUERIES[name](spark, sf_small).collect()
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    finally:
+        spark.streams.removeListener(listener)
+    assert spark.conf.get(key) == before
+    want = min(int(before), spark.sparkContext.defaultParallelism)
+    assert listener.parts and set(listener.parts) == {want}
+
+
+def test_drain_restores_partitions_when_start_raises(spark, sf_small):
+    """``complete`` mode without an aggregation fails in ``start()``; the
+    session's shuffle partitions read the same afterwards."""
+    from pyspark.errors import AnalysisException
+
+    from gofast_spark.streaming import read_event_stream, run_available_now
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    stream = read_event_stream(spark, sf_small, glob="events.parquet")
+    with pytest.raises(AnalysisException, match="STREAMING_OUTPUT_MODE"):
+        run_available_now(stream.select("event_id"), mode="complete")
+    assert spark.conf.get(key) == before
