@@ -354,7 +354,6 @@ def shingle_jaccard(
     *,
     hash_col: str = "sh_hash",
     sizes_df: DataFrame | None = None,
-    broadcast_pairs: bool = False,
 ) -> DataFrame:
     """Exact Jaccard over shingle-hash sets for the given (id_a, id_b)
     pairs: |A ∩ B| via an equi-join on the shingle hash, |A ∪ B| from the
@@ -362,54 +361,26 @@ def shingle_jaccard(
 
     ``sizes_df`` (optional, columns [id_col, n_sh]) supplies per-doc set
     sizes computed elsewhere (e.g. folded into the signature groupBy) so
-    no second aggregation pass over the shingle frame is needed.
-
-    ``broadcast_pairs`` hints that the candidate-pair frame is small
-    (LSH output is bounded by Σ bucket² — tiny relative to the corpus):
-    the pair frame and its distinct doc-id set are broadcast, the
-    shingle legs are semi-filtered to candidate docs map-side, and the
-    intersection joins never shuffle the full shingle frame."""
+    no second aggregation pass over the shingle frame is needed."""
     if sizes_df is None:
         sizes_df = shingle_df.groupBy(id_col).agg(
             F.count(F.lit(1)).alias("n_sh")
         )
-    pairs = F.broadcast(pairs_df) if broadcast_pairs else pairs_df
-    legs_src = shingle_df
-    if broadcast_pairs:
-        cand_ids = (
-            pairs_df.select(F.col("id_a").alias("__cid"))
-            .union(pairs_df.select(F.col("id_b").alias("__cid")))
-            .distinct()
-        )
-        legs_src = shingle_df.join(
-            F.broadcast(cand_ids),
-            F.col(id_col) == F.col("__cid"),
-            "left_semi",
-        )
-        # sizes_df is one row per corpus doc — unbounded at scale; shrink
-        # it to candidate docs map-side before it is broadcast below
-        sizes_df = sizes_df.join(
-            F.broadcast(cand_ids),
-            F.col(id_col) == F.col("__cid"),
-            "left_semi",
-        )
     # unique internal names on each self-join leg avoid ambiguous refs
-    xa = legs_src.select(
+    xa = shingle_df.select(
         F.col(id_col).alias("__xa_id"), F.col(hash_col).alias("__ha")
     )
-    xb = legs_src.select(
+    xb = shingle_df.select(
         F.col(id_col).alias("__xb_id"), F.col(hash_col).alias("__hb")
     )
     inter = (
-        pairs.join(xa, F.col("id_a") == F.col("__xa_id"))
+        pairs_df.join(xa, F.col("id_a") == F.col("__xa_id"))
         .join(xb, (F.col("id_b") == F.col("__xb_id")) & (F.col("__ha") == F.col("__hb")))
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("n_inter"))
     )
     na = sizes_df.select(F.col(id_col).alias("__na_id"), F.col("n_sh").alias("n_a"))
     nb = sizes_df.select(F.col(id_col).alias("__nb_id"), F.col("n_sh").alias("n_b"))
-    if broadcast_pairs:
-        na, nb = F.broadcast(na), F.broadcast(nb)
     return (
         inter.join(na, F.col("id_a") == F.col("__na_id"))
         .join(nb, F.col("id_b") == F.col("__nb_id"))

@@ -450,10 +450,9 @@ def gains_table(
     (distributed, no global sort — bucket sizes approximate);
     ``'auto'`` sketches only above the 100k-row threshold when
     ``n_rows`` is given."""
-    from gofast_spark.stats.prebin import _AUTO_THRESHOLD
+    from gofast_spark.stats.prebin import percentile_expr, use_sketch
 
-    if mode not in ("auto", "exact", "sketch"):
-        raise ValueError(f"mode must be auto|exact|sketch: {mode!r}")
+    sketch = use_sketch(mode, n_rows)
     if n_buckets < 2:
         raise ValueError("n_buckets must be >= 2")
     s = (
@@ -465,13 +464,10 @@ def gains_table(
     base = df.where(s.isNotNull() & y.isNotNull()).select(
         s.alias("__s"), y.alias("__y"), F.col(key_col).alias("__k")
     )
-    sketch = mode == "sketch" or (
-        mode == "auto" and n_rows is not None and n_rows > _AUTO_THRESHOLD
-    )
     if sketch:
         qs = [i / n_buckets for i in range(1, n_buckets)]
         bounds = base.agg(
-            F.percentile_approx("__s", qs, F.lit(10_000)).alias("__b")
+            percentile_expr("__s", qs, "sketch", None).alias("__b")
         )
         ranked = base.crossJoin(F.broadcast(bounds)).select(
             "__y",

@@ -40,7 +40,9 @@ def _landmarks(df: DataFrame, cols: Sequence[str], m: int, seed: int):
     .limit(m)`` compiles to TakeOrderedAndProject — each partition keeps
     its top-m by the seeded hash and the driver merges, which is a
     deterministic uniform-ish pick over the whole frame without a
-    shuffle or a second job."""
+    shuffle or a second job.  Raises ``ValueError`` when no row has all
+    features non-null (an empty frame included): there is no kernel
+    to decompose."""
     import numpy as np
 
     rows = (
@@ -50,6 +52,11 @@ def _landmarks(df: DataFrame, cols: Sequence[str], m: int, seed: int):
         .limit(m)
         .collect()
     )
+    if not rows:
+        raise ValueError(
+            "no landmark rows (the frame is empty or every row has a "
+            "null feature)"
+        )
     return np.array([[float(r[c]) for c in cols] for r in rows])
 
 
@@ -98,7 +105,8 @@ def kernel_pca(
 ) -> DataFrame:
     """Nyström kernel PCA: landmark eigh on the driver, full-frame
     projection via mapInPandas (kPCA,
-    gofast/analysis/dimensionality.py:443)."""
+    gofast/analysis/dimensionality.py:443).  Raises ``ValueError`` when
+    no row has every feature non-null (an empty frame included)."""
     import numpy as np
 
     cols = list(feature_cols)

@@ -7,12 +7,11 @@ iteration expressed as DataFrame joins:
 
     r_{t+1}(v) = (1 - d) / N  +  d * sum_{u -> v} r_t(u) / outdeg(u)
 
-Scale shape: each iteration is edges ⋈ ranks on the source key (both
-sides hash-partitioned on the same key, so successive iterations reuse
-the exchange) followed by ONE groupBy on the destination.  Ranks are a
-node-sized frame (<< edges); AQE broadcasts it when small.  Lineage is
-truncated with ``localCheckpoint`` every few rounds so 50-iteration
-runs don't build a quadratic plan (same discipline as
+Scale shape: each iteration broadcasts the node-sized rank frame
+(<< edges) into a probe of the edge table on the source key, so the
+edges are never shuffled, followed by ONE groupBy on the destination.
+The rank frame is pinned every round except the last, so the plan
+never grows with the iteration count (same discipline as
 dedup/cluster.py's hash-min loop).
 
 Dangling nodes: callers pass a symmetric edge set (``undirected=True``
@@ -29,9 +28,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gofast_spark.session import pin
-
-# sort-merge pagerank cuts the rank lineage every this many rounds
-_RANK_PIN_EVERY = 8
 
 
 def edges_from_pairs(
@@ -66,17 +62,13 @@ def pagerank(
     *,
     iterations: int = 5,
     damping: float = 0.85,
-    broadcast_ranks: bool = False,
 ) -> DataFrame:
     """(node, rank) after ``iterations`` synchronous updates from the
     uniform start.  Deterministic for a fixed edge set.
 
-    ``broadcast_ranks=True`` ships the node-sized (rank/outdeg) frame to
-    executors each round so the EDGE table is never shuffled — the right
-    plan whenever ranks fit the broadcast limit (a billion-edge graph
-    with millions of nodes still qualifies); leave False when the node
-    set itself is beyond broadcast, falling back to the co-partitioned
-    sort-merge path."""
+    Each round ships the node-sized (rank/outdeg) frame to executors so
+    the EDGE table is never shuffled (a billion-edge graph with
+    millions of nodes still fits a broadcast)."""
     # materialize the edge list once: every iteration (and deg/nodes/base)
     # re-reads it, and without this the upstream plan (scans, joins, the
     # distinct) re-executes per iteration — on the sf0.1 graph that made
@@ -110,16 +102,11 @@ def pagerank(
             F.col("node").alias("src"),
             (F.col("rank") / F.col("outdeg")).alias("c"),
         )
-        if broadcast_ranks:
-            # broadcast the node-sized (rank/outdeg) frame: the edge
-            # table is probed in place, never exchanged
-            contrib = edges.join(F.broadcast(rd), "src").select(
-                F.col("dst").alias("node"), "c"
-            )
-        else:
-            contrib = edges.join(rd, "src").select(
-                F.col("dst").alias("node"), "c"
-            )
+        # broadcast the node-sized (rank/outdeg) frame: the edge
+        # table is probed in place, never exchanged
+        contrib = edges.join(F.broadcast(rd), "src").select(
+            F.col("dst").alias("node"), "c"
+        )
         incoming = contrib.groupBy("node").agg(F.sum("c").alias("inc"))
         ranks = (
             ranks.drop("rank")
@@ -134,15 +121,13 @@ def pagerank(
                 ).alias("rank"),
             )
         )
-        # broadcast mode: every round's broadcast materialization is a
-        # SEPARATE job that replays the rank lineage from the last
-        # truncation point — so truncate the (node-sized, cheap) frame
-        # every round EXCEPT the last (nothing re-broadcasts after it;
-        # the final consumer executes the last round's two joins once
-        # either way, so the extra job is pure overhead).  Sort-merge
-        # mode has one job total; there the periodic cadence is enough.
-        last = it + 1 == iterations
-        if (broadcast_ranks and not last) or (it + 1) % _RANK_PIN_EVERY == 0:
+        # every round's broadcast materialization is a SEPARATE job
+        # that replays the rank lineage from the last truncation point
+        # — so truncate the (node-sized, cheap) frame every round
+        # EXCEPT the last (nothing re-broadcasts after it; the final
+        # consumer executes the last round's two joins once either way,
+        # so the extra job is pure overhead)
+        if it + 1 < iterations:
             ranks, _ = pin(ranks, "pagerank:ranks")
     return ranks.select("node", "rank")
 

@@ -32,37 +32,10 @@ import logging
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from gofast_spark.session import pin
 
 logger = logging.getLogger(__name__)
-
-# Handles persisted by cap_basket_size (default materialize=True path).
-# CacheManager dedupes same-plan entries, so this grows with DISTINCT
-# mined inputs; a long-lived service calls release_basket_caches()
-# after each mining batch's terminal action to shed them.
-_PERSISTED_CACHES: list[DataFrame] = []
-
-
-def release_basket_caches() -> int:
-    """Unpersist every frame :func:`cap_basket_size` materialized so
-    far and forget the handles; returns how many were released.
-
-    Call AFTER the miner's terminal action (the persisted partitions
-    are read during the pair self-join) — unpersist is lazy-safe
-    either way (Spark recomputes from lineage), but releasing early
-    forfeits the double-read saving.  Addresses the unbounded
-    CacheManager growth a long-lived session mining many distinct
-    inputs would otherwise see."""
-    n = len(_PERSISTED_CACHES)
-    for frame in _PERSISTED_CACHES:
-        try:
-            frame.unpersist()
-        except Exception:  # session already stopped — nothing to free
-            pass
-    _PERSISTED_CACHES.clear()
-    return n
 
 
 def cap_basket_size(
@@ -70,7 +43,6 @@ def cap_basket_size(
     max_basket_size: int | None,
     *,
     basket_col: str = "bk",
-    materialize: bool = True,
 ) -> tuple[DataFrame, int]:
     """Drop baskets whose post-prune item count exceeds
     ``max_basket_size`` before a basket self-join; returns
@@ -87,35 +59,20 @@ def cap_basket_size(
     computed (one basket-sized aggregate), logged loudly, and RETURNED
     so callers can keep their denominators consistent with the capped
     corpus.  When it does not bind — the overwhelmingly common case —
-    the input frame is returned UNCHANGED (modulo materialization), so
-    no join is added to the plan and existing plan-shape CI stays valid.
+    the input frame is returned UNCHANGED, so no join is added to the
+    plan and existing plan-shape CI stays valid.
 
-    The guard's size aggregate is an extra ACTION, so the pruned frame
-    is ``persist(DISK_ONLY)``'d first: the size scan materializes the
-    partitions, and the downstream pair self-join reads them TWICE
-    instead of recomputing the distinct+prune subtree per side — the
-    guard then costs roughly what the duplicate subtree used to.
-    ``persist`` (unlike ``localCheckpoint``) KEEPS lineage, so a lost
-    executor recomputes its partitions instead of failing the job —
-    the right trade for a default-on path at cluster scale.
-
-    Cache lifetime: the entry lives in the session's SQL CacheManager
-    until unpersisted.  Repeated calls over the SAME input dedupe to
-    one entry (CacheManager matches the logical plan), so the cache
-    grows with the number of DISTINCT mined inputs, not calls.  A
-    long-lived service mining many distinct inputs should either pass
-    ``materialize=False`` (the guard scan then recomputes the
-    distinct+prune subtree once — correctness is unaffected) or call
-    :func:`release_basket_caches` after each batch's terminal action
-    (every persisted handle is registered there for exactly this).
+    The guard's size aggregate is one extra job over the pruned frame;
+    its input, the ``baskets:items`` pin, is already materialized, so
+    the job re-runs only the cheap prune join.  Nothing is persisted:
+    that pin is a fresh ``localCheckpoint`` on every build, so a cache
+    entry keyed on the pruned plan could never be shared between builds
+    and would only accumulate in the session's CacheManager.
     """
     if max_basket_size is None:
         return pruned, 0
     if max_basket_size < 2:
         raise ValueError("max_basket_size must be >= 2")
-    if materialize:
-        pruned = pruned.persist(StorageLevel.DISK_ONLY)
-        _PERSISTED_CACHES.append(pruned)
     sizes = pruned.groupBy(basket_col).agg(
         F.count(F.lit(1)).alias("__bk_n")
     )
@@ -150,7 +107,6 @@ def _basket_pairs(
     *,
     min_support: int,
     max_basket_size: int | None,
-    materialize: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """Shared mining core for :func:`frequent_pairs` /
     :func:`association_rules` / ``ml.recommend.item_similarity_topk``:
@@ -175,7 +131,6 @@ def _basket_pairs(
     pruned, n_dropped = cap_basket_size(
         b.join(freq, "it").select("bk", "it", "n_it"),
         max_basket_size,
-        materialize=materialize,
     )
     if n_dropped:
         # Capped-corpus consistency (see module docstring): the carried

@@ -19,12 +19,37 @@ frames broadcast when the cohort is small.
 from __future__ import annotations
 
 from collections.abc import Sequence
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gofast_spark.session import pin
 # the shared auto/exact/sketch percentile switch (stats/prebin.py)
 from gofast_spark.stats.prebin import percentile_expr as _percentile_expr
+
+
+def _funnel_frame(
+    spark: SparkSession, steps: list[str], counts: list[int]
+) -> DataFrame:
+    """The per-step funnel rows from the step counts; a ratio over a zero
+    count is NULL (SQL's ``x / 0``), so an empty funnel has NULL ratios."""
+    first = counts[0]
+    rows = []
+    for i, (step, n) in enumerate(zip(steps, counts)):
+        prev = counts[i - 1] if i else n
+        rows.append(
+            (
+                i + 1,
+                step,
+                n,
+                n / prev if prev else None,
+                n / first if first else None,
+            )
+        )
+    return spark.createDataFrame(
+        rows,
+        "step_idx int, step string, n_users bigint, "
+        "conv_from_prev double, conv_from_first double",
+    )
 
 
 def funnel(
@@ -39,7 +64,8 @@ def funnel(
 
     ``steps`` is the ordered list of event types; a user reaches step k
     iff they have a step-k event at-or-after their first step-(k-1)
-    reach time.  Reach time for step k = the earliest such event."""
+    reach time.  Reach time for step k = the earliest such event.  A
+    ratio over a zero count is NULL, as SQL's division gives."""
     steps = list(steps)
     if len(steps) < 2:
         raise ValueError("funnel needs at least two steps")
@@ -72,25 +98,7 @@ def funnel(
         )
         counts.append(m["n"])
 
-    spark = df.sparkSession
-    rows = []
-    for i, (step, n) in enumerate(zip(steps, counts)):
-        prev = counts[i - 1] if i else n
-        first = counts[0]
-        rows.append(
-            (
-                i + 1,
-                step,
-                n,
-                float(n) / prev if prev else 0.0,
-                float(n) / first if first else 0.0,
-            )
-        )
-    return spark.createDataFrame(
-        rows,
-        "step_idx int, step string, n_users bigint, "
-        "conv_from_prev double, conv_from_first double",
-    )
+    return _funnel_frame(df.sparkSession, steps, counts)
 
 
 def retention_cohorts(
@@ -500,25 +508,7 @@ def funnel_windowed(
         )
         counts.append(m["n"])
 
-    spark = df.sparkSession
-    rows = []
-    for i, (step, n) in enumerate(zip(steps, counts)):
-        prev = counts[i - 1] if i else n
-        first = counts[0]
-        rows.append(
-            (
-                i + 1,
-                step,
-                n,
-                float(n) / prev if prev else 0.0,
-                float(n) / first if first else 0.0,
-            )
-        )
-    return spark.createDataFrame(
-        rows,
-        "step_idx int, step string, n_users bigint, "
-        "conv_from_prev double, conv_from_first double",
-    )
+    return _funnel_frame(df.sparkSession, steps, counts)
 
 
 def attribution_touches(

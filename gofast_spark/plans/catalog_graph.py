@@ -127,10 +127,7 @@ def pagerank_customer_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_suppkey") + _SUPP_OFFSET).alias("supp"),
     )
     e = edges_from_pairs(pairs, "cust", "supp", undirected=True)
-    # node frame is tiny relative to edges -> broadcast plan (see pagerank)
-    r = pagerank(
-        e, iterations=_PR_ITER, damping=_PR_D, broadcast_ranks=True
-    )
+    r = pagerank(e, iterations=_PR_ITER, damping=_PR_D)
     return r.select("node", F.round("rank", 8).cast("double").alias("rank"))
 
 

@@ -59,7 +59,8 @@ def train_centroids(
     pass, no shuffle, reproducible); init takes the first ``nlist``
     sampled vectors, then Lloyd iterations assign by max dot and
     re-normalize means.  Empty cells re-seed from the least-covered
-    sample row, keeping all ``nlist`` cells live.
+    sample row, keeping all ``nlist`` cells live.  Raises ``ValueError``
+    when ``df`` has no non-null vector (an empty corpus has no cells).
     """
     import numpy as np
 
@@ -70,6 +71,10 @@ def train_centroids(
         .limit(sample)
         .collect()
     )
+    if not rows:
+        raise ValueError(
+            "train_centroids: no non-null vectors to train on (empty corpus)"
+        )
     X = _normalize_rows(np.array([list(r[0]) for r in rows], dtype=float))
     nlist = min(nlist, len(X))
     C = X[:nlist].copy()

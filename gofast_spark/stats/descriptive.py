@@ -389,19 +389,15 @@ def lorenz_points(
     broadcast ``percentile_approx`` boundaries — distributed, no
     global sort, the 100-TB default; ``'auto'`` sketches above the
     100k-row threshold when ``n_rows`` is given."""
-    from gofast_spark.stats.prebin import _AUTO_THRESHOLD
+    from gofast_spark.stats.prebin import percentile_expr, use_sketch
 
-    if mode not in ("auto", "exact", "sketch"):
-        raise ValueError(f"mode must be auto|exact|sketch: {mode!r}")
+    sketch = use_sketch(mode, n_rows)
     x = F.col(column).cast("double")
     d = df.where(x.isNotNull() & (x >= 0)).select(x.alias("__x"))
-    sketch = mode == "sketch" or (
-        mode == "auto" and n_rows is not None and n_rows > _AUTO_THRESHOLD
-    )
     if sketch:
         qs = [i / buckets for i in range(1, buckets)]
         bounds = d.agg(
-            F.percentile_approx("__x", qs, F.lit(10_000)).alias("__b")
+            percentile_expr("__x", qs, "sketch", None).alias("__b")
         )
         b = d.crossJoin(F.broadcast(bounds)).select(
             "__x",

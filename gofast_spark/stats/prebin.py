@@ -44,9 +44,9 @@ _AUTO_THRESHOLD = 100_000
 _SKETCH_ACCURACY = 10_000
 
 
-def percentile_expr(col, q, mode: str, n_rows: int | None):
-    """Exact ``percentile`` or bounded-memory ``percentile_approx``
-    aggregate expression.
+def use_sketch(mode: str, n_rows: int | None, *, name: str = "mode") -> bool:
+    """The percentile switch: whether a quantile should come from the
+    bounded-memory sketch rather than an exact global sort.
 
     ``mode='exact'`` is the oracle escape hatch; ``'sketch'`` always
     sketches; ``'auto'`` (the DEFAULT of the callers) sketches only
@@ -55,13 +55,19 @@ def percentile_expr(col, q, mode: str, n_rows: int | None):
     stay exact) — below the threshold exact costs nothing and matches
     oracles bit-for-bit; above it an exact global percentile with no
     groupBy buffers every value into one final merge, the
-    single-fat-reducer hazard this switch removes."""
+    single-fat-reducer hazard this switch removes.  Any other ``mode``
+    raises ``ValueError`` naming the caller's parameter ``name``."""
     if mode not in ("auto", "exact", "sketch"):
-        raise ValueError(f"percentile mode must be auto|exact|sketch: {mode!r}")
-    sketch = mode == "sketch" or (
+        raise ValueError(f"{name} must be auto|exact|sketch: {mode!r}")
+    return mode == "sketch" or (
         mode == "auto" and n_rows is not None and n_rows > _AUTO_THRESHOLD
     )
-    if sketch:
+
+
+def percentile_expr(col, q, mode: str, n_rows: int | None):
+    """Exact ``percentile`` or bounded-memory ``percentile_approx``
+    aggregate expression, chosen by :func:`use_sketch`."""
+    if use_sketch(mode, n_rows, name="percentile mode"):
         return F.percentile_approx(col, q, F.lit(_SKETCH_ACCURACY))
     return F.percentile(col, q)
 

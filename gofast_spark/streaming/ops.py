@@ -9,6 +9,8 @@ the correctness catalog use; a live job just swaps the trigger).
 
 from __future__ import annotations
 
+import shutil
+import tempfile
 import uuid
 from collections.abc import Sequence
 
@@ -188,9 +190,12 @@ def run_available_now(
     at 32 on four cores that per-task overhead, not the operator work,
     dominated the drains.  The count is read once at ``start()`` and
     frozen into the query's checkpoint, which is safe to size per drain
-    here because every drain gets a fresh temporary checkpoint that is
-    never restarted.  Another thread that plans a query on the same
-    session while ``start()`` runs sees the lowered value.  The sinks
+    here because every drain gets a fresh checkpoint that is never
+    restarted: a ``tempfile.mkdtemp()`` directory, removed in a
+    ``finally`` however the drain ends (Spark removes its own temporary
+    checkpoint only when the query did not fail).  Another thread that
+    plans a query on the same session while ``start()`` runs sees the
+    lowered value.  The sinks
     that take a caller's checkpoint (:func:`write_stream_to_warehouse`,
     :func:`stream_merge_upsert`, :func:`stream_dedup_index_upsert`)
     deliberately keep the session value: their checkpoint freezes it
@@ -217,13 +222,19 @@ def run_available_now(
     key = "spark.sql.shuffle.partitions"
     session_parts = spark.conf.get(key)
     parts = min(int(session_parts), spark.sparkContext.defaultParallelism)
-    spark.conf.set(key, str(parts))
+    ckpt = tempfile.mkdtemp(prefix="drain-")
     try:
-        q = writer.start()
+        spark.conf.set(key, str(parts))
+        try:
+            q = writer.option("checkpointLocation", ckpt).start()
+        finally:
+            spark.conf.set(key, session_parts)
+        try:
+            q.awaitTermination()
+        finally:
+            q.stop()
     finally:
-        spark.conf.set(key, session_parts)
-    q.awaitTermination()
-    q.stop()
+        shutil.rmtree(ckpt, ignore_errors=True)
     if mode != "complete":
         return spark.table(qname)
     if "df" not in holder:  # source had no data: zero micro-batches
@@ -344,21 +355,18 @@ def stream_static_enrich(
     on,
     *,
     how: str = "inner",
-    broadcast_static: bool = True,
 ) -> DataFrame:
     """Stream-static join: enrich a stream with a slowly-changing
     dimension frame.
 
     The static side is re-read per micro-batch by Structured Streaming
-    (so a refreshed dimension table is picked up automatically); with
-    ``broadcast_static`` the dimension ships to executors instead of
-    shuffling the stream — the streaming analog of the engine's
+    (so a refreshed dimension table is picked up automatically); the
+    dimension is broadcast to executors instead of shuffling the stream — the streaming analog of the engine's
     broadcast-dimension policy.  Stateless: no watermark needed, any
     output mode.  Only stream-side outer joins are allowed by Spark for
     stream-static shapes (the static side has no watermark to close on).
     """
-    s = F.broadcast(static_df) if broadcast_static else static_df
-    return sdf.join(s, on=on, how=how)
+    return sdf.join(F.broadcast(static_df), on=on, how=how)
 
 
 def stream_stream_interval_join(

@@ -16,15 +16,12 @@ Spark-first plan — reuses the shuffle-free shingle machinery from
    exploded to (doc_id, hash);
 2. eval k-gram hashes: same projection over the benchmark table, then a
    global ``distinct`` — benchmarks are tiny relative to the corpus, so
-   this frame is KBs-to-MBs and is **broadcast** by default;
+   this frame is KBs-to-MBs and is always **broadcast**;
 3. one broadcast-hash semi/inner join on the gram hash + one per-doc
    aggregation.  The 100-TB cost is a single corpus scan; nothing about
    the corpus ever shuffles except the per-doc count aggregation (and the
    hit-side aggregation is pre-filtered to matched grams only, a tiny
    fraction of the scan).
-
-With ``broadcast_eval=False`` (an eval suite too big to broadcast) both
-sides hash-shuffle on the gram hash — still an equi-join, never all-pairs.
 """
 
 from __future__ import annotations
@@ -42,7 +39,6 @@ def contamination_check(
     eval_text_col: str | None = None,
     k: int = 3,
     threshold: float = 0.0,
-    broadcast_eval: bool = True,
 ) -> DataFrame:
     """Per-corpus-doc contamination stats vs an eval benchmark table.
 
@@ -66,13 +62,11 @@ def contamination_check(
     ev = eval_df.select(F.col(ecol).alias("__etext")).withColumn(
         "__eid", F.monotonically_increasing_id()
     )
-    eval_grams = (
+    eval_grams = F.broadcast(
         doc_shingles(ev, "__eid", "__etext", k=k)
         .select(F.col("sh_hash").alias("__eh"))
         .distinct()
     )
-    if broadcast_eval:
-        eval_grams = F.broadcast(eval_grams)
     grams = doc_shingles(corpus, id_col, text_col, k=k)
     totals = grams.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_grams"))
     hits = (
@@ -100,7 +94,6 @@ def decontaminate(
     eval_text_col: str | None = None,
     k: int = 3,
     threshold: float = 0.0,
-    broadcast_eval: bool = True,
 ) -> DataFrame:
     """The corpus minus contaminated docs — a left-anti join of the
     corpus against the flagged ids, preserving the input schema."""
@@ -112,7 +105,6 @@ def decontaminate(
         eval_text_col=eval_text_col,
         k=k,
         threshold=threshold,
-        broadcast_eval=broadcast_eval,
     ).where(F.col("is_contaminated") == 1)
     return corpus.join(
         flagged.select(id_col), id_col, "left_anti"

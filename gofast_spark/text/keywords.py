@@ -69,9 +69,7 @@ def textrank_keywords(
     edges = d1.unionByName(
         d1.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).distinct()
-    r = pagerank(
-        edges, iterations=iterations, damping=damping, broadcast_ranks=True
-    )
+    r = pagerank(edges, iterations=iterations, damping=damping)
     return (
         r.select(F.col("node").alias("token"), "rank")
         .orderBy(F.round("rank", 8).desc(), "token")

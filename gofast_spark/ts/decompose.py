@@ -389,9 +389,9 @@ def haar_energy(
 
     Unnormalized block sums stay EXACT quantized integers (one small
     groupBy per level over the rollup series, complete blocks only),
-    so every energy is an exact-integer ratio.  Output per level:
-    ``(level, n_blocks, energy, energy_share)`` with shares over the
-    detail energies."""
+    so every energy is an exact-integer ratio.  Output per level that
+    has at least one complete block: ``(level, n_blocks, energy,
+    energy_share)`` with shares over the detail energies."""
     vu = F.floor(F.col(value_col).cast("double") * F.lit(units)
                  + F.lit(0.5)).cast("bigint")
     base = df.select(
@@ -412,11 +412,13 @@ def haar_energy(
             )
             .where(F.col("__c") == 2 ** lv)
         )
+        # a level with no complete block has no row (SQL's GROUP BY
+        # over no rows), so an empty series yields an empty frame
         e = d.agg(
             F.lit(lv).cast("int").alias("level"),
             F.count(F.lit(1)).cast("bigint").alias("n_blocks"),
             F.sum(F.col("__d") * F.col("__d")).alias("__e_u"),
-        )
+        ).where(F.col("n_blocks") > 0)
         per_level.append(e)
     allv = per_level[0]
     for e in per_level[1:]:

@@ -180,11 +180,8 @@ class TestMinhashHelpers:
             "id string, sh_hash bigint",
         )
         pairs = spark.createDataFrame([("A", "B")], "id_a string, id_b string")
-        for bc in (False, True):
-            r = shingle_jaccard(
-                shingles, pairs, "id", broadcast_pairs=bc
-            ).first()
-            assert r["jaccard"] == pytest.approx(0.4), bc
+        r = shingle_jaccard(shingles, pairs, "id").first()
+        assert r["jaccard"] == pytest.approx(0.4)
 
     def test_lsh_collision_curve_closed_form(self, spark):
         from gofast_spark.dedup.minhash import lsh_collision_curve

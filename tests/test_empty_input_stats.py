@@ -24,7 +24,15 @@ def sf_empty(tmp_path_factory, sf_small):
 
 
 @pytest.mark.parametrize(
-    "name", ["cvm_normal_acctbal", "mood_median_events", "friedman_events"]
+    "name",
+    [
+        "cvm_normal_acctbal",
+        "mood_median_events",
+        "friedman_events",
+        "haar_energy_daily",
+        "funnel_events_vcp",
+        "funnel_windowed_events",
+    ],
 )
 def test_empty_tables_match_oracle(spark, sf_empty, name):
     assert_passed(catalog_checks(spark, name, sf_empty))
@@ -36,3 +44,19 @@ def test_dagostino_k2_rejects_empty(spark, sf_empty):
 
     with pytest.raises(ValueError, match="at least 8 non-null values"):
         QUERIES["dagostino_k2_acctbal"](spark, sf_empty)
+
+
+@pytest.mark.parametrize(
+    "name, match",
+    [
+        ("ivf_kmeans_fullprobe_topk", "no non-null vectors"),
+        ("kpca_landmark_identity", "no landmark rows"),
+    ],
+)
+def test_driver_fitted_entries_reject_empty(spark, sf_empty, name, match):
+    """Centroids and landmark kernels are fitted on the driver from a
+    sample; an empty table has none to fit, so the build raises."""
+    from gofast_spark.plans.catalog import QUERIES
+
+    with pytest.raises(ValueError, match=match):
+        QUERIES[name](spark, sf_empty)

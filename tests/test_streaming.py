@@ -229,3 +229,40 @@ def test_drain_restores_partitions_when_start_raises(spark, sf_small):
     with pytest.raises(AnalysisException, match="STREAMING_OUTPUT_MODE"):
         run_available_now(stream.select("event_id"), mode="complete")
     assert spark.conf.get(key) == before
+
+
+def test_drain_leaves_no_checkpoint_behind(spark, sf_small, tmp_path, monkeypatch):
+    """A drain's checkpoint is removed whether ``start()`` fails or the
+    drain succeeds.  Python's and the JVM's temp dirs both point at
+    ``tmp_path`` for the test, so a checkpoint left by either side shows:
+    Spark names its own temporary checkpoints ``temporary-*``, the drain
+    names its ``drain-*`` (the JVM also unpacks native libraries and a
+    session artifact directory there on first use)."""
+    import tempfile
+
+    from pyspark.errors import AnalysisException
+
+    from gofast_spark.streaming import read_event_stream, run_available_now
+
+    def checkpoints():
+        return [
+            p.name for p in tmp_path.iterdir()
+            if p.name.startswith(("temporary-", "drain-"))
+        ]
+
+    system = spark.sparkContext._jvm.java.lang.System
+    jvm_tmp = system.getProperty("java.io.tmpdir")
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    system.setProperty("java.io.tmpdir", str(tmp_path))
+    try:
+        stream = read_event_stream(spark, sf_small, glob="events.parquet")
+        with pytest.raises(AnalysisException, match="STREAMING_OUTPUT_MODE"):
+            run_available_now(stream.select("event_id"), mode="complete")
+        assert checkpoints() == []
+        out = run_available_now(
+            stream.groupBy("event_type").count(), mode="complete"
+        )
+        assert out.count() > 0
+        assert checkpoints() == []
+    finally:
+        system.setProperty("java.io.tmpdir", jvm_tmp)
