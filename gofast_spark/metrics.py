@@ -173,7 +173,6 @@ def gini_score(
     y_col: str,
     score_col: str,
     *,
-    tiebreak: str | None = None,
     bins: int | str | None = "auto",
     relative_error: float = 1e-4,
 ) -> DataFrame:
@@ -182,8 +181,7 @@ def gini_score(
     (Mann-Whitney) identity over **midranks** — tied scores get the
     average rank of the tie group (rank() + (tie_count - 1)/2, as
     sklearn's roc_auc_score does), so AUC is unbiased on heavily tied
-    score columns.  ``tiebreak`` is kept for signature compatibility
-    but no longer affects the result (midranks are order-free).
+    score columns; midranks are order-free, so no tie-break is needed.
 
     Scale shape: rows are first aggregated per distinct score value
     (map-side partial combine), and the rank cumulative runs over the

@@ -150,7 +150,9 @@ def linkage_matrix(
         .select(*[F.col(c) for c in columns])
         .collect()
     )
-    X = np.array([list(r) for r in rows], dtype=float)
+    # reshape: an empty sample is a 0 x d matrix, which merges nothing
+    X = np.array([list(r) for r in rows], dtype=float).reshape(
+        len(rows), len(columns))
     m = len(X)
     # full pairwise distance matrix of the bounded sample
     D = np.sqrt(((X[:, None, :] - X[None, :, :]) ** 2).sum(axis=2))

@@ -3769,8 +3769,9 @@ def dataset_card_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     dataset_card) crossed with the C4/Gopher composite-filter keep
     rate (text/corpus_filter.py) — the summary block a corpus release
     publishes, composed from already-verified constituents in one
-    plan.  Every ratio is an exact integer division and the entropy
-    rides u6-quantized integer terms, so the card is engine-exact."""
+    plan.  Every ratio is an exact integer division (NULL over a zero
+    count, as in SQL) and the entropy rides u6-quantized integer terms,
+    so the card is engine-exact."""
     from gofast_spark.text import corpus_filter
     from gofast_spark.text.analysis import dataset_card
 
@@ -3785,8 +3786,9 @@ def dataset_card_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_docs", "n_sources", "n_langs", "n_tokens", "n_types",
         "hapax_types", "n_exact_unique", "mean_tokens", "ttr",
         "hapax_ratio", "exact_dup_ratio", "lang_entropy_u6", "n_kept",
-        (F.col("n_kept").cast("double") / F.col("n_docs").cast("double"))
-        .alias("keep_ratio"),
+        F.try_divide(
+            F.col("n_kept").cast("double"), F.col("n_docs").cast("double")
+        ).alias("keep_ratio"),
     )
 
 

@@ -157,9 +157,8 @@ def gini_score_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders").select(
         (F.col("o_totalprice") > 300000).cast("int").alias("y"),
         "o_totalprice",
-        "o_orderkey",
     )
-    out = gini_score(o, "y", "o_totalprice", tiebreak="o_orderkey")
+    out = gini_score(o, "y", "o_totalprice")
     return out.select(
         F.round("gini_score", 6).cast("double").alias("gini_score")
     )

@@ -17,8 +17,9 @@ def _bounds(
     factor: float,
     quantiles: tuple[float, float],
     exact: bool,
-) -> dict[str, tuple[float, float]]:
-    """One aggregation pass -> {col: (lo, hi)}."""
+) -> dict[str, tuple[float | None, float | None]]:
+    """One aggregation pass -> {col: (lo, hi)}.  A column with no non-null
+    value (an empty frame) has NULL bounds, which clip nothing."""
     aggs = []
     qlo, qhi = quantiles
     for c in columns:
@@ -43,11 +44,17 @@ def _bounds(
     for c in columns:
         if method == "iqr":
             q1, q3 = row[f"__q1_{c}"], row[f"__q3_{c}"]
-            iqr = q3 - q1
-            out[c] = (q1 - factor * iqr, q3 + factor * iqr)
+            if q1 is None:
+                out[c] = (None, None)
+            else:
+                iqr = q3 - q1
+                out[c] = (q1 - factor * iqr, q3 + factor * iqr)
         elif method == "zscore":
             mu, sd = row[f"__mu_{c}"], row[f"__sd_{c}"] or 0.0
-            out[c] = (mu - factor * sd, mu + factor * sd)
+            if mu is None:
+                out[c] = (None, None)
+            else:
+                out[c] = (mu - factor * sd, mu + factor * sd)
         else:
             out[c] = (row[f"__lo_{c}"], row[f"__hi_{c}"])
     return out

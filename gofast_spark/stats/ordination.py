@@ -240,7 +240,8 @@ def dca_analysis_power(
       sketch-based :func:`dca_analysis` remains the unbounded-site
       scale path.
 
-    Returns (site, axis1, axis2) with axis2 detrended.
+    Returns (site, axis1, axis2) with axis2 detrended; no rows when ``df``
+    has none (SQL's GROUP BY over no rows).
     """
     import numpy as np
 
@@ -255,6 +256,12 @@ def dca_analysis_power(
     persisted = [cells.persist()]
     try:
         total = cells.agg(F.sum("n")).collect()[0][0]
+        if total is None:
+            return cells.select(
+                F.col("site").alias(site_col),
+                F.lit(0.0).alias("axis1"),
+                F.lit(0.0).alias("axis2"),
+            )
         col_mass = {
             r["species"]: r["m"] / total
             for r in cells.groupBy("species")

@@ -649,7 +649,8 @@ def dataset_card(
     partition-order-free.  Returns one row ``(n_docs, n_sources,
     n_langs, n_tokens, n_types, hapax_types, n_exact_unique,
     mean_tokens, ttr, hapax_ratio, exact_dup_ratio,
-    lang_entropy_u6)``."""
+    lang_entropy_u6)``; a ratio over a zero count is NULL, as SQL's
+    division gives, so an empty corpus has NULL ratios."""
     norm = normalize_text(text_col)
     docs = df.agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -701,18 +702,20 @@ def dataset_card(
             "n_types",
             "hapax_types",
             "n_exact_unique",
-            (F.col("n_tokens").cast("double") / nd).alias("mean_tokens"),
-            (
-                F.col("n_types").cast("double")
-                / F.col("n_tokens").cast("double")
-            ).alias("ttr"),
-            (
-                F.col("hapax_types").cast("double")
-                / F.col("n_types").cast("double")
-            ).alias("hapax_ratio"),
-            ((nd - F.col("n_exact_unique").cast("double")) / nd).alias(
-                "exact_dup_ratio"
+            F.try_divide(F.col("n_tokens").cast("double"), nd).alias(
+                "mean_tokens"
             ),
+            F.try_divide(
+                F.col("n_types").cast("double"),
+                F.col("n_tokens").cast("double"),
+            ).alias("ttr"),
+            F.try_divide(
+                F.col("hapax_types").cast("double"),
+                F.col("n_types").cast("double"),
+            ).alias("hapax_ratio"),
+            F.try_divide(
+                nd - F.col("n_exact_unique").cast("double"), nd
+            ).alias("exact_dup_ratio"),
             "lang_entropy_u6",
         )
     )

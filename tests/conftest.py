@@ -37,7 +37,11 @@ def spark():
     from gofast_spark import get_session
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "8")
-    s = get_session("gofast-spark-tests", master=f"local[{cpus}]")
+    # a job lists the skipped stages it reuses and perfbench/layers.Tracer
+    # (tests/test_survey.py) looks each one up; past its cap (default
+    # 1000) the status store evicts skipped stages first
+    s = get_session("gofast-spark-tests", master=f"local[{cpus}]",
+                    **{"spark.ui.retainedStages": "100000"})
     yield s
 
 

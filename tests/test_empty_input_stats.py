@@ -32,6 +32,10 @@ def sf_empty(tmp_path_factory, sf_small):
         "haar_energy_daily",
         "funnel_events_vcp",
         "funnel_windowed_events",
+        "outliers_iqr_clip_acctbal",
+        "linkage_matrix_nation",
+        "dca_segment_status_orders",
+        "dataset_card_documents",
     ],
 )
 def test_empty_tables_match_oracle(spark, sf_empty, name):
@@ -60,3 +64,14 @@ def test_driver_fitted_entries_reject_empty(spark, sf_empty, name, match):
 
     with pytest.raises(ValueError, match=match):
         QUERIES[name](spark, sf_empty)
+
+
+@pytest.mark.parametrize("method", ["iqr", "zscore", "winsorize"])
+def test_outlier_clip_of_empty_frame(spark, method):
+    """No value, no bound: clipping an empty frame returns it unchanged."""
+    from gofast_spark.quality.outliers import handle_outliers_in
+
+    df = spark.createDataFrame([], "x double")
+    out = handle_outliers_in(df, ["x"], method=method, action="clip")
+    assert out.schema == df.schema
+    assert out.collect() == []

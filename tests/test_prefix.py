@@ -65,6 +65,31 @@ def test_cumsum_plan_uses_range_partitioning(spark):
     assert "rangepartitioning" not in plan
 
 
+def test_cumsum_exact_when_range_partitioner_samples(spark):
+    """At 200k hash-keyed rows in 16 input partitions the RangePartitioner
+    samples instead of reading every row, so two range exchanges over the
+    same input may pick different boundaries; the pinned range layout is
+    read by both legs, and the sum equals the single-reducer window."""
+    from pyspark.sql import Window
+
+    base = spark.range(0, 200_000, 1, 16).select(
+        F.xxhash64("id").alias("k"),
+        (F.pmod(F.xxhash64("id", F.lit(1)), F.lit(1000)) + 1).alias("v"),
+    )
+    exact = base.withColumn(
+        "c",
+        F.sum("v").over(
+            Window.orderBy("k").rowsBetween(
+                Window.unboundedPreceding, Window.currentRow
+            )
+        ),
+    )
+    got = distributed_cumsum(base, "k", "v", num_partitions=32)
+    joined = exact.join(got, "k")
+    assert joined.count() == 200_000
+    assert joined.where(F.col("c") != F.col("cumsum")).count() == 0
+
+
 def test_hll_rollup_within_tolerance(spark):
     """Daily sketches unioned to a global estimate must track the exact
     distinct count (functions/sketches.py)."""
