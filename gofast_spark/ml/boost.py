@@ -37,6 +37,48 @@ from gofast_spark.session import pin
 _U = 1_000  # milli-unit quantization of the target
 
 
+def _split_candidates(hist: DataFrame, lo: float, width: float) -> DataFrame:
+    """Every split of a ``(bin, n, s)`` residual histogram that leaves
+    rows on both sides: ``(threshold, gain, left_u3, right_u3,
+    split_bin)``, with the truncated integer leaf means."""
+    w = Window.orderBy("bin").rowsBetween(Window.unboundedPreceding, -1)
+    totals = hist.agg(F.sum("n").alias("__n"), F.sum("s").alias("__s"))
+    cand = (
+        hist.withColumn("nl", F.coalesce(F.sum("n").over(w), F.lit(0)))
+        .withColumn("sl", F.coalesce(F.sum("s").over(w), F.lit(0)))
+        .crossJoin(F.broadcast(totals))
+        .where((F.col("nl") > 0) & (F.col("__n") - F.col("nl") > 0))
+    )
+    nl = F.col("nl").cast("double")
+    nr = (F.col("__n") - F.col("nl")).cast("double")
+    sl = F.col("sl").cast("double")
+    sr = (F.col("__s") - F.col("sl")).cast("double")
+    return cand.select(
+        (F.lit(lo) + F.col("bin").cast("double") * F.lit(width))
+        .alias("threshold"),
+        (sl * sl / nl + sr * sr / nr).alias("gain"),
+        (sl / nl).cast("bigint").alias("left_u3"),
+        (sr / nr).cast("bigint").alias("right_u3"),
+        F.col("bin").alias("split_bin"),
+    )
+
+
+def _best_split(cands: DataFrame, *tiebreak: str) -> DataFrame:
+    """The max-gain row of ``cands`` without its gain, ties to the
+    smallest ``tiebreak`` values; NO row when there is no candidate (a
+    ``max_by`` over no rows still returns one NULL row), so a round
+    without a valid split adds no model row and empties the state."""
+    key = F.struct(
+        F.col("gain"), *[(-F.col(c)).alias(c) for c in tiebreak]
+    )
+    row = F.struct(*[c for c in cands.columns if c != "gain"])
+    return (
+        cands.agg(F.max_by(row, key).alias("b"))
+        .where(F.col("b").isNotNull())
+        .select("b.*")
+    )
+
+
 def fit_boosted_stumps(
     df: DataFrame,
     feature_col: str,
@@ -97,36 +139,13 @@ def fit_boosted_stumps(
         F.col("base_u3").alias("left_u3"),
         F.col("base_u3").alias("right_u3"),
     )
-    w = Window.orderBy("bin").rowsBetween(Window.unboundedPreceding, -1)
     for k in range(1, rounds + 1):
         hist = state.select(
             "bin",
             "n",
             (F.col("sy") - F.col("n") * F.col("pred")).alias("s"),
         )
-        totals = hist.agg(F.sum("n").alias("__n"), F.sum("s").alias("__s"))
-        cand = (
-            hist.withColumn("nl", F.coalesce(F.sum("n").over(w), F.lit(0)))
-            .withColumn("sl", F.coalesce(F.sum("s").over(w), F.lit(0)))
-            .crossJoin(F.broadcast(totals))
-            .where((F.col("nl") > 0) & (F.col("__n") - F.col("nl") > 0))
-        )
-        nl = F.col("nl").cast("double")
-        nr = (F.col("__n") - F.col("nl")).cast("double")
-        sl = F.col("sl").cast("double")
-        sr = (F.col("__s") - F.col("sl")).cast("double")
-        gain = sl * sl / nl + sr * sr / nr
-        scored = cand.select(
-            (F.lit(lo) + F.col("bin").cast("double") * F.lit(width))
-            .alias("threshold"),
-            gain.alias("gain"),
-            (sl / nl).cast("bigint").alias("left_u3"),
-            (sr / nr).cast("bigint").alias("right_u3"),
-            F.col("bin").alias("split_bin"),
-        )
-        pick = F.struct(F.col("gain"), (-F.col("threshold")).alias("nt"))
-        row = F.struct("threshold", "left_u3", "right_u3", "split_bin")
-        best = scored.agg(F.max_by(row, pick).alias("b")).select("b.*")
+        best = _best_split(_split_candidates(hist, lo, width), "threshold")
         state = state.crossJoin(F.broadcast(best)).select(
             "bin",
             "n",
@@ -222,53 +241,18 @@ def fit_boosted_stumps_multi(
         F.col("base_u3").alias("left_u3"),
         F.col("base_u3").alias("right_u3"),
     )
-    w = Window.orderBy("bin").rowsBetween(Window.unboundedPreceding, -1)
     for k in range(1, rounds + 1):
         cands = None
-        for j, (c, lo, hi, b) in enumerate(specs):
-            width = (hi - lo) / b
+        for j, (_c, lo, hi, b) in enumerate(specs):
             hist = state.groupBy(F.col(f"b{j}").alias("bin")).agg(
                 F.sum("n").alias("n"),
                 F.sum(F.col("sy") - F.col("n") * F.col("pred")).alias("s"),
             )
-            totals = hist.agg(
-                F.sum("n").alias("__n"), F.sum("s").alias("__s")
-            )
-            cand = (
-                hist.withColumn(
-                    "nl", F.coalesce(F.sum("n").over(w), F.lit(0))
-                )
-                .withColumn(
-                    "sl", F.coalesce(F.sum("s").over(w), F.lit(0))
-                )
-                .crossJoin(F.broadcast(totals))
-                .where(
-                    (F.col("nl") > 0) & (F.col("__n") - F.col("nl") > 0)
-                )
-            )
-            nl = F.col("nl").cast("double")
-            nr = (F.col("__n") - F.col("nl")).cast("double")
-            sl = F.col("sl").cast("double")
-            sr = (F.col("__s") - F.col("sl")).cast("double")
-            cand = cand.select(
-                F.lit(j).alias("fidx"),
-                (F.lit(lo) + F.col("bin").cast("double") * F.lit(width))
-                .alias("threshold"),
-                (sl * sl / nl + sr * sr / nr).alias("gain"),
-                (sl / nl).cast("bigint").alias("left_u3"),
-                (sr / nr).cast("bigint").alias("right_u3"),
-                F.col("bin").alias("split_bin"),
+            cand = _split_candidates(hist, lo, (hi - lo) / b).select(
+                F.lit(j).alias("fidx"), "*"
             )
             cands = cand if cands is None else cands.unionByName(cand)
-        ordkey = F.struct(
-            F.col("gain"),
-            (-F.col("fidx")).alias("nf"),
-            (-F.col("threshold")).alias("nt"),
-        )
-        row = F.struct(
-            "fidx", "threshold", "left_u3", "right_u3", "split_bin"
-        )
-        best = cands.agg(F.max_by(row, ordkey).alias("b")).select("b.*")
+        best = _best_split(cands, "fidx", "threshold")
         goes_left = None
         for j in range(len(specs)):
             c = (F.col("fidx") == j) & (F.col(f"b{j}") < F.col("split_bin"))

@@ -4,7 +4,7 @@ thresholded correlation pairs (SURVEY §2.10 remainder).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gofast_spark.plans.catalog import _t, query
@@ -17,6 +17,25 @@ _SURV = """
              CAST(user_id % 4 <> 0 AS INTEGER) AS ev
       FROM events WHERE value IS NOT NULL)
 """
+
+
+def _surv(
+    spark: SparkSession, sf_dir: str, *, seg: bool = False, **extra: Column
+) -> DataFrame:
+    """The ``_SURV`` frame as ``(dur, ev)``, then each ``extra`` column
+    by name.  ``seg=True`` puts the event type first as ``seg`` and
+    keeps the typed events only, as ``_GSURV`` does."""
+    e = _t(spark, sf_dir, "events").where(F.col("value").isNotNull())
+    key = []
+    if seg:
+        e = e.where(F.col("event_type").isNotNull())
+        key = [F.col("event_type").alias("seg")]
+    return e.select(
+        *key,
+        F.floor(F.col("value")).cast("bigint").alias("dur"),
+        (F.col("user_id") % 4 != 0).cast("int").alias("ev"),
+        *[c.alias(name) for name, c in extra.items()],
+    )
 
 
 @query(
@@ -55,10 +74,7 @@ def kaplan_meier_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     (kaplan_meier_analysis, gofast/stats/survival_reliability.py:24)."""
     from gofast_spark.stats.survival import kaplan_meier
 
-    e = _t(spark, sf_dir, "events").where(F.col("value").isNotNull()).select(
-        F.floor(F.col("value")).cast("bigint").alias("dur"),
-        (F.col("user_id") % 4 != 0).cast("int").alias("ev"),
-    )
+    e = _surv(spark, sf_dir)
     out = kaplan_meier(e, "dur", "ev")
     return out.select(
         F.col("duration"),
@@ -103,10 +119,7 @@ def nelson_aalen_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     ref fits lifelines driver-side, gofast/stats/survival_reliability.py:24)."""
     from gofast_spark.stats.survival import nelson_aalen
 
-    e = _t(spark, sf_dir, "events").where(F.col("value").isNotNull()).select(
-        F.floor(F.col("value")).cast("bigint").alias("dur"),
-        (F.col("user_id") % 4 != 0).cast("int").alias("ev"),
-    )
+    e = _surv(spark, sf_dir)
     out = nelson_aalen(e, "dur", "ev")
     return out.select(
         F.col("duration"),
@@ -177,11 +190,8 @@ def logrank_test_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct-time table, engine-deterministic by construction."""
     from gofast_spark.stats.survival import logrank_test
 
-    e = _t(spark, sf_dir, "events").where(F.col("value").isNotNull()).select(
-        F.floor(F.col("value")).cast("bigint").alias("dur"),
-        (F.col("user_id") % 4 != 0).cast("int").alias("ev"),
-        F.when(F.col("user_id") % 2 == 0, "a").otherwise("b").alias("grp"),
-    )
+    e = _surv(spark, sf_dir,
+              grp=F.when(F.col("user_id") % 2 == 0, "a").otherwise("b"))
     out = logrank_test(e, "dur", "ev", "grp", "a", "b")
     return out.select(
         F.round("chi2", 6).cast("double").alias("chi2"),
@@ -414,10 +424,7 @@ def weibull_fit_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums in both engines."""
     from gofast_spark.stats.survival import weibull_fit
 
-    e = _t(spark, sf_dir, "events").where(F.col("value").isNotNull()).select(
-        F.floor(F.col("value")).cast("bigint").alias("dur"),
-        (F.col("user_id") % 4 != 0).cast("int").alias("ev"),
-    )
+    e = _surv(spark, sf_dir)
     return weibull_fit(e, "dur", "ev")
 
 
@@ -500,13 +507,7 @@ def rmst_by_segment_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle."""
     from gofast_spark.stats.survival import restricted_mean_survival_grouped
 
-    e = _t(spark, sf_dir, "events").where(
-        F.col("value").isNotNull() & F.col("event_type").isNotNull()
-    ).select(
-        F.col("event_type").alias("seg"),
-        F.floor(F.col("value")).cast("bigint").alias("dur"),
-        (F.col("user_id") % 4 != 0).cast("int").alias("ev"),
-    )
+    e = _surv(spark, sf_dir, seg=True)
     return restricted_mean_survival_grouped(e, "dur", "ev", "seg", tau=300.0)
 
 
@@ -571,12 +572,11 @@ def aalen_johansen_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     integers (the final-transcendental discipline)."""
     from gofast_spark.stats.survival import aalen_johansen
 
-    e = _t(spark, sf_dir, "events").where(F.col("value").isNotNull()).select(
-        F.floor(F.col("value")).cast("bigint").alias("dur"),
-        F.when(F.col("user_id") % 4 == 0, F.lit(0))
+    e = _surv(
+        spark, sf_dir,
+        cause=F.when(F.col("user_id") % 4 == 0, F.lit(0))
         .when(F.col("user_id") % 4 == 1, F.lit(1))
-        .otherwise(F.lit(2))
-        .alias("cause"),
+        .otherwise(F.lit(2)),
     )
     out = aalen_johansen(e, "dur", "cause")
 
@@ -674,13 +674,7 @@ def cox_ph_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     disagree by 1 ulp on some arguments (observed at sf0.01)."""
     from gofast_spark.stats.survival import cox_ph_binary
 
-    e = _t(spark, sf_dir, "events").where(
-        F.col("value").isNotNull()
-    ).select(
-        F.floor(F.col("value")).cast("bigint").alias("dur"),
-        (F.col("user_id") % 4 != 0).cast("int").alias("ev"),
-        (F.col("user_id") % 2).cast("int").alias("grp"),
-    )
+    e = _surv(spark, sf_dir, grp=(F.col("user_id") % 2).cast("int"))
     out = cox_ph_binary(e, "dur", "ev", "grp", iterations=_COX_ITER)
     return out.select(
         "beta",
@@ -765,14 +759,8 @@ def cox_ph_by_segment_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     hazard_ratio presents micro-unit (exp 1-ulp discipline)."""
     from gofast_spark.stats.survival import cox_ph_binary_grouped
 
-    e = _t(spark, sf_dir, "events").where(
-        F.col("value").isNotNull() & F.col("event_type").isNotNull()
-    ).select(
-        F.col("event_type").alias("seg"),
-        F.floor(F.col("value")).cast("bigint").alias("dur"),
-        (F.col("user_id") % 4 != 0).cast("int").alias("ev"),
-        (F.col("user_id") % 2).cast("int").alias("grp"),
-    )
+    e = _surv(spark, sf_dir, seg=True,
+              grp=(F.col("user_id") % 2).cast("int"))
     out = cox_ph_binary_grouped(e, "dur", "ev", "grp", "seg",
                                 iterations=_COX_ITER)
     return out.select(
@@ -842,12 +830,7 @@ def rmst_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     window, nano-unit-exact segment sums."""
     from gofast_spark.stats.survival import restricted_mean_survival
 
-    e = _t(spark, sf_dir, "events").where(
-        F.col("value").isNotNull()
-    ).select(
-        F.floor(F.col("value")).cast("bigint").alias("dur"),
-        (F.col("user_id") % 4 != 0).cast("int").alias("ev"),
-    )
+    e = _surv(spark, sf_dir)
     return restricted_mean_survival(e, "dur", "ev", tau=300.0)
 
 
@@ -880,13 +863,7 @@ def km_median_by_segment_events(
     through exactly 1/2 sits 1 ulp from the JVM/libm split)."""
     from gofast_spark.stats.survival import km_median_grouped
 
-    e = _t(spark, sf_dir, "events").where(
-        F.col("value").isNotNull() & F.col("event_type").isNotNull()
-    ).select(
-        F.col("event_type").alias("seg"),
-        F.floor(F.col("value")).cast("bigint").alias("dur"),
-        (F.col("user_id") % 4 != 0).cast("int").alias("ev"),
-    )
+    e = _surv(spark, sf_dir, seg=True)
     return km_median_grouped(e, "dur", "ev", "seg")
 
 
@@ -936,13 +913,7 @@ def weibull_by_segment_events(
     median, Weibull) the r10 verdict queued for breadth."""
     from gofast_spark.stats.survival import weibull_fit_grouped
 
-    e = _t(spark, sf_dir, "events").where(
-        F.col("value").isNotNull() & F.col("event_type").isNotNull()
-    ).select(
-        F.col("event_type").alias("seg"),
-        F.floor(F.col("value")).cast("bigint").alias("dur"),
-        (F.col("user_id") % 4 != 0).cast("int").alias("ev"),
-    )
+    e = _surv(spark, sf_dir, seg=True)
     return weibull_fit_grouped(e, "dur", "ev", "seg")
 
 
@@ -1013,11 +984,8 @@ def gehan_wilcoxon_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct-time construction with ordered-window accumulation."""
     from gofast_spark.stats.survival import logrank_test
 
-    e = _t(spark, sf_dir, "events").where(F.col("value").isNotNull()).select(
-        F.floor(F.col("value")).cast("bigint").alias("dur"),
-        (F.col("user_id") % 4 != 0).cast("int").alias("ev"),
-        F.when(F.col("user_id") % 2 == 0, "a").otherwise("b").alias("grp"),
-    )
+    e = _surv(spark, sf_dir,
+              grp=F.when(F.col("user_id") % 2 == 0, "a").otherwise("b"))
     out = logrank_test(e, "dur", "ev", "grp", "a", "b", weight="gehan")
     return out.select(
         F.round("chi2", 6).cast("double").alias("chi2"),

@@ -95,58 +95,52 @@ def mode_of(df: DataFrame, column: str) -> DataFrame:
     )
 
 
-def gini_coeff(
-    df: DataFrame, column: str, *, approx_buckets: int | None = None
-) -> DataFrame:
+def _gini(df: DataFrame, column: str, keys: list[str]) -> DataFrame:
+    """``(keys, gini, n)`` per group of ``keys`` (one row when there are
+    none) by the distinct-value rank identity of :func:`gini_coeff`."""
+    c = F.col(column)
+    keep = c.isNotNull()
+    for k in keys:
+        keep = keep & F.col(k).isNotNull()
+    src = (
+        df.where(keep)
+        .groupBy(*keys, c.alias("v"))
+        .agg(F.count(F.lit(1)).alias("c"))
+    )
+    w = (
+        Window.partitionBy(*keys)
+        .orderBy(F.col("v").asc())
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    cum = src.select(
+        *keys, "v", "c",
+        F.coalesce(F.sum("c").over(w), F.lit(0)).alias("__m"),
+    )
+    num = F.sum(
+        F.col("v")
+        * (F.col("c") * F.col("__m") + F.col("c") * (F.col("c") + 1) / 2.0)
+    )
+    n = F.sum("c")
+    tot = F.sum(F.col("v") * F.col("c"))
+    return cum.groupBy(*keys).agg(
+        (F.lit(2.0) * num / (n * tot) - (n + F.lit(1.0)) / n).alias("gini"),
+        n.cast("bigint").alias("n"),
+    )
+
+
+def gini_coeff(df: DataFrame, column: str) -> DataFrame:
     """Gini coefficient, scale-safe.
 
     Reference: ``gini_coeffs`` (gofast/stats/descriptive.py:51) sorts the
     raw array.  A raw-table global sort is a single-partition window at
     100 TB, so instead the data is first reduced to **distinct values with
-    counts and sums** (one hash aggregation), and the sorted-rank identity
+    counts** (one hash aggregation), and the sorted-rank identity
     is evaluated on that reduced set: for a distinct value v with count c
     and m values before it, the ranks m+1..m+c contribute
     ``v * (c*m + c*(c+1)/2)`` to ``sum(i * x_i)``.  The remaining ordered
-    window runs over distinct values only.
-
-    ``approx_buckets=B`` first quantizes values into B equal-width buckets
-    (bucket mean substitutes for the value) — bounds the distinct set for
-    pathological all-unique columns at a documented approximation.
+    window runs over distinct values only.  Returns one row ``(gini)``.
     """
-    c = F.col(column)
-    src = df.where(c.isNotNull()).select(c.alias("v"))
-    if approx_buckets:
-        lo, hi = src.agg(F.min("v"), F.max("v")).first()
-        width = ((hi - lo) or 1.0) / approx_buckets
-        b = F.least(
-            F.floor((F.col("v") - F.lit(lo)) / F.lit(width)),
-            F.lit(approx_buckets - 1),
-        )
-        src = src.groupBy(b.alias("__b")).agg(
-            F.avg("v").alias("v"), F.count(F.lit(1)).alias("c"), F.sum("v").alias("s")
-        )
-    else:
-        src = src.groupBy("v").agg(
-            F.count(F.lit(1)).alias("c"), F.sum("v").alias("s")
-        )
-    w = (
-        Window.orderBy(F.col("v").asc())
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    cum = src.select(
-        "v",
-        "c",
-        "s",
-        F.coalesce(F.sum("c").over(w), F.lit(0)).alias("__m"),
-    )
-    num = F.sum(
-        F.col("v") * (F.col("c") * F.col("__m") + F.col("c") * (F.col("c") + 1) / 2.0)
-    )
-    n = F.sum("c")
-    tot = F.sum(F.col("v") * F.col("c"))
-    return cum.agg(
-        (F.lit(2.0) * num / (n * tot) - (n + F.lit(1.0)) / n).alias("gini")
-    )
+    return _gini(df, column, []).select("gini")
 
 
 def gini_coeff_grouped(
@@ -161,37 +155,8 @@ def gini_coeff_grouped(
     The reduction is per (group, distinct value): the ordered window
     runs over each group's distinct values only, never the raw rows.
     Returns ``(group, gini, n)`` ordered by group."""
-    c = F.col(column)
-    src = (
-        df.where(c.isNotNull() & F.col(group_col).isNotNull())
-        .groupBy(F.col(group_col).alias("g"), c.alias("v"))
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    w = (
-        Window.partitionBy("g")
-        .orderBy(F.col("v").asc())
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    cum = src.select(
-        "g", "v", "c",
-        F.coalesce(F.sum("c").over(w), F.lit(0)).alias("__m"),
-    )
-    num = F.sum(
-        F.col("v")
-        * (F.col("c") * F.col("__m") + F.col("c") * (F.col("c") + 1) / 2.0)
-    )
-    n = F.sum("c")
-    tot = F.sum(F.col("v") * F.col("c"))
-    return (
-        cum.groupBy(F.col("g").alias("group"))
-        .agg(
-            (F.lit(2.0) * num / (n * tot) - (n + F.lit(1.0)) / n).alias(
-                "gini"
-            ),
-            n.cast("bigint").alias("n"),
-        )
-        .orderBy("group")
-    )
+    df = df.withColumn("group", F.col(group_col))
+    return _gini(df, column, ["group"]).orderBy("group")
 
 
 def weighted_median(df: DataFrame, value_col: str, weight_col: str) -> DataFrame:

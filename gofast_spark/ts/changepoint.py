@@ -80,6 +80,79 @@ def best_changepoint(
     return cand.agg(F.max_by(row, ordkey).alias("b")).select("b.*")
 
 
+def _cusum(
+    df: DataFrame,
+    order_col: str,
+    value_col: str,
+    keys: list[str],
+    *,
+    k: float,
+    h: "float | None",
+    target: "float | None" = None,
+) -> DataFrame:
+    """Tabular CUSUM of each group of ``keys`` (the whole frame when there
+    are none): ``(keys, order, value, cusum_pos, cusum_neg[, alarm_pos,
+    alarm_neg])``."""
+    v_u = F.floor(
+        F.col(value_col).cast("double") * F.lit(1e4) + F.lit(0.5)
+    ).cast("bigint")
+    k_u = int(round(k * 1e4))
+    base = df.select(*keys, F.col(order_col).alias("__o"), v_u.alias("__v"))
+    if target is None:
+        tot = F.broadcast(base.groupBy(*keys).agg(
+            F.sum("__v").alias("__s"), F.count(F.lit(1)).alias("__n")
+        ))
+        st = base.join(tot, keys) if keys else base.crossJoin(tot)
+        dev_p = (
+            F.col("__n") * F.col("__v")
+            - F.col("__s")
+            - F.col("__n") * F.lit(k_u)
+        )
+        dev_n = (
+            F.col("__s")
+            - F.col("__n") * F.col("__v")
+            - F.col("__n") * F.lit(k_u)
+        )
+        scale = F.col("__n").cast("double") * F.lit(1e4)
+    else:
+        t_u = int(round(target * 1e4))
+        st = base
+        dev_p = F.col("__v") - F.lit(t_u) - F.lit(k_u)
+        dev_n = F.lit(t_u) - F.col("__v") - F.lit(k_u)
+        scale = F.lit(1e4)
+    w = Window.partitionBy(*keys).orderBy("__o").rowsBetween(
+        Window.unboundedPreceding, 0
+    )
+    st = st.select(
+        "*",
+        F.sum(dev_p).over(w).alias("__pp"),
+        F.sum(dev_n).over(w).alias("__pn"),
+    )
+    st = st.select(
+        "*",
+        F.least(F.lit(0).cast("bigint"), F.min("__pp").over(w)).alias("__mp"),
+        F.least(F.lit(0).cast("bigint"), F.min("__pn").over(w)).alias("__mn"),
+    )
+    cp = (F.col("__pp") - F.col("__mp")).cast("double") / scale
+    cn = (F.col("__pn") - F.col("__mn")).cast("double") / scale
+    cols = [
+        *keys,
+        F.col("__o").alias(order_col),
+        (F.col("__v").cast("double") / F.lit(1e4)).alias(value_col),
+        cp.alias("cusum_pos"),
+        cn.alias("cusum_neg"),
+    ]
+    if h is not None:
+        h_u = int(round(h * 1e4))
+        if target is None:
+            thr = (F.col("__n") * F.lit(h_u)).cast("bigint")
+        else:
+            thr = F.lit(h_u).cast("bigint")
+        cols.append(((F.col("__pp") - F.col("__mp")) > thr).alias("alarm_pos"))
+        cols.append(((F.col("__pn") - F.col("__mn")) > thr).alias("alarm_neg"))
+    return st.select(*cols)
+
+
 def cusum(
     df: DataFrame,
     order_col: str,
@@ -112,61 +185,7 @@ def cusum(
     Returns per input row: ``(order, value, cusum_pos, cusum_neg``,
     plus ``alarm_pos / alarm_neg`` when ``h`` is given``)``.
     """
-    v_u = F.floor(
-        F.col(value_col).cast("double") * F.lit(1e4) + F.lit(0.5)
-    ).cast("bigint")
-    k_u = int(round(k * 1e4))
-    base = df.select(F.col(order_col).alias("__o"), v_u.alias("__v"))
-    if target is None:
-        tot = base.agg(
-            F.sum("__v").alias("__s"), F.count(F.lit(1)).alias("__n")
-        )
-        st = base.crossJoin(F.broadcast(tot))
-        dev_p = (
-            F.col("__n") * F.col("__v")
-            - F.col("__s")
-            - F.col("__n") * F.lit(k_u)
-        )
-        dev_n = (
-            F.col("__s")
-            - F.col("__n") * F.col("__v")
-            - F.col("__n") * F.lit(k_u)
-        )
-        scale = F.col("__n").cast("double") * F.lit(1e4)
-    else:
-        t_u = int(round(target * 1e4))
-        st = base
-        dev_p = F.col("__v") - F.lit(t_u) - F.lit(k_u)
-        dev_n = F.lit(t_u) - F.col("__v") - F.lit(k_u)
-        scale = F.lit(1e4)
-    w = Window.orderBy("__o").rowsBetween(Window.unboundedPreceding, 0)
-    st = st.select(
-        "*",
-        F.sum(dev_p).over(w).alias("__pp"),
-        F.sum(dev_n).over(w).alias("__pn"),
-    )
-    st = st.select(
-        "*",
-        F.least(F.lit(0).cast("bigint"), F.min("__pp").over(w)).alias("__mp"),
-        F.least(F.lit(0).cast("bigint"), F.min("__pn").over(w)).alias("__mn"),
-    )
-    cp = (F.col("__pp") - F.col("__mp")).cast("double") / scale
-    cn = (F.col("__pn") - F.col("__mn")).cast("double") / scale
-    cols = [
-        F.col("__o").alias(order_col),
-        (F.col("__v").cast("double") / F.lit(1e4)).alias(value_col),
-        cp.alias("cusum_pos"),
-        cn.alias("cusum_neg"),
-    ]
-    if h is not None:
-        h_u = int(round(h * 1e4))
-        if target is None:
-            thr = (F.col("__n") * F.lit(h_u)).cast("bigint")
-        else:
-            thr = F.lit(h_u).cast("bigint")
-        cols.append(((F.col("__pp") - F.col("__mp")) > thr).alias("alarm_pos"))
-        cols.append(((F.col("__pn") - F.col("__mn")) > thr).alias("alarm_neg"))
-    return st.select(*cols)
+    return _cusum(df, order_col, value_col, [], k=k, h=h, target=target)
 
 
 def chow_test(
@@ -411,58 +430,8 @@ def cusum_grouped(
     group-totals join is a groups-sized broadcast.  Returns per row:
     ``(group, order, value, cusum_pos, cusum_neg[, alarm_pos,
     alarm_neg])``."""
-    v_u = F.floor(
-        F.col(value_col).cast("double") * F.lit(1e4) + F.lit(0.5)
-    ).cast("bigint")
-    k_u = int(round(k * 1e4))
-    base = df.select(
-        F.col(group_col).alias("__g"),
-        F.col(order_col).alias("__o"),
-        v_u.alias("__v"),
-    )
-    tot = base.groupBy("__g").agg(
-        F.sum("__v").alias("__s"), F.count(F.lit(1)).alias("__n")
-    )
-    st = base.join(F.broadcast(tot), "__g")
-    dev_p = (
-        F.col("__n") * F.col("__v")
-        - F.col("__s")
-        - F.col("__n") * F.lit(k_u)
-    )
-    dev_n = (
-        F.col("__s")
-        - F.col("__n") * F.col("__v")
-        - F.col("__n") * F.lit(k_u)
-    )
-    scale = F.col("__n").cast("double") * F.lit(1e4)
-    w = Window.partitionBy("__g").orderBy("__o").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    st = st.select(
-        "*",
-        F.sum(dev_p).over(w).alias("__pp"),
-        F.sum(dev_n).over(w).alias("__pn"),
-    )
-    st = st.select(
-        "*",
-        F.least(F.lit(0).cast("bigint"), F.min("__pp").over(w)).alias("__mp"),
-        F.least(F.lit(0).cast("bigint"), F.min("__pn").over(w)).alias("__mn"),
-    )
-    cp = (F.col("__pp") - F.col("__mp")).cast("double") / scale
-    cn = (F.col("__pn") - F.col("__mn")).cast("double") / scale
-    cols = [
-        F.col("__g").alias("group"),
-        F.col("__o").alias(order_col),
-        (F.col("__v").cast("double") / F.lit(1e4)).alias(value_col),
-        cp.alias("cusum_pos"),
-        cn.alias("cusum_neg"),
-    ]
-    if h is not None:
-        h_u = int(round(h * 1e4))
-        thr = (F.col("__n") * F.lit(h_u)).cast("bigint")
-        cols.append(((F.col("__pp") - F.col("__mp")) > thr).alias("alarm_pos"))
-        cols.append(((F.col("__pn") - F.col("__mn")) > thr).alias("alarm_neg"))
-    return st.select(*cols)
+    df = df.withColumn("group", F.col(group_col))
+    return _cusum(df, order_col, value_col, ["group"], k=k, h=h)
 
 
 def bernoulli_cusum(

@@ -36,6 +36,25 @@ def sf_empty(tmp_path_factory, sf_small):
         "linkage_matrix_nation",
         "dca_segment_status_orders",
         "dataset_card_documents",
+        "kaplan_meier_events",
+        "nelson_aalen_events",
+        "logrank_test_events",
+        "gehan_wilcoxon_events",
+        "weibull_fit_events",
+        "rmst_events",
+        "aalen_johansen_events",
+        "weibull_by_segment_events",
+        "rmst_by_segment_events",
+        "km_median_by_segment_events",
+        "cox_ph_events",
+        "cox_ph_by_segment_events",
+        "cusum_daily_events",
+        "cusum_by_type_events",
+        "stream_cusum_daily_events",
+        "gini_acctbal",
+        "gini_by_segment_customer",
+        "boosted_stumps_orders",
+        "boosted_stumps_2f_orders",
     ],
 )
 def test_empty_tables_match_oracle(spark, sf_empty, name):
